@@ -40,6 +40,9 @@ from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
 _Q = 1048576.0  # 2^20: component quantization for exact int64 sums
+# the projection every codebook consumer collects (and embedding.pq
+# output='codebooks' registers in ctx.memo)
+_CODEBOOK_COLS = ("subspace", "code", "centroid")
 
 
 def _infer_dim(df: DataFrame, id_column: str, column: str, op: str) -> int:
@@ -150,25 +153,12 @@ def embedding_kmeans(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
         raise ConfigError("embedding.kmeans: output must be assign|centroids")
     out_col = config.get("output_column", "cluster")
 
-    vec = F.col(column)
-    dim = config.get("dim")
-    if dim is None:
-        dim = _infer_dim(df, id_column, column, "embedding.kmeans")
-    dim = int(dim)
-
-    clean = df.filter(vec_ok(vec, dim)).select(
-        F.col(id_column).alias("__kid"), vec.alias("__v"))
-    # Training input persisted (r13 optimization, the MLlib KMeans
-    # contract "cache your input"): the init TakeOrdered plus every
-    # Lloyd stats pass re-scanned the source otherwise — iterations+1
-    # full input reads collapsed to one. MEMORY_AND_DISK (spills, no
-    # OOM risk); evictable, and the deployment recipe trains on a
-    # sample so the cached working set is sample-sized. CacheManager
-    # dedupes identical plans, so the assign+centroids double-call
-    # pattern (q163) shares one materialization across both op calls.
-    clean = ctx.persist(clean)
-
-    init = _init_vectors(ctx, df, clean, k, id_column, column, dim)
+    # one persisted training frame per (input, projection, dim) per
+    # build: the assign+centroids double call and a PQ training over
+    # the same input (q163) share it, and its init collect, via ctx.memo
+    clean, dim = _clean(ctx, df, id_column, column, config.get("dim"),
+                        "embedding.kmeans")
+    init = _first_k(ctx, clean, k)
     if len(init) < k:
         raise ConfigError(
             f"embedding.kmeans: k={k} but only {len(init)} usable vectors"
@@ -224,12 +214,10 @@ def embedding_kmeans(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
             [(j, centroids[j], sizes[j]) for j in range(k)],
             f"{out_col} INT, centroid ARRAY<DOUBLE>, size LONG",
         )
-        # ride the driver-side values along so a same-build consumer
-        # (_parse_centroids via _collect_once) skips the round-trip
-        out._conveyor_local_rows = [
-            {out_col: j, "centroid": centroids[j], "size": sizes[j]}
-            for j in range(k)
-        ]
+        # register the driver-side values as this frame's collect, so
+        # a same-build consumer (_parse_centroids) skips the round-trip
+        ctx.memo(("rows", out, (out_col, "centroid")), lambda: [
+            {out_col: j, "centroid": centroids[j]} for j in range(k)])
         return out
     result = assigned.select("__kid", F.col("__c").alias(out_col))
     return df.join(
@@ -270,23 +258,14 @@ def _argmin_code_sql(vec_sql: str, s: int, sd: int,
 
 
 def _train_pq(ctx, clean: DataFrame, dim: int, m: int, k: int, iterations: int,
-              op: str = "embedding.pq", init_anchor=None):
+              op: str = "embedding.pq"):
     """Shared PQ trainer: per-subspace Lloyd's with the module's
     determinism recipe, ALL subspaces advanced in one distributed
-    pass per iteration. Returns (codebooks[m][k][sd], final assigned
-    DataFrame with __c0.._c{m-1} columns from the post-update
-    encode pass)."""
+    pass per iteration. ``clean`` is _clean's training frame. Returns
+    (codebooks[m][k][sd], final assigned DataFrame with
+    __c0.._c{m-1} columns from the post-update encode pass)."""
     sd = dim // m
-    # embedding.kmeans's persist rationale, verbatim: init + one
-    # stats pass per iteration re-scan `clean` otherwise
-    clean = ctx.persist(clean)
-    if init_anchor is not None:
-        # share the first-k init collect with the composition's other
-        # trainings (see _init_vectors; q163/q164/q165)
-        src, idc, col = init_anchor
-        init = _init_vectors(ctx, src, clean, k, idc, col, dim)
-    else:
-        init = clean.orderBy("__kid").limit(k).select("__v").collect()
+    init = _first_k(ctx, clean, k)
     if len(init) < k:
         raise ConfigError(
             f"{op}: {k} codewords per subspace but only "
@@ -413,8 +392,25 @@ def gemm_encode_codes(df: DataFrame, id_col: str, vec_col: str,
         encode, schema=f"{out_id} {idt}, {out_code} array<int>")
 
 
+def _no_arrow_return(dt) -> bool:
+    """True for a type mapInPandas cannot return: a year-month or
+    calendar interval, at any nesting depth (Spark raises "Invalid
+    return type in mapInPandas" for those; day-time intervals pass)."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, (T.YearMonthIntervalType, T.CalendarIntervalType)):
+        return True
+    if isinstance(dt, T.ArrayType):
+        return _no_arrow_return(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _no_arrow_return(dt.keyType) or _no_arrow_return(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return any(_no_arrow_return(f.dataType) for f in dt.fields)
+    return False
+
+
 def gemm_encode_column(df: DataFrame, column: str, out_col: str,
-                       codebooks: list, m: int, sd: int) -> DataFrame:
+                       codebooks: list, m: int, sd: int, op: str) -> DataFrame:
     """Whole-row variant of gemm_encode_codes: append ``out_col``
     (array<int> PQ code, NULL where the row fails vec_ok) to EVERY
     input row in one Arrow pass — no id join-back, so encoding a
@@ -426,11 +422,19 @@ def gemm_encode_column(df: DataFrame, column: str, out_col: str,
     the JVM fold's IEEE order, first-occurrence argmin = the
     ties-to-lowest array_position rule). Cost note: all columns ride
     the Arrow batches (same class as the fold path streaming all
-    columns through the projection — neither shuffles)."""
+    columns through the projection — neither shuffles), so a column
+    Arrow cannot return is a ConfigError here, not a Spark error."""
     import numpy as np
 
     from pyspark.sql import types as T
 
+    for f in df.schema.fields:
+        if f.name != out_col and _no_arrow_return(f.dataType):
+            raise ConfigError(
+                f"{op}: column {f.name!r} ({f.dataType.simpleString()}) "
+                "cannot pass through the encode_method='gemm' Arrow pass; "
+                "use encode_method='fold'"
+            )
     dim = m * sd
     cb = [np.asarray([[float(x) for x in cw] for cw in codebooks[s]],
                      dtype=np.float64) for s in range(m)]
@@ -482,66 +486,54 @@ def gemm_encode_column(df: DataFrame, column: str, out_col: str,
     return df.mapInPandas(encode, schema=out_schema)
 
 
-def _init_vectors(ctx, df: DataFrame, clean: DataFrame, k: int,
-                  id_column: str, column: str, dim: int) -> list:
-    """First-k-by-id init rows, collected once per (input frame,
-    projection) PER QUERY BUILD: the IVFPQ compositions run two or
-    three trainings over the same input (q163: kmeans assign +
-    exported centroids + PQ; q164/q165: kmeans + PQ) and each init
-    was its own ~0.4 s driver job on an identical plan. Anchored on
-    the per-build OpContext — it dies with the build, so a bench
-    repeat collects fresh (no cross-run caching; the input-frame
-    object itself is NOT a safe anchor because load_table memoizes
-    frames across runs). The frame is kept in the value to guard
-    against id() reuse."""
-    cache = getattr(ctx, "_init_cache", None)
-    if cache is None:
-        cache = {}
-        try:
-            ctx._init_cache = cache
-        except AttributeError:
-            return clean.orderBy("__kid").limit(k).select("__v").collect()
-    key = (id(df), id_column, column, int(dim), int(k))
-    hit = cache.get(key)
-    if hit is not None and hit[0] is df:
-        return hit[1]
-    rows = clean.orderBy("__kid").limit(k).select("__v").collect()
-    cache[key] = (df, rows)
-    return rows
+def _clean(ctx: OpContext, df: DataFrame, id_column: str, column: str,
+           dim: int | None, op: str) -> tuple[DataFrame, int]:
+    """The trainers' input: (__kid, __v) rows of ``df`` passing vec_ok
+    at ``dim`` (inferred when None), and that dim. Persisted (the
+    MLlib KMeans contract "cache your input": the init collect plus
+    every Lloyd stats pass re-scanned the source otherwise —
+    iterations+1 full reads collapsed to one; MEMORY_AND_DISK, no OOM
+    risk, evictable) and memoized per build on (frame, projection,
+    dim), so the IVFPQ compositions' two or three trainings over one
+    input (q163: kmeans assign + exported centroids + PQ; q164/q165:
+    kmeans + PQ) share ONE persisted frame and one init collect."""
+    if dim is None:
+        dim = _infer_dim(df, id_column, column, op)
+    dim = int(dim)
+    vec = F.col(column)
+    clean = ctx.memo(
+        ("clean", df, id_column, column, dim),
+        lambda: ctx.persist(df.filter(vec_ok(vec, dim)).select(
+            F.col(id_column).alias("__kid"), vec.alias("__v"))),
+    )
+    return clean, dim
 
 
-def _collect_once(df: DataFrame, cols: tuple[str, ...]) -> list:
-    """collect() a projection once per DataFrame OBJECT (r14): the
-    deployment compositions hand the SAME centroids/codebooks frame
-    to two ops (assign_cells + knn.ivfpq probe; pq_encode + probe)
-    and each parse paid a full collect job round-trip (~0.4 s of the
-    q164/q165 build phase, measured). Keyed on the projection so a
-    different cell_col misses. Scoped to the object's lifetime — a
-    fresh query build collects fresh (no cross-run reuse), and
-    DataFrames are immutable so the rows cannot go stale."""
-    local = getattr(df, "_conveyor_local_rows", None)
-    if local is not None:
-        # the frame was createDataFrame'd from these driver rows a
-        # moment ago (kmeans centroids / pq codebooks output) —
-        # collecting 16 rows back out of the JVM costs a full ~0.4 s
-        # job round-trip for values the build already holds
-        try:
-            return [{c: r[c] for c in cols} for r in local]
-        except (KeyError, TypeError):
-            pass  # projection not covered: fall through to collect
-    cache = getattr(df, "_conveyor_collect_cache", None)
-    if cache is None:
-        cache = {}
-        try:
-            df._conveyor_collect_cache = cache
-        except AttributeError:  # exotic DataFrame proxy: just collect
-            return df.select(*cols).collect()
-    if cols not in cache:
-        cache[cols] = df.select(*cols).collect()
-    return cache[cols]
+def _first_k(ctx: OpContext, clean: DataFrame, k: int) -> list:
+    """First-k-by-id init rows of a _clean frame, one ~0.4 s collect
+    job per (frame, k) per build — keyed on the frame the rows come
+    from, so a different input, projection or dim misses."""
+    return ctx.memo(
+        ("first_k", clean, k),
+        lambda: clean.orderBy("__kid").limit(k).select("__v").collect(),
+    )
 
 
-def _parse_codebooks(codebook_df: DataFrame, op: str, config: dict):
+def _collect_once(ctx: OpContext, df: DataFrame,
+                  cols: tuple[str, ...]) -> list:
+    """collect() a projection once per (frame, projection) per build:
+    the deployment compositions hand the SAME centroids/codebooks
+    frame to two ops (assign_cells + knn.ivfpq probe; pq_encode +
+    probe), and each parse paid a ~0.4 s collect job. The kmeans
+    centroids / pq codebooks producers register their driver-side
+    rows under the same key, so a same-build consumer skips even the
+    first collect."""
+    return ctx.memo(("rows", df, cols),
+                    lambda: df.select(*cols).collect())
+
+
+def _parse_codebooks(ctx: OpContext, codebook_df: DataFrame, op: str,
+                     config: dict):
     """Load + validate an embedding.pq output='codebooks' table into
     the in-memory [m][k][sd] structure. Derived m/codewords/dim WIN —
     but an explicitly-configured conflicting value is an error, not a
@@ -554,7 +546,7 @@ def _parse_codebooks(codebook_df: DataFrame, op: str, config: dict):
                 f"{op}: codebooks input has no column {c!r} "
                 "(expect embedding.pq output='codebooks')"
             )
-    rows = _collect_once(codebook_df, ("subspace", "code", "centroid"))
+    rows = _collect_once(ctx, codebook_df, _CODEBOOK_COLS)
     if not rows:
         raise ConfigError(f"{op}: codebooks input is empty")
     if any(r["centroid"] is None for r in rows):
@@ -586,17 +578,6 @@ def _parse_codebooks(codebook_df: DataFrame, op: str, config: dict):
             f"{op}: codebooks input is missing entries {missing[:4]}"
         )
     return codebooks, m, kw, sd, dim
-
-
-def _pq_clean(df: DataFrame, id_column: str, column: str, dim: int | None,
-              op: str = "embedding.pq"):
-    vec = F.col(column)
-    if dim is None:
-        dim = _infer_dim(df, id_column, column, op)
-    dim = int(dim)
-    clean = df.filter(vec_ok(vec, dim)).select(
-        F.col(id_column).alias("__kid"), vec.alias("__v"))
-    return clean, dim
 
 
 @register(
@@ -666,13 +647,13 @@ def embedding_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
             "emitted); remove the key or set output='codes'"
         )
 
-    clean, dim = _pq_clean(df, id_column, column, config.get("dim"))
+    clean, dim = _clean(ctx, df, id_column, column, config.get("dim"),
+                        "embedding.pq")
     if dim % m != 0:
         raise ConfigError(
             f"embedding.pq: dim {dim} not divisible by m={m}"
         )
-    codebooks, encoded = _train_pq(ctx, clean, dim, m, k, iterations,
-                                   init_anchor=(df, id_column, column))
+    codebooks, encoded = _train_pq(ctx, clean, dim, m, k, iterations)
 
     if output == "codebooks":
         rows = [
@@ -683,10 +664,8 @@ def embedding_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
             rows, "subspace INT, code INT, centroid ARRAY<DOUBLE>"
         )
         # same-build consumers skip the collect (see _collect_once)
-        out._conveyor_local_rows = [
-            {"subspace": s, "code": j, "centroid": cb}
-            for s, j, cb in rows
-        ]
+        ctx.memo(("rows", out, _CODEBOOK_COLS), lambda: [
+            dict(zip(_CODEBOOK_COLS, r)) for r in rows])
         return out
     if encode_method == "gemm":
         # the final encode pass under the POST-loop codebooks, as an
@@ -759,11 +738,12 @@ def embedding_pq_encode(ctx: OpContext, inputs: list[DataFrame], config: dict[st
             raise ConfigError(f"embedding.pq_encode: no column {c!r}")
     out_col = config.get("output_column", "pq_code")
     codebooks, m, kw, sd, dim = _parse_codebooks(
-        codebook_df, "embedding.pq_encode", config
+        ctx, codebook_df, "embedding.pq_encode", config
     )
 
     if check_encode_method(config, "embedding.pq_encode") == "gemm":
-        return gemm_encode_column(df, column, out_col, codebooks, m, sd)
+        return gemm_encode_column(df, column, out_col, codebooks, m, sd,
+                                  "embedding.pq_encode")
 
     vec = F.col(column)
     ok = vec_ok(vec, dim)
@@ -883,22 +863,20 @@ def knn_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> D
 
     if code_column is not None:
         codebooks, m, kw, sd, dim = _parse_codebooks(
-            codebook_df, "knn.pq", config
+            ctx, codebook_df, "knn.pq", config
         )
         codes = corpus.filter(_valid_codes(code_column, m, kw)).select(
             F.col(id_column).alias("__kid"),
             F.posexplode(code_column).alias("__s", "__code"),
         )
     else:
-        clean, dim = _pq_clean(corpus, id_column, column,
-                               config.get("dim"), op="knn.pq")
+        clean, dim = _clean(ctx, corpus, id_column, column,
+                            config.get("dim"), "knn.pq")
         if dim % m != 0:
             raise ConfigError(f"knn.pq: dim {dim} not divisible by m={m}")
         sd = dim // m
         codebooks, encoded = _train_pq(ctx, clean, dim, m, kw, iterations,
-                                       op="knn.pq",
-                                       init_anchor=(corpus, id_column,
-                                                    column))
+                                       op="knn.pq")
         # corpus side: skinny (id, subspace, code) triples
         codes = encoded.select(
             "__kid",
@@ -984,8 +962,8 @@ def _adc_topk(pair_sub: DataFrame, qid_col: str, id_column: str,
 
 
 
-def _parse_centroids(centroid_df: DataFrame, op: str, cell_col: str,
-                     dim: int | None = None
+def _parse_centroids(ctx: OpContext, centroid_df: DataFrame, op: str,
+                     cell_col: str, dim: int | None = None
                      ) -> tuple[list[list[float]], int]:
     """Load + validate an embedding.kmeans output='centroids' table
     into a driver-side list indexed by cell id. Cells must be a
@@ -1002,7 +980,7 @@ def _parse_centroids(centroid_df: DataFrame, op: str, cell_col: str,
                 f"{op}: centroids input has no column {c!r} "
                 "(expect embedding.kmeans output='centroids')"
             )
-    rows = _collect_once(centroid_df, (cell_col, "centroid"))
+    rows = _collect_once(ctx, centroid_df, (cell_col, "centroid"))
     if not rows:
         raise ConfigError(f"{op}: centroids input is empty")
     if any(r[cell_col] is None or r["centroid"] is None for r in rows):
@@ -1142,10 +1120,10 @@ def knn_ivfpq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
         )
 
     codebooks, m, kw, sd, dim = _parse_codebooks(
-        codebook_df, "knn.ivfpq", config
+        ctx, codebook_df, "knn.ivfpq", config
     )
     centroids, _ = _parse_centroids(
-        centroid_df, "knn.ivfpq",
+        ctx, centroid_df, "knn.ivfpq",
         config.get("centroid_cell_column", "cluster"), dim,
     )
 
@@ -1278,7 +1256,7 @@ def embedding_assign_cells(ctx: OpContext, inputs: list[DataFrame], config: dict
     # dim comes from the centroid table — the quantizer defines the
     # space; a corpus row of any other length is simply invalid
     centroids, dim = _parse_centroids(
-        centroid_df, "embedding.assign_cells",
+        ctx, centroid_df, "embedding.assign_cells",
         config.get("centroid_cell_column", "cluster"),
     )
 
@@ -1292,7 +1270,8 @@ def embedding_assign_cells(ctx: OpContext, inputs: list[DataFrame], config: dict
                 "embedding.assign_cells: input column '__acell' "
                 "collides with the internal code projection; rename it"
             )
-        coded = gemm_encode_column(df, column, tmp, [centroids], 1, dim)
+        coded = gemm_encode_column(df, column, tmp, [centroids], 1, dim,
+                                   "embedding.assign_cells")
         cols = [F.element_at(tmp, 1).alias(out_col) if c == out_col
                 else F.col(c) for c in df.columns]
         if out_col not in df.columns:

@@ -366,7 +366,7 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
     and the vector-carrying exact stage shrinks from |candidates| to
     |queries| * rerank rows. Returns the surviving skinny pairs."""
     from conveyor_spark.datapipe.clustering import (
-        _argmin_code_sql, _parse_codebooks, _pq_clean, _train_pq, vec_ok,
+        _argmin_code_sql, _clean, _parse_codebooks, _train_pq, vec_ok,
     )
 
     m = int(config.get("m", 4))
@@ -392,7 +392,7 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
                     "remove the key"
                 )
         codebooks, m, kw, sd, cb_dim = _parse_codebooks(
-            codebook_df, "knn.lsh", config
+            ctx, codebook_df, "knn.lsh", config
         )
         if cb_dim != dim:
             raise ConfigError(
@@ -416,11 +416,9 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
         if dim % m != 0:
             raise ConfigError(f"knn.lsh: dim {dim} not divisible by m={m}")
         sd = dim // m
-        clean, _ = _pq_clean(corpus, id_column, column, dim, op="knn.lsh")
+        clean, _ = _clean(ctx, corpus, id_column, column, dim, "knn.lsh")
         codebooks, encoded = _train_pq(ctx, clean, dim, m, kw, iterations,
-                                       op="knn.lsh",
-                                       init_anchor=(corpus, id_column,
-                                                    column))
+                                       op="knn.lsh")
         from conveyor_spark.datapipe.clustering import check_encode_method
 
         if check_encode_method(config, "knn.lsh") == "gemm":

@@ -4593,7 +4593,7 @@ def q122_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intermediate so the first LM scores once, not once per
     # reference (r13; recompute = a full LM scoring pass, exactly
     # guide §5's persist-when-reuse-beats-recompute case)
-    t = _ctx(spark).persist(t)
+    t = ctx.persist(t)
     b = _op("text.perplexity", ctx, [t, d], column="text",
             id_column="doc_id", order=2, output_column="nll_base")
     b = _op("filter.apply", ctx, [b], expr="nll_target IS NOT NULL")

@@ -53,6 +53,11 @@ class OpContext:
     # caller re-executing a returned lazy DataFrame later still gets
     # identical results, it just recomputes.
     persisted: list = field(default_factory=list)
+    # the build-scoped memo behind ctx.memo: explicit keys (a recipe
+    # tag plus the frame objects and parameters the value derives
+    # from — DataFrames hash by identity), cleared with the persisted
+    # handles, so nothing in it is reused across builds
+    memos: dict = field(default_factory=dict)
 
     def persist(self, df: DataFrame) -> DataFrame:
         """persist() + register for post-sink release."""
@@ -60,7 +65,14 @@ class OpContext:
         self.persisted.append(out)
         return out
 
+    def memo(self, key: tuple, thunk: Callable[[], Any]) -> Any:
+        """thunk() once per key per build; later calls share the value."""
+        if key not in self.memos:
+            self.memos[key] = thunk()
+        return self.memos[key]
+
     def release_persisted(self) -> None:
+        self.memos.clear()
         while self.persisted:
             try:
                 self.persisted.pop().unpersist(False)

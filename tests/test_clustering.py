@@ -12,6 +12,25 @@ from tests.conftest import run_op
 
 Q = 1048576.0
 
+# passthrough columns both encode engines must carry unchanged (the
+# gemm engine round-trips every input column through Arrow)
+PASSTHROUGH = (
+    "map('k', vec_id) AS t_map",
+    "named_struct('a', vec_id, 'b', 'x') AS t_struct",
+    "CAST(vec_id AS DECIMAL(20, 4)) AS t_decimal",
+    "CAST('ab' AS BINARY) AS t_binary",
+    "NULL AS t_null",
+    "INTERVAL '1 02:03:04' DAY TO SECOND AS t_daytime",
+    "parse_json('{\"a\": 1}') AS t_variant",
+    "TIMESTAMP_NTZ '2020-01-01 00:00:00' AS t_ntz",
+    "array(map('k', 1)) AS t_arr_map",
+)
+
+
+def rows_as_text(df):
+    # str() per cell: VariantVal has no value equality
+    return sorted(tuple(map(str, r)) for r in df.collect())
+
 
 def py_kmeans(vecs: dict[int, list[float]], k: int, iterations: int):
     ids = sorted(vecs)
@@ -442,13 +461,13 @@ def test_pq_encode_gemm_matches_fold_with_invalid_rows(ctx, pqdf, spark):
     # non-vector columns must ride the gemm pass unchanged, and the
     # output column order must match the fold path's
     extra = df.selectExpr("vec_id", "embedding",
-                          "concat('tag', vec_id) AS tag")
+                          "concat('tag', vec_id) AS tag", *PASSTHROUGH)
     a = run_op(ctx, "embedding.pq_encode", [extra, books],
                id_column="vec_id")
     b = run_op(ctx, "embedding.pq_encode", [extra, books],
                id_column="vec_id", encode_method="gemm")
     assert a.columns == b.columns
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    assert rows_as_text(a) == rows_as_text(b)
 
 
 def test_embedding_pq_codes_gemm_matches_fold(ctx, pqdf):
@@ -602,11 +621,41 @@ def test_assign_cells_reproduces_kmeans_assign(ctx, vdf):
         k=3, iterations=3).collect()}
     cents = run_op(ctx, "embedding.kmeans", [vdf], id_column="vec_id",
                    k=3, iterations=2, output="centroids")
+    wide = vdf.selectExpr("*", *PASSTHROUGH)
+    outs = {}
     for method in ("fold", "gemm"):
-        got = {r["vec_id"]: r["cluster"] for r in run_op(
-            ctx, "embedding.assign_cells", [vdf, cents],
-            output_column="cluster", encode_method=method).collect()}
+        out = run_op(ctx, "embedding.assign_cells", [wide, cents],
+                     output_column="cluster", encode_method=method)
+        got = {r["vec_id"]: r["cluster"] for r in out.collect()}
         assert got == direct, method
+        outs[method] = (out.columns, rows_as_text(out))
+    assert outs["fold"] == outs["gemm"]
+
+
+@pytest.mark.parametrize("expr", [
+    "INTERVAL '1-2' YEAR TO MONTH",
+    "make_interval(1, 2, 0, 3, 4, 5, 6.5)",
+    "array(INTERVAL '1-2' YEAR TO MONTH)",
+])
+def test_gemm_encode_rejects_interval_passthrough(ctx, vdf, expr):
+    """mapInPandas cannot return year-month or calendar intervals: the
+    gemm engines reject such a column by name at build time, and the
+    fold engine passes it through."""
+    cents = run_op(ctx, "embedding.kmeans", [vdf], id_column="vec_id",
+                   k=2, iterations=1, output="centroids")
+    books = run_op(ctx, "embedding.pq", [vdf], id_column="vec_id",
+                   m=2, k=2, iterations=1, output="codebooks")
+    df = vdf.selectExpr("*", f"{expr} AS span")
+    for op, inputs, cfg in (
+        ("embedding.assign_cells", [df, cents], {}),
+        ("embedding.pq_encode", [df, books], {"id_column": "vec_id"}),
+    ):
+        with pytest.raises(ConfigError,
+                           match=r"column 'span'.*encode_method='fold'"):
+            run_op(ctx, op, inputs, encode_method="gemm", **cfg)
+        fold = run_op(ctx, op, inputs, encode_method="fold", **cfg)
+        assert fold.schema["span"] == df.schema["span"], op
+        assert fold.filter("span IS NOT NULL").count() == 6, op
 
 
 def test_assign_cells_dirty_vectors_null_both_engines(ctx, spark):

@@ -121,12 +121,12 @@ def test_gemm_encode_codes_bit_matches_fold(ctx, spark):
     tie matches array_position's ties-to-lowest. Checked code-by-code
     on the full table."""
     from conveyor_spark.datapipe.clustering import (
-        _pq_clean, _train_pq, gemm_encode_codes,
+        _clean, _train_pq, gemm_encode_codes,
     )
     from pyspark.sql import functions as F
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    clean, dim = _pq_clean(e, "vec_id", "embedding", 64)
+    clean, dim = _clean(ctx, e, "vec_id", "embedding", 64, "embedding.pq")
     codebooks, encoded = _train_pq(ctx, clean, 64, 4, 16, 1)
     fold = {
         r["__kid"]: tuple(r["c"])

@@ -15,7 +15,6 @@ cache cleared + RDDs unpersisted between runs). Usage:
 from __future__ import annotations
 
 import gc
-import inspect
 import os
 import sys
 import time
@@ -29,9 +28,7 @@ _orig_persist = OpContext.persist
 
 
 def _filtered_persist(self, df):
-    caller = inspect.stack()[1]
-    fn = caller.function
-    if fn in _SKIP:
+    if sys._getframe(1).f_code.co_name in _SKIP:
         return df
     return _orig_persist(self, df)
 
