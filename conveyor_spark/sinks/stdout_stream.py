@@ -13,11 +13,27 @@ from __future__ import annotations
 
 import json as _json
 import sys
+from tempfile import TemporaryDirectory
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 from conveyor_spark.registry import OpContext, P, register
+
+
+# Checkpoints of drains started with await_termination=false, held
+# until their query is seen stopped; the rest go at interpreter exit
+# (TemporaryDirectory's finalizer).
+_DETACHED: list[tuple[StreamingQuery, TemporaryDirectory]] = []
+
+
+def _hold_until_stopped(query: StreamingQuery, ckpt: TemporaryDirectory) -> None:
+    for q, d in list(_DETACHED):
+        if not q.isActive:
+            d.cleanup()
+            _DETACHED.remove((q, d))
+    _DETACHED.append((query, ckpt))
 
 
 def _fmt_row(d: dict[str, Any], fmt: str, pretty: bool) -> str:
@@ -49,44 +65,50 @@ def stdout_stream_write(ctx: OpContext, inputs: list[DataFrame], config: dict[st
     out = config.get("_out", sys.stdout)  # test hook
     if df.isStreaming:
         from conveyor_spark.streaming.ops import (
-            consume_state_partitions, resolve_state_partitions,
+            LAST_PROGRESS, checkpoint_tmpdir, consume_state_partitions,
+            drain_conf, resolve_state_partitions,
         )
 
         # a stateful upstream op may have requested its state-store
-        # count (state_partitions param); stores are sized by
-        # spark.sql.shuffle.partitions at stream START, so apply the
-        # request (env knob wins) around .start() and restore after.
-        # consume_state_partitions pops THIS stream's request (by the
-        # sink's ancestor stages under the compiler) — it must not
-        # leak into a later param-less stream of the same pipeline
+        # count (state_partitions param); stores are sized at stream
+        # START, so drain_conf applies the request (env knob wins)
+        # around .start() and restores after. consume_state_partitions
+        # pops THIS stream's request (by the sink's ancestor stages
+        # under the compiler) — it must not leak into a later
+        # param-less stream of the same pipeline
         sp = resolve_state_partitions(consume_state_partitions(ctx))
-        spark = df.sparkSession
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
+        # the drain owns this checkpoint: a fresh local temp dir,
+        # deleted once the query stops
+        ckpt = checkpoint_tmpdir("conveyor-stdout-")
         try:
-            if sp is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", str(sp))
-            query = (
-                df.writeStream.format("console")
-                .outputMode(config.get("output_mode", "append"))
-                .option("truncate", False)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        if config.get("await_termination", True):
+            with drain_conf(df.sparkSession, sp, owned_checkpoint=True):
+                query = (
+                    df.writeStream.format("console")
+                    .outputMode(config.get("output_mode", "append"))
+                    .option("truncate", False)
+                    .option("checkpointLocation", ckpt.name)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+        except BaseException:
+            ckpt.cleanup()
+            raise
+        if not config.get("await_termination", True):
+            _hold_until_stopped(query, ckpt)
+            return None
+        try:
             query.awaitTermination()
-            from conveyor_spark.streaming.ops import LAST_PROGRESS
-
-            # same observability hook run_available_now keeps: the
-            # final progress carries stateOperators (rows/memory/
-            # numShufflePartitions) for probes and tests; the
-            # stage-qualified key keeps MULTI-sink pipelines readable
-            # (the bare key records the last drain only)
-            prog = query.lastProgress or {}
-            LAST_PROGRESS["stdout_stream.write"] = prog
-            if ctx.stage_id:
-                LAST_PROGRESS[f"stdout_stream.write:{ctx.stage_id}"] = prog
+        finally:
+            ckpt.cleanup()
+        # same observability hook run_available_now keeps: the
+        # final progress carries stateOperators (rows/memory/
+        # numShufflePartitions) for probes and tests; the
+        # stage-qualified key keeps MULTI-sink pipelines readable
+        # (the bare key records the last drain only)
+        prog = query.lastProgress or {}
+        LAST_PROGRESS["stdout_stream.write"] = prog
+        if ctx.stage_id:
+            LAST_PROGRESS[f"stdout_stream.write:{ctx.stage_id}"] = prog
         return None
     for row in df.toLocalIterator():
         out.write(_fmt_row(row.asDict(recursive=True), fmt, pretty) + "\n")

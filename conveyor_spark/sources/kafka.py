@@ -129,18 +129,17 @@ def kafka_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
         if not checkpoint:
             raise ConfigError("streaming kafka.write requires 'checkpoint_location'")
         from conveyor_spark.streaming.ops import (
-            consume_state_partitions, resolve_state_partitions,
+            consume_state_partitions, resolve_state_partitions, session_conf,
         )
 
         # honor an upstream stateful op's state_partitions request,
         # exactly like the stdout_stream drain — state stores are
-        # sized by spark.sql.shuffle.partitions at stream START
+        # sized by spark.sql.shuffle.partitions at stream START. The
+        # checkpoint is the caller's durable one, so the stream keeps
+        # Spark's default checkpoint manager and retention.
         sp = resolve_state_partitions(consume_state_partitions(ctx))
-        spark = df.sparkSession
-        old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            if sp is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", str(sp))
+        conf = {} if sp is None else {"spark.sql.shuffle.partitions": str(sp)}
+        with session_conf(df.sparkSession, conf):
             query = (
                 df.writeStream.format("kafka")
                 .option("kafka.bootstrap.servers", brokers)
@@ -148,8 +147,6 @@ def kafka_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
                 .option("checkpointLocation", checkpoint)
                 .start()
             )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         # Block until the stream ends (default): otherwise the driver
         # can exit before any micro-batch commits and nothing is
         # produced. await_termination=false opts out and returns the

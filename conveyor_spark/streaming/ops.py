@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Iterator
+from contextlib import AbstractContextManager, contextmanager
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -267,29 +269,92 @@ def resolve_state_partitions(explicit: int | None) -> int | None:
     return explicit
 
 
-# the shared param metadata — every stateful streaming op offers it
-STATE_PARTITIONS_PARAM = P(
-    "state_partitions", "integer", min=1,
-    desc="State stores for this stream (spark.sql.shuffle.partitions "
-         "at stream start); size to steady-state key cardinality. "
-         "Env SPARK_GRAFT_STATE_PARTITIONS overrides.",
-)
-
-
 def checkpoint_tmpdir(prefix: str) -> tempfile.TemporaryDirectory:
     """Temp checkpoint location for drain-style (availableNow) runs.
 
-    Prefers tmpfs (/dev/shm) — microbatch latency on a local drain is
-    dominated by checkpoint fsyncs, which tmpfs makes free. Override
-    with CONVEYOR_SPARK_CKPT_DIR (e.g. point it at a durable path for
-    restartable production streams; those should pass an explicit
-    checkpointLocation anyway)."""
-    import os
+    Prefers tmpfs (/dev/shm). Override the base directory with
+    CONVEYOR_SPARK_CKPT_DIR (e.g. when /dev/shm is small); the
+    checkpoint is deleted either way, so restartable streams pass an
+    explicit checkpointLocation instead.
 
+    tmpfs does not make the commits cheap. Without libhadoop,
+    Hadoop's local filesystem spawns a ``readlink`` or ``chmod``
+    process for each file-status call and each permission set, and
+    Spark's default FileContext checkpoint manager makes many such
+    calls per rename. Measured on a 4-vCPU host: a q40 drain (two
+    micro-batches, 8 state stores) spawned 426 processes, and each
+    of its 16 state-store commits took ~120 ms on disk and ~140 ms
+    on tmpfs. ``drain_conf`` removes the rename spawns for a
+    checkpoint from here (426 -> 98 spawns; the rest are ``chmod``
+    calls made while creating files)."""
     base = os.environ.get("CONVEYOR_SPARK_CKPT_DIR")
     if base is None and os.path.isdir("/dev/shm"):
         base = "/dev/shm"
     return tempfile.TemporaryDirectory(prefix=prefix, dir=base)
+
+
+@contextmanager
+def session_conf(spark: SparkSession, overrides: dict[str, str]) -> Iterator[None]:
+    """Set ``overrides`` on the session for the block, then put every
+    key back as it was found: a set key gets its old value, an unset
+    key is unset again. A stream copies the session conf at
+    ``start()``, so a block around ``start()`` covers the whole
+    query and leaves later queries on the session's own values."""
+    prev = {k: spark.conf.get(k, None) for k in overrides}
+    try:
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# Bounded drains run 1-3 micro-batches; the default checkpoint
+# retention (100 batches, per-batch snapshot/maintenance work) is
+# pure overhead for them. Recovery still holds: restart needs only
+# the LAST committed batch. Measured at sf0.1: q66 2.6->2.2 s,
+# q63 1.6->1.4 s, q40 0.9->0.8 s warm. Long-running production
+# streams keep Spark's defaults.
+_DRAIN_CONF = {
+    "spark.sql.streaming.minBatchesToRetain": "2",
+    "spark.sql.streaming.stateStore.minDeltasForSnapshot": "100",
+    "spark.sql.streaming.stateStore.maintenanceInterval": "600s",
+}
+# Only for a checkpoint the drain owns (a fresh checkpoint_tmpdir that
+# only this query writes and that is deleted afterwards). Spark's
+# default FileContext manager renames with fail-if-exists, which
+# guards a checkpoint two queries share; a private temp dir gains
+# nothing from that guard, POSIX rename(2) stays atomic, and the
+# checkpoint keeps the same files (N.delta, N.delta.crc and Hadoop's
+# .crc files). The FileSystem manager renames without the
+# FileContext status calls that each spawn a process (see
+# checkpoint_tmpdir): q40's summed commitTimeMs 1971 -> 125 ms and
+# its drain 2.30 -> 1.37 s (medians of 10 pairs, 4-vCPU host).
+_OWNED_CHECKPOINT_CONF = {
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+}
+
+
+def drain_conf(
+    spark: SparkSession, state_partitions: int | None, owned_checkpoint: bool,
+) -> AbstractContextManager[None]:
+    """The session conf an availableNow drain starts under: the
+    retention settings, ``state_partitions`` state stores (None keeps
+    the session's shuffle partitions) and, when the drain owns its
+    checkpoint, the FileSystem checkpoint manager. Durable
+    checkpoints (a caller's path) keep Spark's default manager."""
+    conf = dict(_DRAIN_CONF)
+    if owned_checkpoint:
+        conf.update(_OWNED_CHECKPOINT_CONF)
+    if state_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    return session_conf(spark, conf)
 
 
 def _checkpoint_has_commits(spark: SparkSession, checkpoint: str) -> bool:
@@ -315,8 +380,6 @@ def _checkpoint_has_commits(spark: SparkSession, checkpoint: str) -> bool:
         # guard. Remote schemes (hdfs://, s3a://) CANNOT be verified
         # without the JVM FS — there the guard is best-effort only
         # (documented in run_available_now).
-        import os
-
         local = checkpoint
         if local.startswith("file://"):
             local = local[len("file://"):]
@@ -387,29 +450,12 @@ def run_available_now(
     can be probed — remote-scheme checkpoints there get best-effort
     detection only."""
     spark = sdf.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     state_partitions = resolve_state_partitions(state_partitions)
     batches: dict[int, list] = {}
 
-    # Bounded drains run 1-3 micro-batches; the default checkpoint
-    # retention (100 batches, per-batch snapshot/maintenance work) is
-    # pure overhead for them. Recovery still holds: restart needs only
-    # the LAST committed batch. Measured at sf0.1: q66 2.6->2.2 s,
-    # q63 1.6->1.4 s, q40 0.9->0.8 s warm. Restored after start —
-    # long-running production streams keep Spark's defaults.
-    _DRAIN_CONF = {
-        "spark.sql.streaming.minBatchesToRetain": "2",
-        "spark.sql.streaming.stateStore.minDeltasForSnapshot": "100",
-        "spark.sql.streaming.stateStore.maintenanceInterval": "600s",
-    }
-    old_drain = {k: spark.conf.get(k, None) for k in _DRAIN_CONF}
-
     def start(ckpt: str):
-        try:
-            for k, v in _DRAIN_CONF.items():
-                spark.conf.set(k, v)
-            if state_partitions is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        with drain_conf(spark, state_partitions,
+                        owned_checkpoint=checkpoint is None):
             w = sdf.writeStream.outputMode(output_mode)
             if checkpoint is not None:
                 def collect_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -423,14 +469,6 @@ def run_available_now(
                 .trigger(availableNow=True)
                 .start()
             )
-        finally:
-            if state_partitions is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", old)
-            for k, prev in old_drain.items():
-                if prev is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, prev)
 
     if checkpoint is not None:
         # a resumed drain that finds no new input runs ZERO micro-

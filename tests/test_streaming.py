@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -37,6 +40,161 @@ def test_stream_matches_batch_tumbling(spark, sf_dir):
     got = {(r["window_start"], r["n_events"]) for r in stream_result.select("window_start", "n_events").collect()}
     want = {(r["window_start"], r["n_events"]) for r in expected.collect()}
     assert got == want and len(got) > 0
+
+
+CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FS_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+              "FileSystemBasedCheckpointFileManager")
+FC_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+              "FileContextBasedCheckpointFileManager")
+
+
+def _keyed_count_stream(spark, tmp_path):
+    """A per-key count over two jsonl files, one micro-batch each;
+    the full drain yields u0=4, u1=3, u2=3."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(2):
+        (src / f"f{i}.jsonl").write_text("\n".join(
+            json.dumps({"k": f"u{j % 3}"}) for j in range(i * 5, i * 5 + 5)))
+    return (
+        spark.readStream.schema("k string")
+        .option("maxFilesPerTrigger", 1).json(str(src))
+        .groupBy("k").count()
+    )
+
+
+def _spy_conf_sets(spark, monkeypatch) -> list:
+    sets: list = []
+    real = spark.conf.set
+
+    def spy(key, value):
+        sets.append((key, value))
+        real(key, value)
+
+    monkeypatch.setattr(spark.conf, "set", spy)
+    return sets
+
+
+def _drain(spark, sdf, how: str):
+    if how == "run_available_now":
+        out = run_available_now(sdf, "t_owned_ckpt", state_partitions=2)
+        return sorted(map(tuple, out.collect()))
+    from conveyor_spark.registry import OpContext
+    from tests.conftest import run_op
+
+    run_op(OpContext(spark=spark), "stdout_stream.write", [sdf],
+           output_mode="complete")
+    return None
+
+
+@pytest.mark.parametrize("how", ["run_available_now", "stdout_stream.write"])
+@pytest.mark.parametrize("prior", [None, FC_MANAGER])
+def test_throwaway_drain_restores_checkpoint_manager(spark, tmp_path,
+                                                     monkeypatch, how,
+                                                     prior):
+    """A drain that owns its checkpoint starts under the FileSystem
+    checkpoint manager and leaves the session conf as it found it:
+    set stays set (to its value), unset stays unset."""
+    try:
+        if prior is not None:
+            spark.conf.set(CKPT_MANAGER, prior)
+        sets = _spy_conf_sets(spark, monkeypatch)
+        got = _drain(spark, _keyed_count_stream(spark, tmp_path), how)
+        assert (CKPT_MANAGER, FS_MANAGER) in sets
+        assert spark.conf.get(CKPT_MANAGER, None) == prior
+        if got is not None:
+            assert got == [("u0", 4), ("u1", 3), ("u2", 3)]
+    finally:
+        spark.conf.unset(CKPT_MANAGER)
+
+
+@pytest.mark.parametrize("how", ["run_available_now", "stdout_stream.write"])
+@pytest.mark.parametrize("prior", [None, FC_MANAGER])
+def test_throwaway_drain_restores_checkpoint_manager_when_start_raises(
+        spark, tmp_path, monkeypatch, how, prior):
+    """The same holds when start() raises: the manager was in place
+    when it was called, and the conf is back as found afterwards."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    seen = []
+
+    def failing_start(self, *args, **kwargs):
+        seen.append(spark.conf.get(CKPT_MANAGER, None))
+        raise RuntimeError("start failed")
+
+    try:
+        if prior is not None:
+            spark.conf.set(CKPT_MANAGER, prior)
+        sdf = _keyed_count_stream(spark, tmp_path)
+        monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+        with pytest.raises(RuntimeError, match="start failed"):
+            _drain(spark, sdf, how)
+        assert seen == [FS_MANAGER]
+        assert spark.conf.get(CKPT_MANAGER, None) == prior
+    finally:
+        spark.conf.unset(CKPT_MANAGER)
+
+
+def test_detached_stdout_drain_keeps_checkpoint_until_stopped(
+        spark, tmp_path):
+    """With await_termination=false the query outlives the sink call,
+    so its temp checkpoint is held until the query is seen stopped
+    (at the next detached drain), then deleted."""
+    from conveyor_spark.registry import OpContext
+    from conveyor_spark.sinks import stdout_stream
+    from tests.conftest import run_op
+
+    def detached_drain(sub):
+        run_op(OpContext(spark=spark), "stdout_stream.write",
+               [_keyed_count_stream(spark, tmp_path / sub)],
+               output_mode="complete", await_termination=False)
+        return stdout_stream._DETACHED[-1]
+
+    (tmp_path / "a").mkdir(), (tmp_path / "b").mkdir()
+    query, ckpt = detached_drain("a")
+    query.awaitTermination()
+    assert os.path.isdir(os.path.join(ckpt.name, "commits"))
+    later_query, _ = detached_drain("b")
+    later_query.awaitTermination()
+    assert not os.path.exists(ckpt.name)
+
+
+def test_durable_checkpoint_drain_keeps_default_manager(spark, tmp_path,
+                                                        monkeypatch):
+    """A caller's checkpoint= path may be shared or resumed, so its
+    drain keeps Spark's default (fail-if-exists) checkpoint manager."""
+    sdf = _keyed_count_stream(spark, tmp_path)
+    sets = _spy_conf_sets(spark, monkeypatch)
+    out = run_available_now(sdf, "t_durable_ckpt", state_partitions=2,
+                            checkpoint=str(tmp_path / "durable"))
+    assert sorted(map(tuple, out.collect())) == [("u0", 4), ("u1", 3),
+                                                 ("u2", 3)]
+    assert sets, "the drain set no conf at all"
+    assert all(k != CKPT_MANAGER for k, _ in sets)
+
+
+def test_throwaway_checkpoint_keeps_state_checksums(spark, tmp_path,
+                                                    monkeypatch):
+    """Under the FileSystem manager the checkpoint still holds every
+    state delta with Spark's checksum file and Hadoop's .crc files."""
+    import contextlib
+
+    import conveyor_spark.streaming.ops as ops
+
+    ckpt = tmp_path / "ckpt"
+    monkeypatch.setattr(ops, "checkpoint_tmpdir",
+                        lambda prefix: contextlib.nullcontext(str(ckpt)))
+    got = _drain(spark, _keyed_count_stream(spark, tmp_path),
+                 "run_available_now")
+    assert got == [("u0", 4), ("u1", 3), ("u2", 3)]
+    assert len(ops.RECENT_PROGRESS["t_owned_ckpt"]) == 2
+    for part in range(2):
+        files = set(os.listdir(ckpt / "state" / "0" / str(part)))
+        for version in (1, 2):   # one delta per micro-batch
+            assert {f"{version}.delta", f"{version}.delta.crc",
+                    f".{version}.delta.crc",
+                    f".{version}.delta.crc.crc"} <= files, files
 
 
 def test_state_partitions_env_override_is_value_neutral(spark, sf_dir,
