@@ -174,20 +174,17 @@ STATE_STORE_PROVIDERS = {
 }
 
 
-def _apply_session_conf(
-    spark: SparkSession, spec: PipelineSpec
-) -> dict[str, str | None]:
-    """Apply [global.spark] runtime confs + the [global] state_store
-    convenience key at compile time. Streaming state-store and AQE
-    confs are runtime-settable, so this works on the driver's plain
-    session too; a non-runtime key raises ConfigError naming it.
+def _spark_conf(spec: PipelineSpec) -> dict[str, str]:
+    """[global.spark] runtime confs + the [global] state_store
+    convenience key. Streaming state-store and AQE confs are
+    runtime-settable, so these apply on the driver's plain session
+    too; a non-runtime key raises ConfigError naming it.
 
-    Returns the prior values (None = was unset) so run_pipeline can
-    restore them — one pipeline's confs must not leak into the next
-    pipeline compiled on the same shared session. compile_pipeline
-    alone does NOT restore: its returned lazy DataFrames still need
-    the confs at action time (callers driving compile directly own
-    the session's lifecycle)."""
+    compile_pipeline sets them and does NOT restore: its returned
+    lazy DataFrames still need the confs at action time (callers
+    driving compile directly own the session's lifecycle).
+    run_pipeline restores them — one pipeline's confs must not leak
+    into the next pipeline compiled on the same shared session."""
     conf = dict(spec.spark_conf)
     if spec.state_store is not None:
         conf.setdefault(
@@ -202,29 +199,7 @@ def _apply_session_conf(
                 "changelogCheckpointing.enabled",
                 "true",
             )
-    prior: dict[str, str | None] = {}
-    for key, value in conf.items():
-        prior[key] = spark.conf.get(key, None)
-        try:
-            spark.conf.set(key, value)
-        except Exception as exc:  # AnalysisException: static conf
-            raise ConfigError(
-                f"[global.spark] conf {key!r} cannot be set at runtime: {exc}"
-            ) from None
-    return prior
-
-
-def _restore_session_conf(
-    spark: SparkSession, prior: dict[str, str | None]
-) -> None:
-    for key, value in prior.items():
-        try:
-            if value is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, value)
-        except Exception:  # pragma: no cover - restore is best-effort
-            pass
+    return conf
 
 
 def compile_pipeline(
@@ -267,7 +242,10 @@ def compile_pipeline(
             file=sys.stderr,
         )
 
-    _apply_session_conf(spark, spec)
+    from conveyor_spark.streaming.ops import set_runtime_conf
+
+    for key, value in _spark_conf(spec).items():
+        set_runtime_conf(spark, key, value)
 
     ctx = OpContext(spark=spark, variables=spec.variables)
     result = RunResult()
@@ -396,6 +374,8 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec) -> RunResult:
     interruptTag from a watchdog thread resolves nothing — hence the
     SparkContext path first.)
     """
+    from conveyor_spark.streaming.ops import session_conf
+
     if spec.timeout_seconds:
         import threading
 
@@ -422,15 +402,11 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec) -> RunResult:
         timer = threading.Timer(spec.timeout_seconds, cancel)
         timer.daemon = True
         timer.start()
-        prior = _apply_session_conf(spark, spec)
         try:
-            return compile_pipeline(spark, spec)
+            with session_conf(spark, _spark_conf(spec)):
+                return compile_pipeline(spark, spec)
         finally:
             timer.cancel()
             cleanup()
-            _restore_session_conf(spark, prior)
-    prior = _apply_session_conf(spark, spec)
-    try:
+    with session_conf(spark, _spark_conf(spec)):
         return compile_pipeline(spark, spec)
-    finally:
-        _restore_session_conf(spark, prior)

@@ -704,8 +704,8 @@ def dedup_ngram_jaccard(ctx: OpContext, inputs: list[DataFrame], config: dict[st
         P("allow_full", "boolean", default=False,
           desc="Opt in to the O(n²) unblocked comparison"),
         P("method", default="gemm", allowed=("gemm", "join"),
-          desc="gemm: per-bucket BLAS via Arrow (default, ~8x faster); "
-               "join: pure-JVM pair join (no Python workers)"),
+          desc="Retired: both values run the same engine with "
+               "identical output (chosen from the input)"),
     ],
     example={"id_column": "id", "bucket_column": "lsh_sig", "threshold": 0.95},
     tags=["dedup", "embedding", "datapipe"],
@@ -716,12 +716,21 @@ def dedup_embedding(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     `bucket_column` (e.g. an IVF/cluster id) bounds the O(n^2) pair
     join — pairs are only formed inside a bucket. Without it this is
     a full cross join: refuse unless `allow_full=true`.
+
+    The engine follows from the input. With a bucket column, each
+    bucket is one Arrow batch and a chunked BLAS M @ M.T emits the
+    surviving pairs. Without one (`allow_full`), or when the id is a
+    year-month or calendar interval (which Arrow cannot return), a
+    distributed pair join computes the same pairs. ``method`` is
+    retired: "gemm" and "join" both run this choice.
     """
     df = inputs[0]
     column = config.get("column", "embedding")
     id_column = config.get("id_column")
     if not id_column:
         raise ConfigError("dedup.embedding requires 'id_column'")
+    if config.get("method", "gemm") not in ("gemm", "join"):
+        raise ConfigError("dedup.embedding: method must be gemm|join")
     threshold = float(config.get("threshold", 0.95))
     bucket = config.get("bucket_column")
     if not bucket and not config.get("allow_full"):
@@ -729,8 +738,10 @@ def dedup_embedding(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
             "dedup.embedding without 'bucket_column' is a full O(n^2) cross join; "
             "set allow_full=true to force"
         )
-    if config.get("method", "gemm") == "gemm" and bucket:
-        # Per-bucket BLAS path (default): each vector crosses the
+    from conveyor_spark.datapipe.clustering import _no_arrow_return
+
+    if bucket and not _no_arrow_return(df.schema[id_column].dataType):
+        # Per-bucket BLAS path: each vector crosses the
         # bucket shuffle ONCE and Arrow-lands as a row of an (n_b, d)
         # matrix; a chunked M @ M.T emits only the surviving skinny
         # (id_a, id_b, cosine) triples. The join path below instead

@@ -9,9 +9,11 @@ expression — the same shape as Spark MLlib's PCA.
 
 Determinism (the oracle contract, clustering.py's recipe extended):
 
-- Moments: each component floor-quantizes to int64 (x -> floor(x *
-  2^20)); pair products promote to DECIMAL(38,0) BEFORE multiplying,
-  so every sum is EXACT in any partition order and any engine.
+- Moments: each component floor-quantizes to an integer (x ->
+  floor(x * 2^20)); one Q^T Q matmul per Arrow batch sums the pair
+  products exactly (int64, or Python ints for a batch whose
+  magnitudes would overflow int64), and the batch totals add as
+  DECIMAL(38,0) — EXACT in any partition order.
 - Covariance: one fixed double formula over the exact moments —
   identical IEEE ops everywhere.
 - Eigenvectors: FIXED-count power iteration with deflation, from the
@@ -24,9 +26,10 @@ Determinism (the oracle contract, clustering.py's recipe extended):
 MLlib's PCA (breeze SVD over a double-summed Gram) is none of these:
 its loadings move with partitioning. Ours replay exactly.
 
-Domain: quantization at 2^-20 bounds |x| < ~2000 (int64 product
-headroom) — embeddings are unit-ish by construction; rescale first
-otherwise. Fixed iterations mean eigenvector CONVERGENCE depends on
+Domain: |x| < 2^43 (the quantized value must fit int64). A batch
+with |x| >= 2048 sums in exact Python ints instead of int64 — same
+result, slower; embeddings are unit-ish by construction. Fixed
+iterations mean eigenvector CONVERGENCE depends on
 spectral gaps — the output is a deterministic function of the data
 either way, which is what a frozen pipeline needs; raise
 ``iterations`` for closely-spaced eigenvalues.
@@ -92,10 +95,8 @@ def power_iteration(cov: list[list[float]], iterations: int):
         P("whiten", "boolean", default=False,
           desc="Scale each score by 1/sqrt(eigenvalue) (unit variance)"),
         P("moments", default="gemm", allowed=("gemm", "entries"),
-          desc="Moment-pass engine: one int64 Q^T Q matmul per Arrow "
-               "batch (gemm, default) or per-row skinny decimal "
-               "entries (entries) — identical exact sums, parity-"
-               "tested"),
+          desc="Retired: both values run the one exact Q^T Q "
+               "matmul per Arrow batch with identical output"),
     ],
     example={"id_column": "doc_id", "column": "embedding",
              "components": 2, "iterations": 4},
@@ -108,15 +109,12 @@ def embedding_pca(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     returns r rows (component, eigenvalue, vector array<double>,
     mean array<double>).
 
-    Scale: ONE pass computes all dim*(dim+1)/2 + dim + 1 moments.
-    Default (``moments="gemm"``): one exact int64 Q^T Q matmul per
-    Arrow batch via mapInPandas — ~dim^2 partial rows per batch
-    shuffle, numpy on executors required. ``moments="entries"``:
-    pure-JVM skinny (i, j, exact-decimal) entry explode + map-side
-    partial aggregation — the path for Python-worker-free executors.
-    Both produce BIT-IDENTICAL sums (parity-tested); the dim x dim
-    eigenproblem is driver-side arithmetic; projection is a per-row
-    codegen fold regardless of engine."""
+    Scale: ONE pass computes all dim*(dim+1)/2 + dim + 1 moments:
+    one exact Q^T Q matmul per Arrow batch via mapInPandas — ~dim^2
+    partial rows per batch shuffle. The dim x dim eigenproblem is
+    driver-side arithmetic; projection is a per-row codegen fold.
+    ``moments`` is retired: "gemm" and "entries" both run this
+    engine."""
     df = inputs[0]
     id_column = config.get("id_column")
     if not id_column:
@@ -134,6 +132,8 @@ def embedding_pca(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     output = config.get("output", "project")
     if output not in ("project", "components"):
         raise ConfigError("embedding.pca: output must be project|components")
+    if config.get("moments", "gemm") not in ("gemm", "entries"):
+        raise ConfigError("embedding.pca: moments must be gemm|entries")
     prefix = config.get("prefix", "pc")
 
     vec = F.col(column)
@@ -147,138 +147,82 @@ def embedding_pca(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     # ONE validity predicate — the SAME vec_ok the whole centroid
     # family uses (review r10: an inline copy here had already
     # drifted once, missing Inf while clustering gained the NaN
-    # check). Non-finite elements are invalid like NULLs: the old
-    # entries path silently quantized NaN to 0 / Inf to Long.MAX,
-    # poisoning every covariance moment.
+    # check). Non-finite elements are invalid like NULLs: quantized,
+    # they would poison every covariance moment.
     from conveyor_spark.datapipe.clustering import vec_ok
 
     ok = vec_ok(vec, dim)
     clean = df.filter(ok)
 
-    idx = F.sequence(F.lit(0), F.lit(dim - 1))
+    # Exact integer sums via one Q^T Q per Arrow batch: quantization
+    # is floor(double * 2^20) (identical IEEE multiply + floor to the
+    # oracle's), the per-batch products/sums are exact, and
+    # cross-batch totals sum as decimal(38,0) in the groupBy. A
+    # per-row skinny-entry explode computes the same sums from 2145
+    # interpreted-HOF structs per row (measured ~5 s of the q127
+    # bench at sf0.1); the matmul is ~30 ms per batch.
+    import decimal as _dec
 
-    def entries(qa):
-        pair = F.flatten(F.transform(
-            idx,
-            lambda i: F.transform(
-                F.sequence(i, F.lit(dim - 1)),
-                lambda j: F.struct(
-                    i.cast("int").alias("i"), j.cast("int").alias("j"),
-                    (F.element_at(qa, i + 1).cast("decimal(19,0)")
-                     * F.element_at(qa, j + 1)).cast("decimal(38,0)")
-                    .alias("val"),
-                ),
-            ),
-        ))
-        firsts = F.transform(
-            idx,
-            lambda i: F.struct(
-                i.cast("int").alias("i"), F.lit(-1).alias("j"),
-                F.element_at(qa, i + 1).cast("decimal(38,0)").alias("val"),
-            ),
-        )
-        counter = F.array(F.struct(
-            F.lit(-1).alias("i"), F.lit(-1).alias("j"),
-            F.lit(1).cast("decimal(38,0)").alias("val"),
-        ))
-        return F.concat(pair, firsts, counter)
+    _qf = float(_Q)
+    _dimf = dim
 
-    from conveyor_spark.datapipe.dedup import let_expr
+    def batch_moments(batches):
+        import numpy as np
+        import pandas as pd
 
-    engine = config.get("moments", "gemm")
-    if engine not in ("gemm", "entries"):
-        raise ConfigError("embedding.pca: moments must be gemm|entries")
-    if engine == "gemm":
-        # The SAME exact integer sums via one int64 Q^T Q per Arrow
-        # batch: quantization replays F.floor(cast(double) * 2^20)
-        # bit-for-bit in numpy (identical IEEE multiply + floor), the
-        # per-batch products/sums are exact int64 (chunked so
-        # rows_per_chunk * max|q|^2 stays under 2^62 — no silent
-        # wraparound), and cross-batch totals still sum as
-        # decimal(38,0) in the same groupBy. The skinny-entry path
-        # builds 2145 interpreted-HOF structs per row (measured ~5 s
-        # of the q127 bench at sf0.1); the matmul is ~30 ms per batch.
-        import decimal as _dec
-
-        _qf = float(_Q)
-        _dimf = dim
-
-        def batch_moments(batches):
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                q = np.floor(
-                    np.stack(pdf.iloc[:, 0].to_numpy())
-                    .astype(np.float64) * _qf
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            q = np.floor(
+                np.stack(pdf.iloc[:, 0].to_numpy()).astype(np.float64) * _qf
+            )
+            mq = float(np.abs(q).max())
+            # Non-finite values cannot reach here (the shared `ok`
+            # predicate excludes NULL/NaN elements, and inf trips the
+            # >= compare) — the isfinite check is a belt-and-suspenders
+            # trap because np.int64(NaN) is PLATFORM GARBAGE. Past
+            # 2^63 the quantized value is not an int64 (Spark's floor
+            # would saturate it): refuse loudly.
+            if not np.isfinite(q).all() or mq >= 2.0**63:
+                raise ValueError(
+                    "embedding.pca: non-finite or too-large value "
+                    "(quantized >= 2^63, |x| >= 2^43); rescale first"
                 )
-                # int64 safety: quantized values past 2^31 would make
-                # a SINGLE product overflow int64 and wrap silently —
-                # refuse loudly (the entries path's decimal(19,0)
-                # handles such magnitudes). Non-finite values cannot
-                # reach here (the shared `ok` predicate excludes
-                # NULL/NaN elements, and inf trips the >= compare) —
-                # the isfinite check is a belt-and-suspenders trap
-                # because np.int64(NaN) is PLATFORM GARBAGE, the
-                # silent-corruption class this guard exists for.
-                if (not np.isfinite(q).all()
-                        or float(np.abs(q).max()) >= 2.0**31):
-                    raise ValueError(
-                        "embedding.pca moments='gemm': non-finite or "
-                        "too-large value for the int64 fast path "
-                        "(quantized >= 2^31); use moments='entries'"
-                    )
+            if mq >= 2.0**31:
+                # a SINGLE int64 product could wrap silently: this
+                # batch sums in exact Python ints, one chunk
+                qi = np.frompyfunc(int, 1, 1)(q)
+                step = len(qi)
+            else:
+                # int64: chunked so rows_per_chunk * max|q|^2 stays
+                # under 2^62 — no silent wraparound
                 qi = q.astype(np.int64)
-                mx = max(1, int(np.abs(qi).max()))
+                mx = max(1, int(mq))
                 step = max(1, min(len(qi), (2**62) // (mx * mx)))
-                gram = np.zeros((_dimf, _dimf), dtype=object)
-                firsts = np.zeros(_dimf, dtype=object)
-                for lo in range(0, len(qi), step):
-                    ch = qi[lo:lo + step]
-                    gram += ch.T @ ch
-                    firsts += ch.sum(axis=0, dtype=np.int64)
-                iu, ju = np.triu_indices(_dimf)
-                rows = {
-                    "i": [int(x) for x in iu]
-                    + list(range(_dimf)) + [-1],
-                    "j": [int(x) for x in ju]
-                    + [-1] * _dimf + [-1],
-                    "val": [_dec.Decimal(int(gram[a][b]))
-                            for a, b in zip(iu, ju)]
-                    + [_dec.Decimal(int(x)) for x in firsts]
-                    + [_dec.Decimal(len(qi))],
-                }
-                yield pd.DataFrame(rows)
+            gram = np.zeros((_dimf, _dimf), dtype=object)
+            firsts = np.zeros(_dimf, dtype=object)
+            for lo in range(0, len(qi), step):
+                ch = qi[lo:lo + step]
+                gram += ch.T @ ch
+                firsts += ch.sum(axis=0, dtype=ch.dtype)
+            iu, ju = np.triu_indices(_dimf)
+            rows = {
+                "i": [int(x) for x in iu] + list(range(_dimf)) + [-1],
+                "j": [int(x) for x in ju] + [-1] * _dimf + [-1],
+                "val": [_dec.Decimal(int(gram[a][b])) for a, b in zip(iu, ju)]
+                + [_dec.Decimal(int(x)) for x in firsts]
+                + [_dec.Decimal(len(qi))],
+            }
+            yield pd.DataFrame(rows)
 
-        entry_df = clean.select(vec.alias("__v")).mapInPandas(
-            batch_moments, "i int, j int, val decimal(38,0)"
-        )
-        moments = (
-            entry_df.groupBy("i", "j")
-            .agg(F.sum("val").alias("v"))
-            .collect()
-        )
-    else:
-        # per-row skinny entries: 2145 (i, j, exact-decimal) structs
-        # per row — upper-triangle quantized pair products (decimal
-        # promotion BEFORE multiplying), first moments as (i, -1),
-        # the row count as (-1, -1); map-side partial aggregation
-        # collapses them to <= dim^2/2 rows per partition. Pure-JVM:
-        # the path for executors without Python workers. (A
-        # dim^2-wide single aggregate computes the same sums but its
-        # 2k-expression plan costs ~45 s of driver analysis at
-        # dim 64 — measured.)
-        qarr = F.transform(
-            vec, lambda x: F.floor(x.cast("double") * F.lit(_Q))
-        )
-        moments = (
-            clean.select(F.explode(let_expr(qarr, entries)).alias("__e"))
-            .groupBy("__e.i", "__e.j")
-            .agg(F.sum("__e.val").alias("v"))
-            .collect()
-        )
+    entry_df = clean.select(vec.alias("__v")).mapInPandas(
+        batch_moments, "i int, j int, val decimal(38,0)"
+    )
+    moments = (
+        entry_df.groupBy("i", "j")
+        .agg(F.sum("val").alias("v"))
+        .collect()
+    )
     by_key = {(r["i"], r["j"]): r["v"] for r in moments}
     if not by_key:
         raise ConfigError("embedding.pca: no usable vectors")

@@ -157,8 +157,8 @@ def knn_brute(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
         P("k", "integer", default=10, min=1, desc="Neighbors per query"),
         P("query_ids", "array", desc="Query subset (default: second input)"),
         P("method", default="gemm", allowed=("gemm", "join"),
-          desc="gemm: per-bucket BLAS via Arrow cogroup (default); "
-               "join: pure-JVM broadcast join (no Python workers)"),
+          desc="Retired: both values run the one per-bucket BLAS "
+               "engine (Arrow cogroup) with identical output"),
     ],
     example={"id_column": "id", "bucket_column": "ivf_cell", "k": 10},
     tags=["similarity", "knn", "datapipe"],
@@ -167,141 +167,123 @@ def knn_ivf(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> 
     """Like knn.brute but only scans the query's bucket
     (`bucket_column` = precomputed cluster id).
 
-    Default method is a bucket-cogrouped GEMM: corpus and query rows
-    shuffle ONCE by bucket, Arrow lands each side as a matrix, and
-    Q @ C.T + argpartition produce each query's top-k inside the
-    cogroup — no per-pair row materialization, no interpreted dot
-    folds, and per-query top-k needs no window. method="join" keeps
-    the broadcast-join formulation (queries must be small there; the
-    cogroup path has no such constraint — BOTH sides may be large)."""
+    Corpus and query rows shuffle ONCE by bucket, Arrow lands each
+    side as a matrix, and Q @ C.T + argpartition produce each query's
+    top-k inside the cogroup — no per-pair row materialization, no
+    interpreted dot folds, and per-query top-k needs no window. Both
+    sides may be large. Ties break by neighbor id, as knn.brute's
+    _topk. A NULL bucket, a NULL / zero-norm / NaN vector and a
+    length mismatch are never neighbors (the cosine is undefined).
+
+    ``method`` is retired: "gemm" and "join" both run this engine.
+    The id column must be a type the cogroup can return: a
+    year-month or calendar interval id is refused (cast it first)."""
     corpus = inputs[0]
     id_column = config.get("id_column")
     column = config.get("column", "embedding")
     bucket = config.get("bucket_column")
     if not id_column or not bucket:
         raise ConfigError("knn.ivf requires 'id_column' and 'bucket_column'")
+    if config.get("method", "gemm") not in ("gemm", "join"):
+        raise ConfigError("knn.ivf: method must be gemm|join")
+    from conveyor_spark.datapipe.clustering import _no_arrow_return
+
+    id_type = corpus.schema[id_column].dataType
+    if _no_arrow_return(id_type):
+        raise ConfigError(
+            f"knn.ivf: id column {id_column!r} is {id_type.simpleString()}, "
+            "which the per-bucket cogroup cannot return; cast it (e.g. "
+            "to string or bigint) first"
+        )
     k = int(config.get("k", 10))
     # no queries given -> self-kNN within each bucket (knn.lsh's
     # default; self-matches are excluded either way)
     queries = _resolve_queries(corpus, inputs, config, id_column, allow_self=True)
-    if config.get("method", "gemm") == "gemm":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        idt = corpus.schema[id_column].dataType.simpleString()
-        # slim rows only: norms are recomputed vectorized inside the
-        # cogroup (a norm_expr HOF fold per row would be interpreted
-        # JVM work shipping a column the GEMM never reads). NULL
-        # buckets are dropped to match the join path's null-unsafe
-        # __cb == __qb predicate (cogroup would pool them).
-        qg = queries.select(
-            F.col(id_column).alias("query_id"),
-            F.col(column).alias("__qv"),
-            F.col(bucket).alias("__qb"),
-        ).filter(F.col("__qb").isNotNull())
-        cg = corpus.select(
-            F.col(id_column).alias("neighbor_id"),
-            F.col(column).alias("__cv"),
-            F.col(bucket).alias("__cb"),
-        ).filter(F.col("__cb").isNotNull())
-
-        def bucket_knn(qpdf: "pd.DataFrame", cpdf: "pd.DataFrame") -> "pd.DataFrame":
-            empty = pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cosine": [], "rank": []}
-            )
-            # NULL vectors can't join a matrix; the join path's NULL
-            # cosine for them is filtered there too (see below)
-            qpdf = qpdf[qpdf["__qv"].notna()]
-            cpdf = cpdf[cpdf["__cv"].notna()]
-            if qpdf.empty or cpdf.empty:
-                return empty
-            frames = []
-            # ragged data: a query only scores same-length corpus
-            # vectors (a length mismatch is a NULL cosine on the join
-            # path, dropped there as well)
-            qlen = qpdf["__qv"].str.len()
-            clen = cpdf["__cv"].str.len()
-            for dim in sorted(set(qlen) & set(clen)):
-                qp, cp = qpdf[qlen == dim], cpdf[clen == dim]
-                cids = cp["neighbor_id"].to_numpy()
-                order = np.argsort(cids)  # neighbor-id tiebreak = _topk's
-                cids = cids[order]
-                C = np.asarray(cp["__cv"].to_list(), dtype=np.float64)[order]
-                cn = np.sqrt((C * C).sum(axis=1))
-                Q = np.asarray(qp["__qv"].to_list(), dtype=np.float64)
-                qn = np.sqrt((Q * Q).sum(axis=1))
-                qids = qp["query_id"].to_numpy()
-                # zero-norm / NaN vectors: a NaN sims COLUMN would
-                # poison the per-row partition threshold (NaN sorts
-                # largest) and silently drop real neighbors — exclude
-                # them (cosine undefined; join path filters the same)
-                cok = np.isfinite(cn) & (cn > 0)
-                if not cok.all():
-                    cids, C, cn = cids[cok], C[cok], cn[cok]
-                qok = np.isfinite(qn) & (qn > 0)
-                if not qok.all():
-                    Q, qn, qids = Q[qok], qn[qok], qids[qok]
-                if not len(cids) or not len(qids):
-                    continue
-                out = {"query_id": [], "neighbor_id": [], "cosine": [], "rank": []}
-                ch = max(1, int(4e7) // len(cids))  # <=320MB sim block
-                for s in range(0, len(qids), ch):
-                    sims = np.round(
-                        (Q[s:s + ch] @ C.T) / np.outer(qn[s:s + ch], cn), 6
-                    )
-                    # self-exclusion, vectorized
-                    sims[cids[None, :] == qids[s:s + ch, None]] = -np.inf
-                    n_c = sims.shape[1]
-                    kk = min(k, n_c)
-                    # per-row k-th largest VALUE (vectorized); then each
-                    # row exact-sorts only the >= threshold candidates by
-                    # (cosine desc, id asc) — same result as a full sort
-                    # (ties included before the cut), O(n + t log t)
-                    thresh = np.partition(sims, n_c - kk, axis=1)[:, n_c - kk]
-                    for i in range(sims.shape[0]):
-                        row = sims[i]
-                        cand = np.flatnonzero(row >= thresh[i])
-                        cand = cand[np.lexsort((cids[cand], -row[cand]))][:kk]
-                        cand = cand[row[cand] > -np.inf]
-                        out["query_id"] += [qids[s + i]] * len(cand)
-                        out["neighbor_id"] += list(cids[cand])
-                        out["cosine"] += list(row[cand])
-                        out["rank"] += list(range(1, len(cand) + 1))
-                frames.append(pd.DataFrame(out))
-            return pd.concat(frames) if frames else empty
-
-        return qg.groupby("__qb").cogroup(cg.groupby("__cb")).applyInPandas(
-            bucket_knn,
-            schema=f"query_id {idt}, neighbor_id {idt}, cosine double, rank int",
-        )
-    q = queries.select(
+    idt = id_type.simpleString()
+    # slim rows only: norms are recomputed vectorized inside the
+    # cogroup (a norm_expr HOF fold per row would be interpreted JVM
+    # work shipping a column the GEMM never reads). NULL buckets are
+    # dropped: a NULL bucket matches nothing (cogroup would pool them).
+    qg = queries.select(
         F.col(id_column).alias("query_id"),
         F.col(column).alias("__qv"),
-        norm_expr(F.col(column)).alias("__qn"),
         F.col(bucket).alias("__qb"),
-    ).filter(valid_norm(F.col("__qn")))
-    c = corpus.select(
+    ).filter(F.col("__qb").isNotNull())
+    cg = corpus.select(
         F.col(id_column).alias("neighbor_id"),
         F.col(column).alias("__cv"),
-        norm_expr(F.col(column)).alias("__cn"),
         F.col(bucket).alias("__cb"),
-    ).filter(valid_norm(F.col("__cn")))
-    joined = c.join(F.broadcast(q), on=F.col("__cb") == F.col("__qb")).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    joined = joined.withColumn(
-        "cosine",
-        F.round(pair_cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")), 6),
-    )
-    # NULL cosine (null vector / length mismatch) or NaN cosine
-    # (zero-norm vector — Spark sorts NaN FIRST in desc order, so it
-    # would outrank every real neighbor) is not a neighbor; the GEMM
-    # path excludes both, so filter for parity
-    return _topk(
-        joined.filter(
-            F.col("cosine").isNotNull() & ~F.isnan("cosine")
-        ),
-        k,
+    ).filter(F.col("__cb").isNotNull())
+
+    def bucket_knn(qpdf: "pd.DataFrame", cpdf: "pd.DataFrame") -> "pd.DataFrame":
+        empty = pd.DataFrame(
+            {"query_id": [], "neighbor_id": [], "cosine": [], "rank": []}
+        )
+        # NULL vectors can't join a matrix (and have no cosine)
+        qpdf = qpdf[qpdf["__qv"].notna()]
+        cpdf = cpdf[cpdf["__cv"].notna()]
+        if qpdf.empty or cpdf.empty:
+            return empty
+        frames = []
+        # ragged data: a query only scores same-length corpus vectors
+        # (knn.brute's pair_cosine is NULL on a length mismatch)
+        qlen = qpdf["__qv"].str.len()
+        clen = cpdf["__cv"].str.len()
+        for dim in sorted(set(qlen) & set(clen)):
+            qp, cp = qpdf[qlen == dim], cpdf[clen == dim]
+            cids = cp["neighbor_id"].to_numpy()
+            order = np.argsort(cids)  # neighbor-id tiebreak = _topk's
+            cids = cids[order]
+            C = np.asarray(cp["__cv"].to_list(), dtype=np.float64)[order]
+            cn = np.sqrt((C * C).sum(axis=1))
+            Q = np.asarray(qp["__qv"].to_list(), dtype=np.float64)
+            qn = np.sqrt((Q * Q).sum(axis=1))
+            qids = qp["query_id"].to_numpy()
+            # zero-norm / NaN vectors: a NaN sims COLUMN would poison
+            # the per-row partition threshold (NaN sorts largest) and
+            # silently drop real neighbors — exclude them (cosine
+            # undefined; knn.brute's valid_norm filters the same)
+            cok = np.isfinite(cn) & (cn > 0)
+            if not cok.all():
+                cids, C, cn = cids[cok], C[cok], cn[cok]
+            qok = np.isfinite(qn) & (qn > 0)
+            if not qok.all():
+                Q, qn, qids = Q[qok], qn[qok], qids[qok]
+            if not len(cids) or not len(qids):
+                continue
+            out = {"query_id": [], "neighbor_id": [], "cosine": [], "rank": []}
+            ch = max(1, int(4e7) // len(cids))  # <=320MB sim block
+            for s in range(0, len(qids), ch):
+                sims = np.round(
+                    (Q[s:s + ch] @ C.T) / np.outer(qn[s:s + ch], cn), 6
+                )
+                # self-exclusion, vectorized
+                sims[cids[None, :] == qids[s:s + ch, None]] = -np.inf
+                n_c = sims.shape[1]
+                kk = min(k, n_c)
+                # per-row k-th largest VALUE (vectorized); then each
+                # row exact-sorts only the >= threshold candidates by
+                # (cosine desc, id asc) — same result as a full sort
+                # (ties included before the cut), O(n + t log t)
+                thresh = np.partition(sims, n_c - kk, axis=1)[:, n_c - kk]
+                for i in range(sims.shape[0]):
+                    row = sims[i]
+                    cand = np.flatnonzero(row >= thresh[i])
+                    cand = cand[np.lexsort((cids[cand], -row[cand]))][:kk]
+                    cand = cand[row[cand] > -np.inf]
+                    out["query_id"] += [qids[s + i]] * len(cand)
+                    out["neighbor_id"] += list(cids[cand])
+                    out["cosine"] += list(row[cand])
+                    out["rank"] += list(range(1, len(cand) + 1))
+            frames.append(pd.DataFrame(out))
+        return pd.concat(frames) if frames else empty
+
+    return qg.groupby("__qb").cogroup(cg.groupby("__cb")).applyInPandas(
+        bucket_knn,
+        schema=f"query_id {idt}, neighbor_id {idt}, cosine double, rank int",
     )
 
 

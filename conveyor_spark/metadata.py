@@ -128,7 +128,7 @@ def generate_operators_md() -> str:
     out = [
         "# Operators",
         "",
-        "Generated from registry metadata (`python tools/gen_operators_md.py`).",
+        "Generated from registry metadata (`python tools/gen_operator_docs.py`).",
         f"{len(REGISTRY)} registered functions.",
         "",
         "## `[global]` pipeline configuration",

@@ -293,17 +293,31 @@ def checkpoint_tmpdir(prefix: str) -> tempfile.TemporaryDirectory:
     return tempfile.TemporaryDirectory(prefix=prefix, dir=base)
 
 
+def set_runtime_conf(spark: SparkSession, key: str, value: str) -> None:
+    """``spark.conf.set``, with a static or core conf (which Spark
+    refuses after the session starts) as a ConfigError naming it."""
+    try:
+        spark.conf.set(key, value)
+    except Exception as exc:  # AnalysisException
+        raise ConfigError(
+            f"conf {key!r} cannot be set at runtime: {exc}"
+        ) from None
+
+
 @contextmanager
 def session_conf(spark: SparkSession, overrides: dict[str, str]) -> Iterator[None]:
     """Set ``overrides`` on the session for the block, then put every
     key back as it was found: a set key gets its old value, an unset
-    key is unset again. A stream copies the session conf at
+    key is unset again. A key that cannot be set raises ConfigError
+    after the keys set before it are put back. A stream copies the session conf at
     ``start()``, so a block around ``start()`` covers the whole
     query and leaves later queries on the session's own values."""
-    prev = {k: spark.conf.get(k, None) for k in overrides}
+    prev: dict[str, str | None] = {}
     try:
         for k, v in overrides.items():
-            spark.conf.set(k, v)
+            old = spark.conf.get(k, None)
+            set_runtime_conf(spark, k, v)
+            prev[k] = old
         yield
     finally:
         for k, v in prev.items():

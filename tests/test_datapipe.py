@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 
 from conveyor_spark.errors import ConfigError
-from tests.conftest import run_op
+from tests.conftest import dedup_embedding_reference, knn_ivf_reference, run_op
 
 
 @pytest.fixture(scope="module")
@@ -161,8 +161,9 @@ def test_knn_ivf_prunes_buckets(ctx, spark):
 
 
 def test_knn_ivf_gemm_matches_join(ctx, spark):
-    """Cogrouped GEMM and broadcast join must agree on every
-    (query, rank) -> (neighbor, cosine) assignment."""
+    """The cogrouped GEMM must agree with knn.brute run on each
+    bucket's slice on every (query, rank) -> (neighbor, cosine)
+    assignment; the retired method="join" runs the same engine."""
     import random
 
     rng = random.Random(11)
@@ -175,13 +176,15 @@ def test_knn_ivf_gemm_matches_join(ctx, spark):
               query_ids=[0, 1, 2, 5, 7])
     as_set = lambda df: {tuple(r) for r in df.collect()}
     gemm = as_set(run_op(ctx, "knn.ivf", [vecs], **kw))
+    ref = as_set(knn_ivf_reference(ctx, vecs, **kw))
     join = as_set(run_op(ctx, "knn.ivf", [vecs], method="join", **kw))
-    assert gemm == join and len(gemm) == 5 * 4
+    assert gemm == ref == join and len(gemm) == 5 * 4
 
 
 def test_dedup_embedding_gemm_matches_join(ctx, spark):
-    """The default per-bucket GEMM path and the pure-JVM pair join
-    must emit identical (id_a, id_b, round-6 cosine) triples."""
+    """The per-bucket GEMM must emit the same (id_a, id_b, round-6
+    cosine) triples as the unbucketed pair join run on each bucket's
+    slice; the retired method="join" runs the same engine."""
     import random
 
     rng = random.Random(7)
@@ -192,27 +195,27 @@ def test_dedup_embedding_gemm_matches_join(ctx, spark):
     )
     kw = dict(id_column="vec_id", bucket_column="label", threshold=0.2)
     gemm = run_op(ctx, "dedup.embedding", [vecs], **kw)
+    ref = dedup_embedding_reference(ctx, vecs, **kw)
     join = run_op(ctx, "dedup.embedding", [vecs], method="join", **kw)
     as_set = lambda df: {(r["id_a"], r["id_b"], r["cosine"]) for r in df.collect()}
     got = as_set(gemm)
-    assert got == as_set(join)
+    assert got == as_set(ref) == as_set(join)
     assert got  # non-vacuous: threshold 0.2 keeps some pairs
 
 
 def test_dedup_embedding_gemm_no_self_pairs_on_duplicate_ids(ctx, spark):
-    """Two rows sharing an id must not pair with each other (the join
-    path's strict a.id < b.id), and NULL buckets drop on both paths."""
+    """Two rows sharing an id must not pair with each other (strict
+    a.id < b.id, as the unbucketed pair join), and a NULL bucket
+    pairs with nothing."""
     vecs = spark.createDataFrame(
         [(7, [1.0, 0.0], 0), (7, [1.0, 0.01], 0), (9, [1.0, 0.02], 0),
          (11, [1.0, 0.0], None)],
         "vec_id INT, embedding ARRAY<FLOAT>, label INT",
     )
     kw = dict(id_column="vec_id", bucket_column="label", threshold=0.5)
-    for method in ("gemm", "join"):
-        got = sorted((r["id_a"], r["id_b"]) for r in
-                     run_op(ctx, "dedup.embedding", [vecs], method=method,
-                            **kw).collect())
-        assert got == [(7, 9), (7, 9)]  # both id-7 rows pair with 9 only
+    got = sorted((r["id_a"], r["id_b"]) for r in
+                 run_op(ctx, "dedup.embedding", [vecs], **kw).collect())
+    assert got == [(7, 9), (7, 9)]  # both id-7 rows pair with 9 only
 
 
 def test_dedup_embedding_allow_full_uses_distributed_join(ctx, spark):
@@ -229,9 +232,9 @@ def test_dedup_embedding_allow_full_uses_distributed_join(ctx, spark):
 
 
 def test_vector_ops_tolerate_null_and_ragged_vectors(ctx, spark):
-    """A NULL or odd-length embedding must not crash the GEMM paths —
-    the join formulation yields a NULL cosine (dropped), and GEMM
-    must match by skipping cross-length pairs."""
+    """A NULL or odd-length embedding must not crash the GEMM paths:
+    a NULL vector matches nothing and only same-length vectors pair
+    (a cross-length cosine is undefined)."""
     vecs = spark.createDataFrame(
         [(1, [1.0, 0.0], 0), (2, [0.9, 0.1], 0), (3, None, 0),
          (4, [1.0, 0.0, 0.0], 0), (5, [0.9, 0.1, 0.05], 0)],
@@ -239,19 +242,18 @@ def test_vector_ops_tolerate_null_and_ragged_vectors(ctx, spark):
     )
     kw = dict(id_column="vec_id", bucket_column="label", threshold=0.5)
     as_set = lambda d: sorted((r["id_a"], r["id_b"]) for r in d.collect())
-    gemm = as_set(run_op(ctx, "dedup.embedding", [vecs], **kw))
-    join = as_set(run_op(ctx, "dedup.embedding", [vecs], method="join", **kw))
-    assert gemm == join == [(1, 2), (4, 5)]  # only same-length pairs
+    got = as_set(run_op(ctx, "dedup.embedding", [vecs], **kw))
+    assert got == [(1, 2), (4, 5)]  # only same-length pairs
     kw2 = dict(id_column="vec_id", bucket_column="label", k=2,
                query_ids=[1, 3, 4])
     g = sorted(tuple(r) for r in run_op(ctx, "knn.ivf", [vecs], **kw2).collect())
-    j = sorted(tuple(r) for r in
-               run_op(ctx, "knn.ivf", [vecs], method="join", **kw2).collect())
-    assert g == j
-    assert {r[0] for r in g} == {1, 4}  # null-vector query 3 matches nothing
+    # one same-length neighbor each; null-vector query 3 matches nothing
+    assert g == [(1, 2, 0.993884, 1), (4, 5, 0.992372, 1)]
 
 
 def test_knn_ivf_gemm_drops_null_buckets_like_join(ctx, spark):
+    """A NULL bucket matches nothing, not even another NULL bucket
+    (the null-unsafe bucket equality of a pair join)."""
     vecs = spark.createDataFrame(
         [(1, [1.0, 0.0], None), (2, [0.9, 0.1], None), (3, [1.0, 0.1], 0),
          (4, [0.9, 0.0], 0)],
@@ -259,17 +261,76 @@ def test_knn_ivf_gemm_drops_null_buckets_like_join(ctx, spark):
     )
     kw = dict(id_column="vec_id", bucket_column="label", k=2,
               query_ids=[1, 3])
-    as_set = lambda df: {tuple(r) for r in df.collect()}
-    gemm = as_set(run_op(ctx, "knn.ivf", [vecs], **kw))
-    join = as_set(run_op(ctx, "knn.ivf", [vecs], method="join", **kw))
-    assert gemm == join
-    assert {r[0] for r in gemm} == {3}  # null-bucket query 1 matches nothing
+    got = {tuple(r) for r in run_op(ctx, "knn.ivf", [vecs], **kw).collect()}
+    assert got == {(3, 4, 0.995037, 1)}  # null-bucket query 1 matches nothing
 
 
 def test_dedup_embedding_requires_bucket(ctx, spark):
     vecs = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id INT, embedding ARRAY<FLOAT>")
     with pytest.raises(ConfigError, match="cross join"):
         run_op(ctx, "dedup.embedding", [vecs], id_column="vec_id")
+
+
+@pytest.mark.parametrize("op, param, retired, cfg", [
+    ("knn.ivf", "method", "join",
+     dict(id_column="vec_id", bucket_column="label", k=3,
+          query_ids=[0, 1, 4])),
+    ("dedup.embedding", "method", "join",
+     dict(id_column="vec_id", bucket_column="label", threshold=0.2)),
+    ("embedding.pca", "moments", "entries",
+     dict(id_column="vec_id", components=2, iterations=4)),
+])
+def test_retired_engine_params_are_aliases(ctx, spark, op, param, retired, cfg):
+    """A retired engine param still validates its value (an unknown
+    one raises, not silently picks an engine), and the retired value
+    runs the one engine: output identical to the default."""
+    import random
+
+    rng = random.Random(5)
+    vecs = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(4)], i % 2) for i in range(20)],
+        "vec_id INT, embedding ARRAY<FLOAT>, label INT",
+    )
+    with pytest.raises(ConfigError, match=param):
+        run_op(ctx, op, [vecs], **{param: "GEMM"}, **cfg)
+    as_set = lambda d: sorted(tuple(r) for r in d.collect())
+    default = as_set(run_op(ctx, op, [vecs], **cfg))
+    assert default  # non-vacuous
+    assert as_set(run_op(ctx, op, [vecs], **{param: retired}, **cfg)) == default
+
+
+def _vecs_with_id(spark, id_sql: str):
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0), (2, [0.9, 0.1], 0), (3, [0.0, 1.0], 0),
+         (4, [1.0, 0.05], 1), (5, [0.95, 0.0], 1)],
+        "vec_id INT, embedding ARRAY<FLOAT>, label INT",
+    )
+    return vecs, vecs.selectExpr(f"{id_sql} AS vec_id", "embedding", "label")
+
+
+def test_dedup_embedding_year_month_interval_id_uses_pair_join(ctx, spark):
+    """Arrow cannot return a year-month interval, so such an id takes
+    the pair join: the same pairs as integer ids, not a build error."""
+    vecs, iv = _vecs_with_id(spark, "make_ym_interval(vec_id, 0)")
+    kw = dict(id_column="vec_id", bucket_column="label", threshold=0.5)
+    got = run_op(ctx, "dedup.embedding", [iv], **kw).selectExpr(
+        "extract(YEAR FROM id_a)", "extract(YEAR FROM id_b)", "cosine")
+    expected = {tuple(r) for r in
+                run_op(ctx, "dedup.embedding", [vecs], **kw).collect()}
+    assert {tuple(r) for r in got.collect()} == expected
+    assert len(expected) == 2
+
+
+@pytest.mark.parametrize("id_sql", [
+    "make_ym_interval(vec_id, 0)", "make_interval(0, 0, 0, vec_id)",
+])
+def test_knn_ivf_rejects_interval_id(ctx, spark, id_sql):
+    """The per-bucket cogroup cannot return a year-month or calendar
+    interval id: a ConfigError naming the column, not a Spark error."""
+    _, iv = _vecs_with_id(spark, id_sql)
+    with pytest.raises(ConfigError, match="'vec_id'.*cast"):
+        run_op(ctx, "knn.ivf", [iv], id_column="vec_id",
+               bucket_column="label", k=2)
 
 
 def test_text_quality_and_langid(ctx, spark):

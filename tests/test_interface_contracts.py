@@ -422,22 +422,18 @@ path = "{{ outpt_dir }}/f.csv"
 def test_zero_norm_vectors_excluded_both_paths(ctx, spark):
     """A zero/NaN-norm vector has no direction; Spark compares NaN as
     LARGEST, so an unfiltered NaN cosine would pass any threshold /
-    outrank every neighbor. Both vector ops exclude them on both
-    methods."""
+    outrank every neighbor. Both vector ops exclude them."""
     vecs = spark.createDataFrame(
         [(1, [1.0, 0.0], 0), (2, [0.9, 0.1], 0), (3, [0.0, 0.0], 0)],
         "vec_id INT, embedding ARRAY<FLOAT>, label INT",
     )
     kw = dict(id_column="vec_id", bucket_column="label", threshold=0.5)
-    for method in ("gemm", "join"):
-        got = sorted((r["id_a"], r["id_b"]) for r in run_op(
-            ctx, "dedup.embedding", [vecs], method=method, **kw).collect())
-        assert got == [(1, 2)]  # the zero vector never pairs
+    got = [tuple(r) for r in run_op(
+        ctx, "dedup.embedding", [vecs], **kw).collect()]
+    assert got == [(1, 2, 0.993884)]  # the zero vector never pairs
     kw2 = dict(id_column="vec_id", bucket_column="label", k=3, query_ids=[1])
-    for method in ("gemm", "join"):
-        got = [r["neighbor_id"] for r in run_op(
-            ctx, "knn.ivf", [vecs], method=method, **kw2).collect()]
-        assert got == [2]  # NaN-cosine neighbor 3 excluded, not rank 1
+    got = [tuple(r) for r in run_op(ctx, "knn.ivf", [vecs], **kw2).collect()]
+    assert got == [(1, 2, 0.993884, 1)]  # NaN-cosine neighbor 3 excluded
 
 
 def test_frame_bound_direction_mismatch_rejected(ctx, spark):

@@ -150,11 +150,29 @@ def test_pca_dirty_vectors_and_errors(ctx, spark, pcadf):
                components=1, dim=4)
 
 
+def _assert_matches_py_pca(ctx, df, vecs, r, iterations):
+    """Components, eigenvalues, mean and projections all EQUAL the
+    exact-integer Python model (not approx): the moment sums are
+    exact, and every later step is the same IEEE sequence."""
+    comps, mean, scores = py_pca(vecs, r=r, iterations=iterations)
+    cdf = run_op(ctx, "embedding.pca", [df], id_column="vec_id",
+                 components=r, iterations=iterations, output="components")
+    got = sorted((c["component"], c["eigenvalue"], list(c["vector"]),
+                  list(c["mean"])) for c in cdf.collect())
+    assert got == [(k + 1, comps[k][0], comps[k][1], mean) for k in range(r)]
+    out = run_op(ctx, "embedding.pca", [df], id_column="vec_id",
+                 components=r, iterations=iterations)
+    got = {row["vec_id"]: [row[f"pc{k + 1}"] for k in range(r)]
+           for row in out.collect()}
+    assert {i: got[i] for i in scores} == scores
+    return got
+
+
 def test_pca_moments_gemm_entries_parity(ctx, spark):
-    # the two moment engines must produce IDENTICAL exact sums and
-    # therefore identical components/projections — adversarial data:
-    # negatives, magnitudes spanning 1e-6..1e3, a constant column,
-    # and enough rows that per-batch int64 partials accumulate
+    # the moment engine must produce EXACT sums and therefore the
+    # Python model's components/projections bit-for-bit — adversarial
+    # data: negatives, magnitudes spanning 1e-6..1e3, a constant
+    # column, and enough rows that per-batch int64 partials accumulate
     import math as m
 
     rows = [
@@ -167,17 +185,15 @@ def test_pca_moments_gemm_entries_parity(ctx, spark):
         for i in range(1000)
     ]
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    a = run_op(ctx, "embedding.pca", [df], id_column="vec_id",
-               components=2, iterations=8, output="components",
-               moments="gemm").collect()
-    b = run_op(ctx, "embedding.pca", [df], id_column="vec_id",
-               components=2, iterations=8, output="components",
-               moments="entries").collect()
-    sa = sorted((r["component"], r["eigenvalue"], tuple(r["vector"]),
-                 tuple(r["mean"])) for r in a)
-    sb = sorted((r["component"], r["eigenvalue"], tuple(r["vector"]),
-                 tuple(r["mean"])) for r in b)
-    assert sa == sb  # bit-identical, not approx
+    _assert_matches_py_pca(ctx, df, dict(rows), r=2, iterations=8)
+    # the retired moments="entries" runs the same engine
+    a, b = (
+        sorted(tuple(r) for r in run_op(
+            ctx, "embedding.pca", [df], id_column="vec_id", components=2,
+            iterations=8, output="components", **extra).collect())
+        for extra in ({}, {"moments": "entries"})
+    )
+    assert a == b
 
 
 def test_pca_moments_rejects_unknown_engine(ctx, pcadf):
@@ -187,57 +203,47 @@ def test_pca_moments_rejects_unknown_engine(ctx, pcadf):
                moments="fast")
 
 
-def test_pca_gemm_refuses_int64_overflow_magnitudes(ctx, spark):
-    # quantized |value| >= 2^31 would wrap a single int64 product —
-    # the fast path must fail loudly, and the entries path must still
-    # handle the same data exactly
-    big = 5000.0  # * 2^20 quantization = ~2^32.3
+def test_pca_large_magnitudes_match_python_reference(ctx, spark):
+    # |x| = 5000 quantizes past 2^31, where a single int64 product
+    # would wrap: such a batch sums in exact Python ints instead
+    rows = {i: [5000.0 + i, 1.0 - i / 8] for i in range(8)}
     df = spark.createDataFrame(
-        [(i, [big + i, 1.0]) for i in range(8)],
+        sorted(rows.items()), "vec_id LONG, embedding ARRAY<DOUBLE>")
+    _assert_matches_py_pca(ctx, df, rows, r=1, iterations=4)
+
+
+def test_pca_refuses_values_past_int64_quantization(ctx, spark):
+    # |x| >= 2^43 quantizes past 2^63: not an int64, refused loudly
+    df = spark.createDataFrame(
+        [(i, [1e13 + i, 1.0]) for i in range(8)],
         "vec_id LONG, embedding ARRAY<DOUBLE>")
-    with pytest.raises(Exception, match="entries"):
+    with pytest.raises(Exception, match=r"2\^63"):
         run_op(ctx, "embedding.pca", [df], id_column="vec_id",
-               components=1, iterations=4, output="components",
-               moments="gemm").collect()
-    out = run_op(ctx, "embedding.pca", [df], id_column="vec_id",
-                 components=1, iterations=4, output="components",
-                 moments="entries").collect()
-    assert len(out) == 1
+               components=1, iterations=4, output="components").collect()
 
 
 def test_pca_nan_vectors_are_invalid_in_both_engines(ctx, spark):
-    # review r10: NaN passed the validity filter — the entries path
-    # silently quantized NaN to 0 while numpy's int64 cast yields
-    # platform garbage. NaN-bearing vectors are now INVALID like
-    # NULL-holding ones: excluded from moments, NULL projections,
-    # identical in BOTH engines.
-    rows = [(i, [float(i + d) for d in range(3)]) for i in range(10)]
-    rows.append((99, [1.0, float("nan"), 2.0]))
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    outs = {}
-    for eng in ("gemm", "entries"):
-        out = run_op(ctx, "embedding.pca", [df], id_column="vec_id",
-                     components=1, iterations=4, moments=eng)
-        got = {r["vec_id"]: r["pc1"] for r in out.collect()}
-        assert got[99] is None  # NaN vector projects NULL
-        outs[eng] = got
-    assert outs["gemm"] == outs["entries"]
+    # review r10: NaN passed the validity filter — a skinny-entry
+    # engine silently quantized NaN to 0 while numpy's int64 cast
+    # yields platform garbage. NaN-bearing vectors are INVALID like
+    # NULL-holding ones: excluded from moments, NULL projections.
+    rows = {i: [float(i + d) for d in range(3)] for i in range(10)}
+    df = spark.createDataFrame(
+        [*rows.items(), (99, [1.0, float("nan"), 2.0])],
+        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    got = _assert_matches_py_pca(ctx, df, rows, r=1, iterations=4)
+    assert got[99] == [None]  # NaN vector projects NULL
 
 
 def test_pca_inf_vectors_invalid_in_both_engines(ctx, spark):
-    # review r10 second pass: Inf passed the NaN-only check — the
-    # entries path quantized Inf to Long.MAX (silent moment poison),
-    # the gemm path aborted the whole query. Non-finite = invalid.
-    rows = [(i, [float(i + d) for d in range(3)]) for i in range(10)]
-    rows.append((99, [1.0, float("inf"), 2.0]))
-    rows.append((98, [float("-inf"), 1.0, 2.0]))
-    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    outs = {}
-    for eng in ("gemm", "entries"):
-        out = run_op(ctx, "embedding.pca", [df], id_column="vec_id",
-                     components=1, iterations=4, moments=eng)
-        got = {r["vec_id"]: r["pc1"] for r in out.collect()}
-        assert got[99] is None and got[98] is None
-        assert got[0] is not None
-        outs[eng] = got
-    assert outs["gemm"] == outs["entries"]
+    # review r10 second pass: Inf passed the NaN-only check — a
+    # skinny-entry engine quantized Inf to Long.MAX (silent moment
+    # poison), the gemm path aborted the whole query. Non-finite =
+    # invalid: excluded from moments, NULL projections.
+    rows = {i: [float(i + d) for d in range(3)] for i in range(10)}
+    df = spark.createDataFrame(
+        [*rows.items(), (99, [1.0, float("inf"), 2.0]),
+         (98, [float("-inf"), 1.0, 2.0])],
+        "vec_id LONG, embedding ARRAY<DOUBLE>")
+    got = _assert_matches_py_pca(ctx, df, rows, r=1, iterations=4)
+    assert got[99] == [None] and got[98] == [None]

@@ -8,7 +8,7 @@ import pytest
 
 from conveyor_spark.compiler import compile_pipeline, run_pipeline
 from conveyor_spark.config.spec import parse_spec
-from conveyor_spark.errors import ConveyorError
+from conveyor_spark.errors import ConfigError, ConveyorError
 
 
 def test_json_filter_json(spark, tmp_path):
@@ -474,3 +474,24 @@ def test_run_pipeline_restores_global_spark_confs(spark, tmp_path):
     run_pipeline(spark, spec)
     assert out.exists()
     assert spark.conf.get(key) == before  # restored, not leaked
+
+
+def test_run_pipeline_restores_confs_set_before_a_static_key(spark, tmp_path):
+    """A static key fails part-way through [global.spark]: the
+    runtime key set before it must be put back, not left on the
+    shared session, and the static key is a ConfigError naming it."""
+    src = tmp_path / "u.json"
+    src.write_text(json.dumps([{"id": 1}]))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spec = parse_spec({
+        "global": {"spark": {key: "16m",
+                             "spark.sql.warehouse.dir": "/tmp/x"}},
+        "stages": [
+            {"id": "r", "function": "json.read",
+             "config": {"path": str(src), "format": "records"}},
+        ],
+    })
+    with pytest.raises(ConfigError, match="warehouse"):
+        run_pipeline(spark, spec)
+    assert spark.conf.get(key) == before

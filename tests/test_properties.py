@@ -340,10 +340,11 @@ class TestSqlStringExprParity:
             assert got[i] == py_simhash(toks)
 
 
-class TestGemmJoinParity:
-    """The Arrow/BLAS vector paths must be indistinguishable from the
-    pure-JVM join formulations on arbitrary inputs — including
-    duplicate ids, NULL buckets, singleton buckets, and cosine ties."""
+class TestBucketReferenceParity:
+    """The per-bucket Arrow/BLAS vector ops must be indistinguishable
+    from the unbucketed pure-JVM ops run on each bucket's slice, on
+    arbitrary inputs — including duplicate ids, singleton buckets and
+    cosine ties."""
 
     @given(
         rows=st.lists(
@@ -358,9 +359,9 @@ class TestGemmJoinParity:
     )
     @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
     def test_dedup_embedding_parity(self, spark, ctx, rows, threshold):
-        from tests.conftest import run_op
+        from tests.conftest import dedup_embedding_reference, run_op
 
-        # zero vectors divide by zero identically on both paths — skip
+        # zero vectors have no cosine — skip
         rows = [(i, b, [float(x) for x in v]) for i, b, v in rows
                 if any(v)]
         if len(rows) < 2:
@@ -374,7 +375,7 @@ class TestGemmJoinParity:
             (r["id_a"], r["id_b"], r["cosine"]) for r in d.collect()
         )
         assert as_set(run_op(ctx, "dedup.embedding", [df], **kw)) == \
-            as_set(run_op(ctx, "dedup.embedding", [df], method="join", **kw))
+            as_set(dedup_embedding_reference(ctx, df, **kw))
 
     @given(
         rows=st.lists(
@@ -390,7 +391,7 @@ class TestGemmJoinParity:
     )
     @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
     def test_knn_ivf_parity(self, spark, ctx, rows, k):
-        from tests.conftest import run_op
+        from tests.conftest import knn_ivf_reference, run_op
 
         rows = [(i, b, [float(x) for x in v]) for i, b, v in rows if any(v)]
         if len(rows) < 2:
@@ -403,7 +404,7 @@ class TestGemmJoinParity:
                   query_ids=qids, column="embedding")
         as_set = lambda d: sorted(tuple(r) for r in d.collect())
         assert as_set(run_op(ctx, "knn.ivf", [df], **kw)) == \
-            as_set(run_op(ctx, "knn.ivf", [df], method="join", **kw))
+            as_set(knn_ivf_reference(ctx, df, **kw))
 
 
 class TestRound6OpProperties:

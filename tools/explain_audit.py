@@ -462,8 +462,8 @@ CHECKS = [
     ),
     (
         "q127_embedding_pca",
-        "PCA: moments via skinny-entry explode + partial agg (small "
-        "plan, map-side combine), projection codegen, zero Python",
+        "PCA: moments collected at build (one Q^T Q matmul per Arrow "
+        "batch + partial agg), projection codegen, zero Python",
         lambda p, o: "BatchEvalPython" not in p and "MapInPandas" not in p
         and "CartesianProduct" not in p,
     ),
