@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from typing import Any
 
+import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -59,12 +60,12 @@ def _infer_dim(df: DataFrame, id_column: str, column: str, op: str) -> int:
         df.filter(F.col(column).isNotNull() & (F.size(column) > 0))
         .select(F.min(F.struct(
             F.col(id_column).alias("i"), F.size(column).alias("s")
-        )).alias("m"))
+        ))["s"].alias("s"))  # only the size: any id type stays in the JVM
         .first()
     )
-    if row is None or row["m"] is None:
+    if row is None or row["s"] is None:
         raise ConfigError(f"{op}: no non-null vectors")
-    return int(row["m"]["s"])
+    return int(row["s"])
 
 
 def vec_ok(vec, dim: int):
@@ -246,24 +247,14 @@ def _sub_dist_sql(vec_sql: str, start: int, codeword: list[float]) -> str:
     )
 
 
-def _argmin_code_sql(vec_sql: str, s: int, sd: int,
-                     codewords: list[list[float]]) -> str:
-    """SQL for the 0-based argmin codeword index of subspace s —
-    array_position(dists, array_min(dists)) - 1, ties to the first
-    (lowest) index, exactly as the Column form folded it."""
-    dists = "array(" + ", ".join(
-        _sub_dist_sql(vec_sql, s * sd, cw) for cw in codewords
-    ) + ")"
-    return f"CAST(array_position({dists}, array_min({dists})) - 1 AS INT)"
-
-
 def _train_pq(ctx, clean: DataFrame, dim: int, m: int, k: int, iterations: int,
               op: str = "embedding.pq"):
     """Shared PQ trainer: per-subspace Lloyd's with the module's
     determinism recipe, ALL subspaces advanced in one distributed
     pass per iteration. ``clean`` is _clean's training frame. Returns
     (codebooks[m][k][sd], final assigned DataFrame with
-    __c0.._c{m-1} columns from the post-update encode pass)."""
+    __c0.._c{m-1} columns from the post-update encode pass — knn.pq's
+    inline codes, and the reference pq_encoder is tested against)."""
     sd = dim // m
     init = _first_k(ctx, clean, k)
     if len(init) < k:
@@ -284,9 +275,9 @@ def _train_pq(ctx, clean: DataFrame, dim: int, m: int, k: int, iterations: int,
         # that Catalyst re-analyzes per job and interpreted mode
         # evaluates twice per row. CollapseProject will NOT merge the
         # two selects (the dists attr is referenced twice and is
-        # non-cheap), so the literals stay single-copy. Arithmetic is
-        # _argmin_code_sql's exactly: same folds, same tie rule —
-        # the q120/q121/q126/q161 oracles pin it.
+        # non-cheap), so the literals stay single-copy. The argmin
+        # ties to the lowest index; pq_encoder reproduces it bit for
+        # bit, and the q120/q121/q126/q161 oracles pin both.
         dists = df_in.selectExpr(
             "__kid", "__v",
             *["array(" + ", ".join(
@@ -336,60 +327,88 @@ def _train_pq(ctx, clean: DataFrame, dim: int, m: int, k: int, iterations: int,
     return codebooks, assign(clean)
 
 
-def check_encode_method(config: dict, op: str) -> str:
-    """Loud validation: registry `allowed` only WARNS, so a typo
-    ('GEMM', 'arrow') would silently run the fold engine — and since
-    the engines are bit-exact, nothing downstream would ever surface
-    that the 100x-cheaper path the user asked for never ran."""
+def check_encode_method(config: dict, op: str) -> None:
+    """Validate the retired ``encode_method`` param: "fold" and
+    "gemm" both run ``pq_encoder``, but a typo ('GEMM', 'arrow') is
+    still an error — registry `allowed` only WARNS."""
     em = config.get("encode_method", "fold")
     if em not in ("fold", "gemm"):
         raise ConfigError(
             f"{op}: encode_method={em!r} is not one of 'fold'|'gemm'"
         )
-    return em
 
 
-def gemm_encode_codes(df: DataFrame, id_col: str, vec_col: str,
-                      out_id: str, out_code: str,
-                      codebooks: list, m: int, sd: int) -> DataFrame:
-    """PQ-encode vectors via Arrow-batched numpy — the scale path for
-    the argmin expression (the JVM fold is a CodegenFallback HOF:
-    interpreted, ~ms/row; measured 57 s of executor CPU for 2000 rows
-    on q161's code projection). BIT-EXACT parity with
-    _argmin_code_sql, not margin-based: distances accumulate
-    per-dimension SEQUENTIALLY from 0.0 (a python loop over the <=128
-    subspace dims — numpy's pairwise-sum would reorder the adds), so
-    every double equals the JVM fold's, and np.argmin's
-    first-occurrence tie rule is array_position's ties-to-lowest.
-    Input rows must already be vec_ok-clean (exactly m*sd finite
-    elements)."""
+def pq_encoder(codebooks: list, m: int, sd: int):
+    """The one PQ / cell encode engine: a scalar Arrow UDF mapping a
+    vector column to its array<int> code (m argmin indices), NULL
+    where the vector fails vec_ok at dim m*sd. Spark sends ONLY the
+    vector column to Python and re-attaches the code in the JVM, so
+    ids and passthrough columns never cross Arrow, whatever their
+    type (year-month / calendar intervals included).
+
+    Bit-exact with _train_pq's JVM fold (the q121/q126 oracles pin
+    it): distances accumulate per-dimension SEQUENTIALLY from 0.0 (a
+    python loop over the subspace dims — numpy's pairwise sum would
+    reorder the adds), and np.argmin's first-occurrence rule is
+    array_position's ties-to-lowest. Validity is vec_ok replicated in
+    numpy: a NULL element coerces to NaN under float64, so one
+    isfinite sweep covers NULL/NaN/Inf alike. embedding.assign_cells
+    passes its centroid table as one dim-wide subspace (m=1)."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
 
-    cb = [np.asarray([[float(x) for x in cw] for cw in codebooks[s]],
-                     dtype=np.float64) for s in range(m)]
-    idt = df.schema[id_col].dataType.simpleString()
+    dim = m * sd
+    cb = [np.asarray(codebooks[s], dtype=np.float64) for s in range(m)]
 
-    def encode(batches):
-        for pdf in batches:
-            if pdf.empty:
-                yield pd.DataFrame({out_id: [], out_code: []})
+    @pandas_udf("array<int>")
+    def encode(vecs: pd.Series) -> pd.Series:
+        out: list = [None] * len(vecs)
+        valid_idx, mats = [], []
+        for i, v in enumerate(vecs):
+            if v is None:
                 continue
-            v = np.asarray(pdf[vec_col].to_list(), dtype=np.float64)
-            n = len(v)
-            codes = np.empty((n, m), dtype=np.int32)
+            try:
+                a = np.asarray(v, dtype=np.float64)
+            except (TypeError, ValueError):
+                continue
+            if a.shape != (dim,) or not np.isfinite(a).all():
+                continue
+            valid_idx.append(i)
+            mats.append(a)
+        if mats:
+            V = np.stack(mats)
+            codes = np.empty((len(mats), m), dtype=np.int32)
             for s in range(m):
-                sub = v[:, s * sd:(s + 1) * sd]
-                d = np.zeros((n, cb[s].shape[0]), dtype=np.float64)
-                for i in range(sd):  # sequential over dims = the fold
-                    t = sub[:, i, None] - cb[s][None, :, i]
+                sub = V[:, s * sd:(s + 1) * sd]
+                d = np.zeros((len(mats), cb[s].shape[0]), dtype=np.float64)
+                for j in range(sd):  # sequential over dims = the fold
+                    t = sub[:, j, None] - cb[s][None, :, j]
                     d += t * t
                 codes[:, s] = d.argmin(axis=1)
-            yield pd.DataFrame({out_id: pdf[id_col],
-                                out_code: list(codes)})
+            for i, c in zip(valid_idx, codes):
+                out[i] = c
+        return pd.Series(out, dtype=object)
 
-    return df.select(id_col, vec_col).mapInPandas(
-        encode, schema=f"{out_id} {idt}, {out_code} array<int>")
+    # the codes ARE deterministic; the flag keeps the optimizer from
+    # pushing a consumer's filter on the codes (knn.pq's validity
+    # guard, knn.lsh's norm filter) below the projection as a second
+    # copy of the UDF, which ran the encode twice per row
+    return encode.asNondeterministic()
+
+
+def _has_type(dt, kinds: tuple) -> bool:
+    """True when ``dt`` is, or nests at any depth, one of ``kinds``."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, kinds):
+        return True
+    if isinstance(dt, T.ArrayType):
+        return _has_type(dt.elementType, kinds)
+    if isinstance(dt, T.MapType):
+        return _has_type(dt.keyType, kinds) or _has_type(dt.valueType, kinds)
+    if isinstance(dt, T.StructType):
+        return any(_has_type(f.dataType, kinds) for f in dt.fields)
+    return False
 
 
 def _no_arrow_return(dt) -> bool:
@@ -398,92 +417,7 @@ def _no_arrow_return(dt) -> bool:
     return type in mapInPandas" for those; day-time intervals pass)."""
     from pyspark.sql import types as T
 
-    if isinstance(dt, (T.YearMonthIntervalType, T.CalendarIntervalType)):
-        return True
-    if isinstance(dt, T.ArrayType):
-        return _no_arrow_return(dt.elementType)
-    if isinstance(dt, T.MapType):
-        return _no_arrow_return(dt.keyType) or _no_arrow_return(dt.valueType)
-    if isinstance(dt, T.StructType):
-        return any(_no_arrow_return(f.dataType) for f in dt.fields)
-    return False
-
-
-def gemm_encode_column(df: DataFrame, column: str, out_col: str,
-                       codebooks: list, m: int, sd: int, op: str) -> DataFrame:
-    """Whole-row variant of gemm_encode_codes: append ``out_col``
-    (array<int> PQ code, NULL where the row fails vec_ok) to EVERY
-    input row in one Arrow pass — no id join-back, so encoding a
-    100 TB corpus stays a single shuffle-free scan exactly like the
-    fold path it replaces. Validity is vec_ok's predicate replicated
-    in numpy (None element -> NaN under float64 coercion, so one
-    isfinite sweep covers NULL/NaN/Inf alike); codes are bit-exact
-    vs _argmin_code_sql (sequential per-dim accumulation preserves
-    the JVM fold's IEEE order, first-occurrence argmin = the
-    ties-to-lowest array_position rule). Cost note: all columns ride
-    the Arrow batches (same class as the fold path streaming all
-    columns through the projection — neither shuffles), so a column
-    Arrow cannot return is a ConfigError here, not a Spark error."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    for f in df.schema.fields:
-        if f.name != out_col and _no_arrow_return(f.dataType):
-            raise ConfigError(
-                f"{op}: column {f.name!r} ({f.dataType.simpleString()}) "
-                "cannot pass through the encode_method='gemm' Arrow pass; "
-                "use encode_method='fold'"
-            )
-    dim = m * sd
-    cb = [np.asarray([[float(x) for x in cw] for cw in codebooks[s]],
-                     dtype=np.float64) for s in range(m)]
-    code_field = T.StructField(out_col, T.ArrayType(T.IntegerType()))
-    if out_col in df.columns:
-        # withColumn-replace parity: same name keeps its position
-        fields = [code_field if f.name == out_col else f
-                  for f in df.schema.fields]
-    else:
-        fields = list(df.schema.fields) + [code_field]
-    out_schema = T.StructType(fields)
-    names = [f.name for f in fields]
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            n = len(pdf)
-            codes_out: list = [None] * n
-            valid_idx, mats = [], []
-            for i, v in enumerate(pdf[column]):
-                if v is None:
-                    continue
-                try:
-                    a = np.asarray(v, dtype=np.float64)
-                except (TypeError, ValueError):
-                    continue
-                if a.shape != (dim,) or not np.isfinite(a).all():
-                    continue
-                valid_idx.append(i)
-                mats.append(a)
-            if mats:
-                V = np.stack(mats)
-                codes = np.empty((len(mats), m), dtype=np.int32)
-                for s in range(m):
-                    sub = V[:, s * sd:(s + 1) * sd]
-                    d = np.zeros((len(mats), cb[s].shape[0]),
-                                 dtype=np.float64)
-                    for j in range(sd):  # sequential over dims = the fold
-                        t = sub[:, j, None] - cb[s][None, :, j]
-                        d += t * t
-                    codes[:, s] = d.argmin(axis=1)
-                for row_i, c in zip(valid_idx, codes):
-                    codes_out[row_i] = [int(x) for x in c]
-            pdf = pdf.copy()
-            pdf[out_col] = codes_out
-            yield pdf[names]
-
-    return df.mapInPandas(encode, schema=out_schema)
+    return _has_type(dt, (T.YearMonthIntervalType, T.CalendarIntervalType))
 
 
 def _clean(ctx: OpContext, df: DataFrame, id_column: str, column: str,
@@ -595,9 +529,8 @@ def _parse_codebooks(ctx: OpContext, codebook_df: DataFrame, op: str,
           desc="codes: input + pq_code array<int>; codebooks: m*k rows"),
         P("output_column", default="pq_code", desc="Code column"),
         P("encode_method", default="fold", allowed=("fold", "gemm"),
-          desc="Engine for the final encode pass (output='codes'): "
-               "fold = JVM two-step argmin; gemm = Arrow numpy, "
-               "bit-exact (training itself always runs the fold)"),
+          desc="Retired: both values run the one Arrow UDF encode "
+               "and give identical codes (output='codes' only)"),
     ],
     example={"id_column": "doc_id", "column": "embedding", "m": 4,
              "k": 4, "iterations": 2},
@@ -614,8 +547,9 @@ def embedding_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     iteration (per-row argmin per subspace is a codegen'd expression
     over literal codebooks; one (subspace, cluster, dim) aggregate
     collects m*k*dim rows). Codes are the argmin under the POST-loop
-    codebooks, so train-then-encode replays deterministically —
-    same floor-quantized int64 centroid recipe as embedding.kmeans,
+    codebooks (one pq_encoder pass; ``encode_method`` is retired), so
+    train-then-encode replays deterministically — same
+    floor-quantized int64 centroid recipe as embedding.kmeans,
     oracle-replayable in SQL (q121).
 
     Scale: per iteration one pass over the data; codebooks are
@@ -639,7 +573,7 @@ def embedding_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     if output not in ("codes", "codebooks"):
         raise ConfigError("embedding.pq: output must be codes|codebooks")
     out_col = config.get("output_column", "pq_code")
-    encode_method = check_encode_method(config, "embedding.pq")
+    check_encode_method(config, "embedding.pq")
     if output == "codebooks" and "encode_method" in config:
         raise ConfigError(
             "embedding.pq: encode_method configures the ENCODE pass and "
@@ -653,7 +587,7 @@ def embedding_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
         raise ConfigError(
             f"embedding.pq: dim {dim} not divisible by m={m}"
         )
-    codebooks, encoded = _train_pq(ctx, clean, dim, m, k, iterations)
+    codebooks, _ = _train_pq(ctx, clean, dim, m, k, iterations)
 
     if output == "codebooks":
         rows = [
@@ -667,21 +601,10 @@ def embedding_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
         ctx.memo(("rows", out, _CODEBOOK_COLS), lambda: [
             dict(zip(_CODEBOOK_COLS, r)) for r in rows])
         return out
-    if encode_method == "gemm":
-        # the final encode pass under the POST-loop codebooks, as an
-        # Arrow numpy argmin instead of the interpreted JVM fold —
-        # bit-exact (gemm_encode_codes' parity contract); training
-        # iterations above always ran the fold, so the codebooks are
-        # identical either way
-        codes = gemm_encode_codes(
-            clean, "__kid", "__v", "__kid", out_col, codebooks, m,
-            dim // m,
-        )
-    else:
-        codes = encoded.select(
-            "__kid",
-            F.array(*[F.col(f"__c{s}") for s in range(m)]).alias(out_col),
-        )
+    # the final encode under the POST-loop codebooks, through the
+    # one encode engine (bit-exact with training's fold assign)
+    codes = clean.select(
+        "__kid", pq_encoder(codebooks, m, dim // m)("__v").alias(out_col))
     return df.join(
         codes, df[id_column] == codes["__kid"], "left"
     ).drop("__kid")
@@ -701,9 +624,8 @@ def embedding_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
         P("dim", "integer", min=1,
           desc="Optional cross-check against the codebooks"),
         P("encode_method", default="fold", allowed=("fold", "gemm"),
-          desc="fold: JVM two-step argmin projection; gemm: "
-               "Arrow-batched numpy (bit-exact, ~100x less CPU/row "
-               "— the 100 TB deployment encode)"),
+          desc="Retired: both values run the one Arrow UDF encode "
+               "and give identical codes"),
     ],
     example={"id_column": "doc_id", "column": "embedding"},
     tags=["embedding", "ann", "compression", "datapipe"],
@@ -717,17 +639,13 @@ def embedding_pq_encode(ctx: OpContext, inputs: list[DataFrame], config: dict[st
     training, so encode(train_corpus) reproduces embedding.pq's own
     codes exactly (tested).
 
-    encode_method picks the argmin engine, results identical (tested
-    row-for-row, NULLs included): 'fold' evaluates the codebook
-    distances as JVM SQL — TWO-step (distances projected once, argmin
-    reads the attribute), because the one-step form double-inlined
-    the m*k literal distance array into array_position AND array_min
-    (the expression-bloat _train_pq's assign escaped in r12) and the
-    aggregate/zip_with HOFs are CodegenFallback (interpreted,
-    ~ms/row); 'gemm' runs the same distances as Arrow-batched numpy
-    with the fold's sequential per-dim accumulation (bit-exact, the
-    q161 parity contract) — the right engine for the corpus-scale
-    encode this op exists for. Both are one shuffle-free scan."""
+    The codes come from pq_encoder: one scalar Arrow UDF over the
+    vector column, a shuffle-free scan that appends ``output_column``
+    (NULL where the vector fails vec_ok; an existing column of that
+    name is replaced in place). Only the vectors cross into Python,
+    so every other column passes through untouched, whatever its
+    type. ``encode_method`` is retired: "fold" and "gemm" both run
+    this engine."""
     df, codebook_df = inputs
     id_column = config.get("id_column")
     if not id_column:
@@ -737,47 +655,12 @@ def embedding_pq_encode(ctx: OpContext, inputs: list[DataFrame], config: dict[st
         if c not in df.columns:
             raise ConfigError(f"embedding.pq_encode: no column {c!r}")
     out_col = config.get("output_column", "pq_code")
-    codebooks, m, kw, sd, dim = _parse_codebooks(
+    check_encode_method(config, "embedding.pq_encode")
+    codebooks, m, _, sd, _ = _parse_codebooks(
         ctx, codebook_df, "embedding.pq_encode", config
     )
-
-    if check_encode_method(config, "embedding.pq_encode") == "gemm":
-        return gemm_encode_column(df, column, out_col, codebooks, m, sd,
-                                  "embedding.pq_encode")
-
-    vec = F.col(column)
-    ok = vec_ok(vec, dim)
-    vec_sql = f"`{column.replace('`', '``')}`"
-    # two-step: distance arrays land in their own projection so the
-    # argmin reads ATTRIBUTES — CollapseProject keeps the m*k literal
-    # arrays single-copy (each __pqd is referenced twice and is
-    # non-cheap), vs the one-step form that embedded them twice per
-    # subspace (~150 KB of expression text Catalyst re-analyzed per
-    # job). Same folds, same ties-to-lowest rule as _argmin_code_sql.
-    tmp = [f"__pqd{s}" for s in range(m)]
-    clash = [t for t in tmp if t in df.columns]
-    if clash:
-        raise ConfigError(
-            f"embedding.pq_encode: input columns {clash} collide with "
-            "the internal distance projection; rename them"
-        )
-    dists = df.select(
-        "*",
-        *[F.expr("array(" + ", ".join(
-            _sub_dist_sql(vec_sql, s * sd, cw) for cw in codebooks[s]
-          ) + ")").alias(tmp[s]) for s in range(m)],
-    )
-    codes = F.array(*[
-        F.expr(f"CAST(array_position({tmp[s]}, array_min({tmp[s]})) - 1 "
-               "AS INT)")
-        for s in range(m)
-    ])
-    keep = [c for c in df.columns if c != out_col]
-    if out_col in df.columns:  # withColumn-replace parity: keep position
-        cols = [F.when(ok, codes).alias(out_col) if c == out_col
-                else F.col(c) for c in df.columns]
-        return dists.select(*cols)
-    return dists.select(*keep, F.when(ok, codes).alias(out_col))
+    return df.withColumn(
+        out_col, pq_encoder(codebooks, m, sd)(F.col(column)))
 
 
 @register(
@@ -1222,9 +1105,8 @@ def knn_ivfpq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
         P("centroid_cell_column", default="cluster",
           desc="Cell id column of the centroids (second) input"),
         P("encode_method", default="fold", allowed=("fold", "gemm"),
-          desc="fold: JVM two-step argmin projection; gemm: "
-               "Arrow-batched numpy (bit-exact — the corpus-scale "
-               "stamp, like embedding.pq_encode's)"),
+          desc="Retired: both values run the one Arrow UDF encode "
+               "and give identical cells"),
     ],
     example={"column": "embedding", "output_column": "ivf_cell"},
     tags=["embedding", "clustering", "ann", "datapipe"],
@@ -1242,17 +1124,16 @@ def embedding_assign_cells(ctx: OpContext, inputs: list[DataFrame], config: dict
     output at iterations=T exactly (tested); rows failing vec_ok get
     NULL (kmeans assign parity).
 
-    encode_method mirrors pq_encode: 'fold' projects the k distance
-    folds once and argmins the attribute (two-step — no double-
-    inlined literal array); 'gemm' runs the identical sequential
-    per-dim accumulation as Arrow-batched numpy (bit-exact, the
-    gemm_encode_column contract with the centroid table as one
-    dim-wide subspace) — the engine for the corpus-scale stamp."""
+    The cell is pq_encoder's one-element code with the centroid table
+    as a single dim-wide subspace: one scalar Arrow UDF over the
+    vector column, every other column untouched. ``encode_method`` is
+    retired: "fold" and "gemm" both run this engine."""
     df, centroid_df = inputs
     column = config.get("column", "embedding")
     if column not in df.columns:
         raise ConfigError(f"embedding.assign_cells: no column {column!r}")
     out_col = config.get("output_column", "cell")
+    check_encode_method(config, "embedding.assign_cells")
     # dim comes from the centroid table — the quantizer defines the
     # space; a corpus row of any other length is simply invalid
     centroids, dim = _parse_centroids(
@@ -1260,47 +1141,5 @@ def embedding_assign_cells(ctx: OpContext, inputs: list[DataFrame], config: dict
         config.get("centroid_cell_column", "cluster"),
     )
 
-    if check_encode_method(config, "embedding.assign_cells") == "gemm":
-        # the centroid table IS a one-subspace codebook (m=1,
-        # sd=dim): gemm_encode_column's code array has one element —
-        # the cell — with vec_ok NULL-stamping built in
-        tmp = "__acell"
-        if tmp in df.columns:
-            raise ConfigError(
-                "embedding.assign_cells: input column '__acell' "
-                "collides with the internal code projection; rename it"
-            )
-        coded = gemm_encode_column(df, column, tmp, [centroids], 1, dim,
-                                   "embedding.assign_cells")
-        cols = [F.element_at(tmp, 1).alias(out_col) if c == out_col
-                else F.col(c) for c in df.columns]
-        if out_col not in df.columns:
-            cols.append(F.element_at(tmp, 1).alias(out_col))
-        return coded.select(*cols)
-
-    vec = F.col(column)
-    ok = vec_ok(vec, dim)
-    vec_sql = f"`{column.replace('`', '``')}`"
-    tmp = "__acdist"
-    if tmp in df.columns:
-        raise ConfigError(
-            "embedding.assign_cells: input column '__acdist' collides "
-            "with the internal distance projection; rename it"
-        )
-    # two-step: the k distance folds land in ONE projected array so
-    # the argmin reads an attribute (pq_encode's fix — the one-step
-    # form would inline the k*dim literals into array_position AND
-    # array_min)
-    dists = df.select(
-        "*",
-        F.expr("array(" + ", ".join(
-            _sub_dist_sql(vec_sql, 0, c) for c in centroids
-        ) + ")").alias(tmp),
-    )
-    cell = (F.array_position(F.col(tmp), F.array_min(F.col(tmp))) - 1) \
-        .cast("int")
-    cols = [F.when(ok, cell).alias(out_col) if c == out_col
-            else F.col(c) for c in df.columns]
-    if out_col not in df.columns:
-        cols.append(F.when(ok, cell).alias(out_col))
-    return dists.select(*cols)
+    enc = pq_encoder([centroids], 1, dim)
+    return df.withColumn(out_col, F.element_at(enc(F.col(column)), 1))

@@ -720,9 +720,11 @@ def dedup_embedding(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     The engine follows from the input. With a bucket column, each
     bucket is one Arrow batch and a chunked BLAS M @ M.T emits the
     surviving pairs. Without one (`allow_full`), or when the id is a
-    year-month or calendar interval (which Arrow cannot return), a
-    distributed pair join computes the same pairs. ``method`` is
-    retired: "gemm" and "join" both run this choice.
+    year-month interval (which Arrow cannot return), a distributed
+    pair join computes the same pairs. A calendar interval id is
+    refused: Arrow cannot return it and the pair join cannot order
+    it. ``method`` is retired: "gemm" and "join" both run this
+    choice.
     """
     df = inputs[0]
     column = config.get("column", "embedding")
@@ -738,9 +740,20 @@ def dedup_embedding(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
             "dedup.embedding without 'bucket_column' is a full O(n^2) cross join; "
             "set allow_full=true to force"
         )
-    from conveyor_spark.datapipe.clustering import _no_arrow_return
+    from pyspark.sql import types as T
 
-    if bucket and not _no_arrow_return(df.schema[id_column].dataType):
+    from conveyor_spark.datapipe.clustering import _has_type, _no_arrow_return
+
+    id_type = df.schema[id_column].dataType
+    if _has_type(id_type, (T.CalendarIntervalType,)):
+        # neither engine can take it: Arrow cannot return it, and the
+        # pair join's a.__id < b.__id cannot order it
+        raise ConfigError(
+            f"dedup.embedding: id column {id_column!r} is "
+            f"{id_type.simpleString()}, which the pair join cannot order; "
+            "cast it (e.g. to string or bigint) first"
+        )
+    if bucket and not _no_arrow_return(id_type):
         # Per-bucket BLAS path: each vector crosses the
         # bucket shuffle ONCE and Arrow-lands as a row of an (n_b, d)
         # matrix; a chunked M @ M.T emits only the surviving skinny
@@ -760,7 +773,7 @@ def dedup_embedding(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
         import numpy as np
         import pandas as pd
 
-        idt = df.schema[id_column].dataType.simpleString()
+        idt = id_type.simpleString()
         thr = threshold
 
         def bucket_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":

@@ -348,7 +348,8 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
     and the vector-carrying exact stage shrinks from |candidates| to
     |queries| * rerank rows. Returns the surviving skinny pairs."""
     from conveyor_spark.datapipe.clustering import (
-        _argmin_code_sql, _clean, _parse_codebooks, _train_pq, vec_ok,
+        _clean, _parse_codebooks, _train_pq, check_encode_method,
+        pq_encoder, vec_ok,
     )
 
     m = int(config.get("m", 4))
@@ -397,40 +398,18 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
     else:
         if dim % m != 0:
             raise ConfigError(f"knn.lsh: dim {dim} not divisible by m={m}")
+        check_encode_method(config, "knn.lsh")
         sd = dim // m
         clean, _ = _clean(ctx, corpus, id_column, column, dim, "knn.lsh")
-        codebooks, encoded = _train_pq(ctx, clean, dim, m, kw, iterations,
-                                       op="knn.lsh")
-        from conveyor_spark.datapipe.clustering import check_encode_method
-
-        if check_encode_method(config, "knn.lsh") == "gemm":
-            # the scale encode: Arrow-batched numpy argmin, bit-exact
-            # vs the fold (per-dim sequential accumulation — see
-            # gemm_encode_codes; q161's oracle proves the parity
-            # end-to-end). The JVM fold is an interpreted HOF at
-            # ~ms/row — at 358k corpus rows that is minutes of
-            # executor CPU the gemm path does in a GEMM-shaped pass.
-            from conveyor_spark.datapipe.clustering import (
-                gemm_encode_codes,
-            )
-            ccodes = gemm_encode_codes(
-                clean, "__kid", "__v", "neighbor_id", "__cc",
-                codebooks, m, sd,
-            )
-        else:
-            ccodes = encoded.select(
-                F.col("__kid").alias("neighbor_id"),
-                F.array(*[F.col(f"__c{s}") for s in range(m)]).alias("__cc"),
-            # materialization FENCE: each argmin is ~32 KB of literal
-            # folds, and CollapseProject would inline all m of them
-            # into EVERY __cc reference in the norm/score expressions
-            # — a multi-MB expression tree whose 32-way codegen OOMed
-            # an 8 GB heap at 1024x (measured; task binaries hit
-            # 33 MB). The repartition blocks the logical merge, so
-            # downstream expressions see a plain 40 B/row attribute —
-            # and it pre-partitions codes by the join key, so the
-            # pair join's exchange is this one
-            ).repartition(F.col("neighbor_id"))
+        codebooks, _ = _train_pq(ctx, clean, dim, m, kw, iterations,
+                                 op="knn.lsh")
+        # the one encode engine, a scalar Arrow UDF over the vectors:
+        # bit-exact with the training fold (q161's oracle proves it);
+        # the JVM fold is an interpreted HOF at ~ms/row
+        ccodes = clean.select(
+            F.col("__kid").alias("neighbor_id"),
+            pq_encoder(codebooks, m, sd)("__v").alias("__cc"),
+        )
     if m * kw * kw > 65536:
         raise ConfigError(
             f"knn.lsh: SDC table m*codewords^2 = {m * kw * kw} exceeds the "
@@ -469,26 +448,14 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
             F.col("__ccn").alias("__qcn"),
         )
     else:
-        # encode the query side against the same codebooks (argmin
-        # expression, same tie rules as training — encode(train set)
-        # reproduces training codes exactly)
+        # encode the query side against the same codebooks (same
+        # engine and tie rules — encode(train set) reproduces the
+        # training codes exactly)
         qclean = queries_df.filter(
             vec_ok(F.col(column), dim)
         ).select(F.col(id_column).alias("query_id"), F.col(column).alias("__v"))
-        if check_encode_method(config, "knn.lsh") == "gemm" \
-                and codebook_df is None:
-            from conveyor_spark.datapipe.clustering import gemm_encode_codes
-            qenc = gemm_encode_codes(qclean, "query_id", "__v",
-                                     "query_id", "__qc", codebooks, m, sd)
-        else:
-            qenc = qclean.selectExpr(
-                "query_id",
-                "array(" + ", ".join(
-                    _argmin_code_sql("__v", s, sd, codebooks[s])
-                    for s in range(m)
-                ) + ") AS __qc",
-            # same CollapseProject fence as the corpus codes
-            ).repartition(F.col("query_id"))
+        qenc = qclean.select(
+            "query_id", pq_encoder(codebooks, m, sd)("__v").alias("__qc"))
         qcodes = with_norm(qenc, "query_id", "__qc", "__qcn")
 
     scored = (
@@ -545,10 +512,8 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
           desc="verify=pq inline training: Lloyd iterations (default 1 "
                "— the screen orders candidates, survivors are exact)"),
         P("encode_method", default="fold", allowed=("fold", "gemm"),
-          desc="verify=pq inline encode: fold = JVM expression; gemm = "
-               "Arrow-batched numpy argmin, BIT-exact parity (per-dim "
-               "sequential sums) at ~1000x less CPU/row — the 100 TB "
-               "choice (q161 oracles it)"),
+          desc="Retired (verify=pq inline mode): both values run the "
+               "one Arrow UDF encode and give identical results"),
         P("code_column",
           desc="verify=pq: corpus is PRE-ENCODED (embedding.pq "
                "output='codes'); requires the codebooks LAST input — "
@@ -585,7 +550,9 @@ def knn_lsh(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> 
     — the screen only ORDERS candidates; exactness comes from the
     re-rank); code_column + a codebooks last input is the pretrained
     deployment where the corpus vector column loads only for
-    survivors. Fully oracle-replayable (q161).
+    survivors. Codes come from clustering.pq_encoder (one scalar
+    Arrow UDF per side); ``encode_method`` is retired: "fold" and
+    "gemm" both run it. Fully oracle-replayable (q161).
     """
     corpus = inputs[0]
     id_column = config.get("id_column")

@@ -6665,23 +6665,21 @@ def q161_knn_lsh_pq_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return _op("knn.lsh", ctx, [e], id_column="vec_id", k=3, dim=64,
                bits=48, bands=4, max_bucket=1024, signature_method="gemm",
-               verify="pq", m=4, codewords=16, iterations=1, rerank=6,
-               encode_method="gemm")
+               verify="pq", m=4, codewords=16, iterations=1, rerank=6)
 
 
 @query("q162_pq_encode_gemm",
        _pq_oracle(m=4, kw=4, iterations=1, dim=64, nq=5, topk=3))
 def q162_pq_encode_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB deployment encode on its scale engine: q126's
-    train-once pipeline with embedding.pq_encode running
-    encode_method='gemm' (Arrow-batched numpy argmin) instead of the
-    JVM fold. Shares q126's oracle VERBATIM — the gemm engine's
-    contract is bit-exactness (sequential per-dim accumulation
-    preserves the fold's IEEE order, first-occurrence argmin = the
-    ties-to-lowest rule), so the same SQL must hash-match. This is
-    the operator-mode certification for VERDICT r12's #1: the op
-    whose docstring says "pq_encode the 100 TB corpus" no longer has
-    to ride an interpreted HOF to be oracle-green."""
+    """The retired-alias certification: q126's train-once pipeline
+    with embedding.pq_encode given encode_method='gemm'. Since the
+    encode-engine merge both encode_method values run the one Arrow
+    UDF encode, so this query and q126 (the default) must return the
+    same rows; sharing q126's oracle VERBATIM checks that the alias
+    still runs and still hash-matches. The encode's own contract is
+    bit-exactness with the training fold (sequential per-dim
+    accumulation preserves its IEEE order, first-occurrence argmin =
+    the ties-to-lowest rule)."""
     ctx = _ctx(spark)
     e = load_table(spark, sf_dir, "embeddings")
     books = _op("embedding.pq", ctx, [e], id_column="vec_id",
@@ -6790,8 +6788,7 @@ def q163_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 column="embedding", m=4, k=4, iterations=1, dim=64,
                 output="codebooks")
     enc = _op("embedding.pq_encode", ctx, [cells, books],
-              id_column="vec_id", column="embedding",
-              encode_method="gemm")
+              id_column="vec_id", column="embedding")
     q = _op("filter.apply", ctx, [e], expr="vec_id < 5")
     return _op("knn.ivfpq", ctx, [enc, q, cents, books],
                id_column="vec_id", column="embedding",
@@ -6887,8 +6884,8 @@ def q164_ivfpq_deploy(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB corpus actually gets indexed: train the coarse quantizer
     and the PQ codebooks once (here on the corpus; in production on
     a sample), stamp the corpus with embedding.assign_cells +
-    embedding.pq_encode — BOTH on encode_method='gemm', i.e. two
-    shuffle-free Arrow passes, zero training jobs on the big side —
+    embedding.pq_encode — two shuffle-free passes where only the
+    vectors cross into Python, zero training jobs on the big side —
     and search 40 queries' nprobe=2 of 16 cells (an 8x candidate
     cut) at codewords=16. q163 proves the composition at gate
     parameters with the two-kmeans-call contract; this query proves
@@ -6901,14 +6898,12 @@ def q164_ivfpq_deploy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 column="embedding", k=16, iterations=1, dim=64,
                 output="centroids")
     cells = _op("embedding.assign_cells", ctx, [e, cents],
-                column="embedding", output_column="ivf_cell",
-                encode_method="gemm")
+                column="embedding", output_column="ivf_cell")
     books = _op("embedding.pq", ctx, [e], id_column="vec_id",
                 column="embedding", m=4, k=16, iterations=1, dim=64,
                 output="codebooks")
     enc = _op("embedding.pq_encode", ctx, [cells, books],
-              id_column="vec_id", column="embedding",
-              encode_method="gemm")
+              id_column="vec_id", column="embedding")
     q = _op("filter.apply", ctx, [e], expr="vec_id < 40")
     return _op("knn.ivfpq", ctx, [enc, q, cents, books],
                id_column="vec_id", column="embedding",
@@ -6936,14 +6931,12 @@ def q165_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 column="embedding", k=16, iterations=1, dim=64,
                 output="centroids")
     cells = _op("embedding.assign_cells", ctx, [e, cents],
-                column="embedding", output_column="ivf_cell",
-                encode_method="gemm")
+                column="embedding", output_column="ivf_cell")
     books = _op("embedding.pq", ctx, [e], id_column="vec_id",
                 column="embedding", m=4, k=16, iterations=1, dim=64,
                 output="codebooks")
     enc = _op("embedding.pq_encode", ctx, [cells, books],
-              id_column="vec_id", column="embedding",
-              encode_method="gemm")
+              id_column="vec_id", column="embedding")
     q = _op("filter.apply", ctx, [e], expr="vec_id < 40")
     return _op("knn.ivfpq", ctx, [enc, q, cents, books],
                id_column="vec_id", column="embedding",

@@ -12,8 +12,8 @@ from tests.conftest import run_op
 
 Q = 1048576.0
 
-# passthrough columns both encode engines must carry unchanged (the
-# gemm engine round-trips every input column through Arrow)
+# passthrough columns the encode ops must carry unchanged (types
+# an Arrow round-trip would have to handle; only the vector crosses)
 PASSTHROUGH = (
     "map('k', vec_id) AS t_map",
     "named_struct('a', vec_id, 'b', 'x') AS t_struct",
@@ -425,11 +425,26 @@ def test_nan_vectors_invalid_across_centroid_family(ctx, spark):
     assert 99 not in qids and 1 in qids
 
 
+def fold_codes(ctx, df, m: int, k: int, iterations: int) -> dict:
+    """{vec_id: code} from _train_pq's post-loop fold assign over
+    ``df`` — the JVM encode that stays in the runtime (knn.pq inline
+    mode), the reference for the Arrow encode."""
+    from pyspark.sql import functions as F
+
+    from conveyor_spark.datapipe.clustering import _clean, _train_pq
+
+    clean, dim = _clean(ctx, df, "vec_id", "embedding", None, "embedding.pq")
+    _, encoded = _train_pq(ctx, clean, dim, m, k, iterations)
+    return {r["__kid"]: tuple(r["c"]) for r in encoded.select(
+        "__kid", F.array(*[f"__c{s}" for s in range(m)]).alias("c")
+    ).collect()}
+
+
 def test_pq_encode_gemm_matches_fold_with_invalid_rows(ctx, pqdf, spark):
-    """encode_method='gemm' must reproduce the fold path row-for-row
-    — including the NULL codes vec_ok stamps on invalid vectors
-    (NULL vector, wrong length, NaN/Inf element), which the numpy
-    validity sweep must classify identically."""
+    """embedding.pq_encode reproduces the training fold's codes on
+    every valid row, and stamps NULL on each vec_ok-invalid row (NULL
+    vector, wrong length, NaN/Inf/NULL element; pinned rows). Both
+    retired encode_method values return the same frame."""
     df, _ = pqdf
     books = run_op(ctx, "embedding.pq", [df], id_column="vec_id",
                    m=2, k=3, iterations=2, output="codebooks")
@@ -445,61 +460,101 @@ def test_pq_encode_gemm_matches_fold_with_invalid_rows(ctx, pqdf, spark):
         "vec_id LONG, embedding ARRAY<FLOAT>",
     )
     full = df.unionByName(adversarial)
-    fold = {r["vec_id"]: (None if r["pq_code"] is None
-                          else tuple(r["pq_code"]))
-            for r in run_op(ctx, "embedding.pq_encode", [full, books],
-                            id_column="vec_id").collect()}
-    gemm = {r["vec_id"]: (None if r["pq_code"] is None
-                          else tuple(r["pq_code"]))
-            for r in run_op(ctx, "embedding.pq_encode", [full, books],
-                            id_column="vec_id",
-                            encode_method="gemm").collect()}
-    assert gemm == fold and len(fold) == 26
-    assert fold[100] is None and fold[101] is None and fold[102] is None
-    assert fold[103] is None and fold[104] is None
-    assert fold[105] is not None
-    # non-vector columns must ride the gemm pass unchanged, and the
-    # output column order must match the fold path's
+    got = {r["vec_id"]: (None if r["pq_code"] is None
+                         else tuple(r["pq_code"]))
+           for r in run_op(ctx, "embedding.pq_encode", [full, books],
+                           id_column="vec_id").collect()}
+    ref = fold_codes(ctx, df, m=2, k=3, iterations=2)
+    assert len(ref) == 20 and {i: got[i] for i in ref} == ref
+    assert {i: got[i] for i in range(100, 105)} == dict.fromkeys(
+        range(100, 105))
+    assert len(got[105]) == 2
+    # non-vector columns ride along unchanged, in their input order,
+    # under every encode_method value
     extra = df.selectExpr("vec_id", "embedding",
                           "concat('tag', vec_id) AS tag", *PASSTHROUGH)
     a = run_op(ctx, "embedding.pq_encode", [extra, books],
                id_column="vec_id")
-    b = run_op(ctx, "embedding.pq_encode", [extra, books],
-               id_column="vec_id", encode_method="gemm")
-    assert a.columns == b.columns
-    assert rows_as_text(a) == rows_as_text(b)
+    assert a.columns == extra.columns + ["pq_code"]
+    for method in ("fold", "gemm"):
+        b = run_op(ctx, "embedding.pq_encode", [extra, books],
+                   id_column="vec_id", encode_method=method)
+        assert b.columns == a.columns
+        assert rows_as_text(a) == rows_as_text(b), method
 
 
 def test_embedding_pq_codes_gemm_matches_fold(ctx, pqdf):
-    """embedding.pq output='codes' with encode_method='gemm' must be
-    bit-identical to the fold encode (training always runs the fold,
-    so the codebooks are shared — only the final encode engine
-    differs). encode_method is dead config under output='codebooks'."""
+    """embedding.pq output='codes' equals the training fold's own
+    post-loop assign, under both retired encode_method values.
+    encode_method is dead config under output='codebooks'."""
     df, _ = pqdf
-    fold = run_op(ctx, "embedding.pq", [df], id_column="vec_id",
-                  m=2, k=3, iterations=2)
-    gemm = run_op(ctx, "embedding.pq", [df], id_column="vec_id",
-                  m=2, k=3, iterations=2, encode_method="gemm")
-    assert fold.columns == gemm.columns
-    fa = sorted((r["vec_id"], tuple(r["pq_code"])) for r in fold.collect())
-    ga = sorted((r["vec_id"], tuple(r["pq_code"])) for r in gemm.collect())
-    assert fa == ga and len(fa) == 20
+    ref = fold_codes(ctx, df, m=2, k=3, iterations=2)
+    assert len(ref) == 20
+    for method in ("fold", "gemm"):
+        out = run_op(ctx, "embedding.pq", [df], id_column="vec_id",
+                     m=2, k=3, iterations=2, encode_method=method)
+        assert out.columns == df.columns + ["pq_code"]
+        got = {r["vec_id"]: tuple(r["pq_code"]) for r in out.collect()}
+        assert got == ref, method
     with pytest.raises(ConfigError, match="output='codes'"):
         run_op(ctx, "embedding.pq", [df], id_column="vec_id",
                m=2, k=3, output="codebooks", encode_method="gemm")
 
 
-def test_pq_encode_rejects_distance_projection_clash(ctx, pqdf):
-    """The fold path's internal two-step projection uses __pqd{s}
-    scratch names — a user column with that name must fail loudly,
-    not be silently overwritten."""
+def test_embedding_pq_codes_with_year_month_interval_id(ctx, pqdf):
+    """A year-month interval id never crosses Arrow: embedding.pq
+    output='codes' keeps it and gives the codes of integer ids."""
+    df, _ = pqdf
+    iv = df.selectExpr("make_ym_interval(CAST(vec_id AS INT), 0) AS vec_id",
+                       "embedding")
+    out = run_op(ctx, "embedding.pq", [iv], id_column="vec_id",
+                 m=2, k=3, iterations=2, encode_method="gemm")
+    assert out.schema["vec_id"] == iv.schema["vec_id"]
+    got = {r[0]: tuple(r[1]) for r in out.selectExpr(
+        "extract(YEAR FROM vec_id)", "pq_code").collect()}
+    assert got == fold_codes(ctx, df, m=2, k=3, iterations=2)
+
+
+def test_encode_keeps_scratch_named_columns(ctx, pqdf):
+    """Input columns named like the retired fold projections' scratch
+    columns (__pqd0, __acdist, __acell) come out of pq_encode and
+    assign_cells unchanged, next to the codes of the plain frame."""
     df, _ = pqdf
     books = run_op(ctx, "embedding.pq", [df], id_column="vec_id",
                    m=2, k=3, iterations=2, output="codebooks")
-    clash = df.selectExpr("vec_id", "embedding", "1 AS __pqd0")
-    with pytest.raises(ConfigError, match="__pqd0"):
-        run_op(ctx, "embedding.pq_encode", [clash, books],
-               id_column="vec_id")
+    cents = run_op(ctx, "embedding.kmeans", [df], id_column="vec_id",
+                   k=3, iterations=1, output="centroids")
+    scratch = df.selectExpr("vec_id", "embedding", "vec_id * 10 AS __pqd0",
+                            "vec_id * 100 AS __acdist",
+                            "vec_id * 1000 AS __acell")
+    for op, table, cfg, out in (
+        ("embedding.pq_encode", books, {"id_column": "vec_id"}, "pq_code"),
+        ("embedding.assign_cells", cents, {}, "cell"),
+    ):
+        plain = {r["vec_id"]: r[out] for r in run_op(
+            ctx, op, [df, table], **cfg).collect()}
+        got = run_op(ctx, op, [scratch, table], **cfg)
+        assert got.columns == scratch.columns + [out], op
+        rows = got.collect()
+        assert len(rows) == 20 and all(r[out] is not None for r in rows)
+        for r in rows:
+            i = r["vec_id"]
+            assert (r["__pqd0"], r["__acdist"], r["__acell"], r[out]) == \
+                (10 * i, 100 * i, 1000 * i, plain[i]), op
+
+
+def test_encode_udf_runs_once_per_row(ctx, pqdf):
+    """A consumer's filter on the codes (knn.pq's validity guard)
+    must not push a second copy of the encode UDF below the
+    projection: one ArrowEvalPython node, so one encode per row."""
+    df, _ = pqdf
+    books = run_op(ctx, "embedding.pq", [df], id_column="vec_id",
+                   m=2, k=3, iterations=2, output="codebooks")
+    enc = run_op(ctx, "embedding.pq_encode", [df, books],
+                 id_column="vec_id")
+    plan = enc.filter("size(pq_code) = 2")._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 @pytest.fixture(scope="module")
@@ -615,7 +670,8 @@ def test_assign_cells_reproduces_kmeans_assign(ctx, vdf):
     """The deployment contract: assign_cells against the quantizer
     kmeans exports at iterations=T-1 must reproduce kmeans
     assign-mode output at iterations=T exactly (assign mode skips
-    the final centroid update), on BOTH engines."""
+    the final centroid update), under both retired encode_method
+    values, with every passthrough column unchanged."""
     direct = {r["vec_id"]: r["cluster"] for r in run_op(
         ctx, "embedding.kmeans", [vdf], id_column="vec_id",
         k=3, iterations=3).collect()}
@@ -637,25 +693,30 @@ def test_assign_cells_reproduces_kmeans_assign(ctx, vdf):
     "make_interval(1, 2, 0, 3, 4, 5, 6.5)",
     "array(INTERVAL '1-2' YEAR TO MONTH)",
 ])
-def test_gemm_encode_rejects_interval_passthrough(ctx, vdf, expr):
-    """mapInPandas cannot return year-month or calendar intervals: the
-    gemm engines reject such a column by name at build time, and the
-    fold engine passes it through."""
+def test_encode_accepts_interval_passthrough(ctx, vdf, expr):
+    """Only the vector column crosses Arrow, so a year-month or
+    calendar interval column (at any depth) passes through
+    assign_cells and pq_encode unchanged, and the codes equal those
+    of the interval-free frame."""
     cents = run_op(ctx, "embedding.kmeans", [vdf], id_column="vec_id",
                    k=2, iterations=1, output="centroids")
     books = run_op(ctx, "embedding.pq", [vdf], id_column="vec_id",
                    m=2, k=2, iterations=1, output="codebooks")
     df = vdf.selectExpr("*", f"{expr} AS span")
-    for op, inputs, cfg in (
-        ("embedding.assign_cells", [df, cents], {}),
-        ("embedding.pq_encode", [df, books], {"id_column": "vec_id"}),
+    as_dict = lambda d, c: {r[0]: r[1] for r in d.select("vec_id", c)
+                            .collect()}
+    for op, table, cfg, out in (
+        ("embedding.assign_cells", cents, {}, "cell"),
+        ("embedding.pq_encode", books, {"id_column": "vec_id"}, "pq_code"),
     ):
-        with pytest.raises(ConfigError,
-                           match=r"column 'span'.*encode_method='fold'"):
-            run_op(ctx, op, inputs, encode_method="gemm", **cfg)
-        fold = run_op(ctx, op, inputs, encode_method="fold", **cfg)
-        assert fold.schema["span"] == df.schema["span"], op
-        assert fold.filter("span IS NOT NULL").count() == 6, op
+        got = run_op(ctx, op, [df, table], encode_method="gemm", **cfg)
+        assert got.schema["span"] == df.schema["span"], op
+        text = "CAST(span AS STRING) AS s"
+        assert as_dict(got.selectExpr("vec_id", text), "s") == \
+            as_dict(df.selectExpr("vec_id", text), "s"), op
+        codes = as_dict(got, out)
+        assert len(codes) == 6 and None not in codes.values(), op
+        assert codes == as_dict(run_op(ctx, op, [vdf, table], **cfg), out), op
 
 
 def test_assign_cells_dirty_vectors_null_both_engines(ctx, spark):

@@ -271,6 +271,10 @@ def test_dedup_embedding_requires_bucket(ctx, spark):
         run_op(ctx, "dedup.embedding", [vecs], id_column="vec_id")
 
 
+_LSH_PQ = dict(id_column="vec_id", k=2, dim=4, bits=4, bands=2,
+               verify="pq", m=2, codewords=3, rerank=4)
+
+
 @pytest.mark.parametrize("op, param, retired, cfg", [
     ("knn.ivf", "method", "join",
      dict(id_column="vec_id", bucket_column="label", k=3,
@@ -279,24 +283,47 @@ def test_dedup_embedding_requires_bucket(ctx, spark):
      dict(id_column="vec_id", bucket_column="label", threshold=0.2)),
     ("embedding.pca", "moments", "entries",
      dict(id_column="vec_id", components=2, iterations=4)),
+    ("embedding.pq", "encode_method", "gemm",
+     dict(id_column="vec_id", m=2, k=3, iterations=2)),
+    ("embedding.pq_encode", "encode_method", "gemm",
+     dict(id_column="vec_id")),
+    ("embedding.assign_cells", "encode_method", "gemm", {}),
+    ("knn.lsh", "encode_method", "gemm", _LSH_PQ),
 ])
 def test_retired_engine_params_are_aliases(ctx, spark, op, param, retired, cfg):
     """A retired engine param still validates its value (an unknown
-    one raises, not silently picks an engine), and the retired value
+    one raises, not silently picks an engine), and every allowed value
     runs the one engine: output identical to the default."""
     import random
+
+    from conveyor_spark.registry import get_function
 
     rng = random.Random(5)
     vecs = spark.createDataFrame(
         [(i, [rng.uniform(-1, 1) for _ in range(4)], i % 2) for i in range(20)],
         "vec_id INT, embedding ARRAY<FLOAT>, label INT",
     )
+    # the pretrained table the encode ops read as their second input
+    tables = {
+        "embedding.pq_encode": lambda: run_op(
+            ctx, "embedding.pq", [vecs], id_column="vec_id", m=2, k=3,
+            iterations=2, output="codebooks"),
+        "embedding.assign_cells": lambda: run_op(
+            ctx, "embedding.kmeans", [vecs], id_column="vec_id", k=3,
+            iterations=2, output="centroids"),
+    }
+    inputs = [vecs] + ([tables[op]()] if op in tables else [])
     with pytest.raises(ConfigError, match=param):
-        run_op(ctx, op, [vecs], **{param: "GEMM"}, **cfg)
+        run_op(ctx, op, inputs, **{param: "GEMM"}, **cfg)
     as_set = lambda d: sorted(tuple(r) for r in d.collect())
-    default = as_set(run_op(ctx, op, [vecs], **cfg))
+    default = as_set(run_op(ctx, op, inputs, **cfg))
     assert default  # non-vacuous
-    assert as_set(run_op(ctx, op, [vecs], **{param: retired}, **cfg)) == default
+    allowed = next(p.allowed for p in get_function(op).params
+                   if p.name == param)
+    assert retired in allowed
+    for value in allowed:
+        got = as_set(run_op(ctx, op, inputs, **{param: value}, **cfg))
+        assert got == default, value
 
 
 def _vecs_with_id(spark, id_sql: str):
@@ -319,6 +346,18 @@ def test_dedup_embedding_year_month_interval_id_uses_pair_join(ctx, spark):
                 run_op(ctx, "dedup.embedding", [vecs], **kw).collect()}
     assert {tuple(r) for r in got.collect()} == expected
     assert len(expected) == 2
+
+
+@pytest.mark.parametrize("bucket", [{"bucket_column": "label"},
+                                    {"allow_full": True}])
+def test_dedup_embedding_rejects_calendar_interval_id(ctx, spark, bucket):
+    """Neither engine can take a calendar interval id (Arrow cannot
+    return it, the pair join cannot order it): a ConfigError naming
+    the column at build time, not Spark's "does not support ordering"."""
+    _, iv = _vecs_with_id(spark, "make_interval(0, 0, 0, vec_id)")
+    with pytest.raises(ConfigError, match="'vec_id'.*cast"):
+        run_op(ctx, "dedup.embedding", [iv], id_column="vec_id",
+               threshold=0.5, **bucket)
 
 
 @pytest.mark.parametrize("id_sql", [

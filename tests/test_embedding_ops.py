@@ -115,13 +115,13 @@ def test_knn_lsh_pq_verify_pretrained_matches_inline(ctx, spark):
 
 
 def test_gemm_encode_codes_bit_matches_fold(ctx, spark):
-    """gemm_encode_codes (Arrow numpy argmin) must reproduce the JVM
-    fold's codes EXACTLY — per-dim sequential accumulation makes
-    every distance double identical, and np.argmin's first-occurrence
-    tie matches array_position's ties-to-lowest. Checked code-by-code
-    on the full table."""
+    """pq_encoder (the Arrow numpy argmin every encode op runs) must
+    reproduce the training fold's codes EXACTLY — per-dim sequential
+    accumulation makes every distance double identical, and
+    np.argmin's first-occurrence tie matches array_position's
+    ties-to-lowest. Checked code-by-code on the full table."""
     from conveyor_spark.datapipe.clustering import (
-        _clean, _train_pq, gemm_encode_codes,
+        _clean, _train_pq, pq_encoder,
     )
     from pyspark.sql import functions as F
 
@@ -134,11 +134,10 @@ def test_gemm_encode_codes_bit_matches_fold(ctx, spark):
             "__kid", F.array(*[f"__c{s}" for s in range(4)]).alias("c")
         ).collect()
     }
+    enc = pq_encoder(codebooks, 4, 16)
     gemm = {
-        r["vec_id"]: tuple(r["code"])
-        for r in gemm_encode_codes(
-            clean, "__kid", "__v", "vec_id", "code", codebooks, 4, 16
-        ).collect()
+        r["__kid"]: tuple(r["code"])
+        for r in clean.select("__kid", enc("__v").alias("code")).collect()
     }
     assert fold == gemm and len(fold) == 500
 

@@ -870,26 +870,3 @@ def test_state_partitions_direct_conflict_fails_loudly(spark, tmp_path):
            time_column="ts", state_partitions=9)
     with pytest.raises(ConfigError, match="conflicting state_partitions"):
         run_op(cx, "stdout_stream.write", [a], format="jsonl")
-
-
-def test_encode_method_typo_fails_loudly(ctx, spark):
-    """Registry `allowed` only warns; a typo'd encode_method would
-    silently run the fold engine — and bit-exactness means nothing
-    downstream would ever surface it. Must raise."""
-    from conveyor_spark.errors import ConfigError
-    from tests.conftest import run_op
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    books = run_op(ctx, "embedding.pq", [e], id_column="vec_id", m=4,
-                   k=4, iterations=1, output="codebooks")
-    for op_call in (
-        lambda: run_op(ctx, "embedding.pq_encode", [e, books],
-                       id_column="vec_id", encode_method="GEMM"),
-        lambda: run_op(ctx, "embedding.pq", [e], id_column="vec_id",
-                       m=4, k=4, encode_method="arrow"),
-        lambda: run_op(ctx, "knn.lsh", [e], id_column="vec_id", k=3,
-                       dim=64, bits=24, bands=4, verify="pq", m=4,
-                       codewords=4, rerank=6, encode_method="gem"),
-    ):
-        with pytest.raises(ConfigError, match="encode_method"):
-            op_call()

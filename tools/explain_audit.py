@@ -186,14 +186,15 @@ CHECKS = [
     ),
     (
         "q162_pq_encode_gemm",
-        "gemm deployment encode: the CORPUS codes come from one Arrow "
-        "pass (MapInPandas) with no interpreted HOF argmin on the "
-        "corpus stream — every zip_with line sits under the "
+        "deployment encode: the CORPUS codes come from ONE scalar "
+        "Arrow UDF evaluation (one ArrowEvalPython — the validity "
+        "filter does not copy it) with no interpreted HOF argmin on "
+        "the corpus stream — every zip_with line sits under the "
         "BroadcastExchange (the |queries| x m x k ADC distance table, "
         "5 rows here); the search joins that table broadcast, no "
         "cartesian/BNLJ",
         lambda p, o: (lambda lines, bx: (
-            "MapInPandas" in p
+            p.count("ArrowEvalPython") == 1
             and "BroadcastHashJoin" in p
             and "CartesianProduct" not in p
             and "BroadcastNestedLoopJoin" not in p
@@ -207,11 +208,11 @@ CHECKS = [
     (
         "q163_knn_ivfpq",
         "IVFPQ search: corpus codes stamped in ONE Arrow pass "
-        "(MapInPandas gemm encode), the probe map and the ADC "
+        "(one ArrowEvalPython encode), the probe map and the ADC "
         "distance table broadcast into hash joins (>= 2 "
         "BroadcastHashJoin) — the corpus never broadcasts and never "
         "cross-joins; the final rank is over adc_dist",
-        lambda p, o: "MapInPandas" in p
+        lambda p, o: p.count("ArrowEvalPython") == 1
         and p.count("BroadcastHashJoin") >= 2
         and "CartesianProduct" not in p
         and "BroadcastNestedLoopJoin" not in p
@@ -220,10 +221,10 @@ CHECKS = [
     (
         "q164_ivfpq_deploy",
         "IVFPQ deployment stamp: BOTH corpus stamps (assign_cells + "
-        "pq_encode, gemm) are Arrow passes — two MapInPandas, no "
+        "pq_encode) are Arrow passes — two ArrowEvalPython, no "
         "interpreted argmin on the corpus stream — and the search "
         "keeps the broadcast probe/dtable joins, no cartesian/BNLJ",
-        lambda p, o: p.count("MapInPandas") >= 2
+        lambda p, o: p.count("ArrowEvalPython") == 2
         and p.count("BroadcastHashJoin") >= 2
         and "CartesianProduct" not in p
         and "BroadcastNestedLoopJoin" not in p

@@ -11,7 +11,7 @@ FULL deployment shape side by side on the same stamped corpus:
      embedding.pq output='codebooks'.
   2. STAMP the replicated corpus (build_probe's Zipf near-dup
      replication) with embedding.assign_cells + embedding.pq_encode,
-     both encode_method='gemm' — two Arrow passes, written once to
+     two Arrow passes over the vectors, written once to
      parquet so every search reads identical artifacts.
   3. SEARCH the same query set three ways: flat knn.pq (pretrained),
      knn.ivfpq nprobe=1, knn.ivfpq nprobe=NPROBE — recording wall,
@@ -147,11 +147,9 @@ def main() -> int:
         # 2: stamp the replicated corpus (two gemm Arrow passes)
         def stamp():
             cells = op("embedding.assign_cells", ctx, [emb, cents],
-                       column="embedding", output_column="ivf_cell",
-                       encode_method="gemm")
+                       column="embedding", output_column="ivf_cell")
             enc = op("embedding.pq_encode", ctx, [cells, books],
-                     id_column="vec_id", column="embedding",
-                     encode_method="gemm")
+                     id_column="vec_id", column="embedding")
             path = os.path.join(probe_dir, "stamped.parquet")
             enc.write.parquet(path)
             return spark.read.parquet(path)

@@ -347,8 +347,7 @@ def _v_lsh_pq1024(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     return _op("knn.lsh", ctx, [e], id_column="vec_id", k=3, dim=64,
                bits=60, bands=4, max_bucket=128, signature_method="gemm",
-               verify="pq", m=4, codewords=16, iterations=1, rerank=6,
-               encode_method="gemm")
+               verify="pq", m=4, codewords=16, iterations=1, rerank=6)
 
 
 def _v_bitext_block1024(spark, sf_dir):
