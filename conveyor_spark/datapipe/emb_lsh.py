@@ -4,9 +4,10 @@ The scale path for embedding similarity: each vector gets a b-bit
 signature, bit j = sign(<v, r_j>) with r_j a deterministic Rademacher
 (+1/-1) vector derived from md5 parity of "plane:dim" — reproducible
 across engines/runs with no RNG state. The sign vectors are computed
-ON THE DRIVER and embedded as array literals (bits x dim tiny ints),
-so the per-row work is just b fused multiply-adds over the embedding
-— pure JVM expressions, no shuffle.
+ON THE DRIVER and shipped inside one scalar Arrow UDF (bits x dim
+signs), so the per-row work is b sequential dot products over the
+embedding in numpy — no shuffle, and bit-identical to the SQL fold the
+oracle replays (signature_udf).
 
 P[bit_j(a) = bit_j(b)] = 1 - angle(a,b)/pi: Hamming-close signatures
 <=> cosine-close vectors. Group by the signature (or bit-bands) for
@@ -18,6 +19,7 @@ from __future__ import annotations
 import hashlib
 from typing import Any
 
+import pyarrow as pa  # module-level so arrow_udf type hints resolve
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -36,86 +38,60 @@ def sign_matrix(bits: int, dim: int) -> list[list[float]]:
     return [[rademacher_sign(j, i) for i in range(dim)] for j in range(bits)]
 
 
-def signature_expr(column: str, bits: int, dim: int):
-    """The b-bit hyperplane signature as one JVM expression (reused by
-    embedding.lsh and knn.lsh).
+def signature_udf(bits: int, dim: int):
+    """The one b-bit hyperplane signature engine (embedding.lsh's
+    output, knn.lsh's band buckets): a scalar Arrow UDF mapping a
+    vector column to its bigint signature. Only the vector column
+    crosses into Python; Spark re-attaches the result in the JVM.
 
-    Built as a single SQL string parsed by ONE F.expr call: the
-    obvious Column-API construction (a per-bit loop of F.lit arrays +
-    zip_with folds) makes ~bits*dim py4j round-trips — measured 4+
-    seconds of DRIVER time at bits=24, dim=64 PER QUERY BUILD, before
-    any executor ran. The arithmetic and fold order are identical
-    (left fold of x*s, then sum of (dot>0)*2^j), so results — and the
-    DuckDB oracle parity — are unchanged."""
-    planes = sign_matrix(bits, dim)
-    plane_sql = ",".join(
-        "array(" + ",".join(f"{s:.1f}D" for s in row) + ")" for row in planes
-    )
-    powers_sql = ",".join(f"{2**j}L" for j in range(bits))
-    return F.expr(
-        f"aggregate(zip_with("
-        f"transform(array({plane_sql}), p -> "
-        f"aggregate(zip_with(`{column}`, p, (x, s) -> CAST(x AS DOUBLE) * s), "
-        f"0.0D, (a, v) -> a + v)), "
-        f"array({powers_sql}), "
-        f"(d, w) -> CAST(d > 0.0D AS BIGINT) * w), "
-        f"CAST(0 AS BIGINT), (a, v) -> a + v)"
-    )
-
-
-def signature_frame(
-    df: DataFrame, id_column: str, id_out: str, column: str,
-    bits: int, dim: int, method: str = "fold",
-) -> DataFrame:
-    """(id, __sig) signature frame for banding — the shared entry for
-    ops that use signatures INTERNALLY (knn.lsh candidate buckets).
-
-    method='fold': the JVM higher-order expression (signature_expr) —
-    bit-reproducible against the DuckDB oracle, but interpreted (HOFs
-    don't codegen): ~0.25 ms/row at bits=24/dim=64.
-
-    method='gemm': one (N x dim) @ (dim x bits) BLAS multiply per
-    Arrow batch — two orders of magnitude less CPU per row, the right
-    default at 100 TB where signatures are billions of rows of pure
-    compute. Sign-identical to 'fold' unless a dot product sits
-    within float-rounding distance (~1e-13) of zero: real embedding
-    corpora have margins many orders larger (test data: >= 8.8e-6;
-    Hypothesis parity test in test_embedding_ops.py), and LSH
-    BUCKETING only needs within-run consistency anyway. Keep 'fold'
-    where the signature itself is the op's OUTPUT (embedding.lsh)."""
-    if method == "fold":
-        return df.select(
-            F.col(id_column).alias(id_out),
-            signature_expr(column, bits, int(dim)).alias("__sig"),
-        )
-    if method != "gemm":
-        raise ConfigError(f"signature method must be fold|gemm, got {method!r}")
+    Bit-exact with the SQL fold the DuckDB oracle replays (per plane,
+    ``aggregate(zip_with(v, p, (x, s) -> CAST(x AS DOUBLE) * s), 0.0D,
+    (a, v) -> a + v)``, then the sum of ``CAST(dot > 0 AS BIGINT) *
+    2^j``):
+    - each dot accumulates over the dims LEFT TO RIGHT from 0.0, one
+      (bits x N) add per dim — a matmul or np.sum would reorder the
+      adds and flip the sign of a dot that cancels to ~0;
+    - a NaN dot sets its bit: Spark orders NaN above every number;
+    - a NULL vector, a length other than ``dim`` or any NULL element
+      gives a NULL signature (zip_with pads / propagates the NULL).
+    The Arrow input keeps the null bitmaps and offsets, so a NULL
+    element is told apart from NaN in one vectorized pass."""
     import numpy as np
+    from pyspark.sql.functions import arrow_udf
 
-    planes_t = np.array(sign_matrix(bits, int(dim)), dtype=np.float64).T
-    powers = np.array([2**j for j in range(bits)], dtype=np.int64)
+    planes = np.array(sign_matrix(bits, dim), dtype=np.float64)
+    weights = np.left_shift(np.int64(1), np.arange(bits, dtype=np.int64))
 
-    def run(batches):
-        import pandas as pd
+    @arrow_udf("bigint")
+    def signature(vecs: pa.Array) -> pa.Array:
+        offsets = vecs.offsets.to_numpy()
+        rows = np.flatnonzero(
+            ((offsets[1:] - offsets[:-1]) == dim)
+            & ~vecs.is_null().to_numpy(zero_copy_only=False))
+        values = vecs.values
+        # (dim, rows) gathers; offsets index the unsliced child array.
+        # The index is rebuilt after the NULL-element cut, not masked:
+        # a masked index gathers x in column order, and the per-dim
+        # rows below would stride through memory (~7x slower)
+        span = np.arange(dim)[:, None]
+        nulls = values.is_null().to_numpy(zero_copy_only=False)
+        rows = rows[~nulls[offsets[rows] + span].any(axis=0)]
+        x = values.cast(pa.float64()).to_numpy(
+            zero_copy_only=False)[offsets[rows] + span]
+        dots = np.zeros((bits, len(rows)), dtype=np.float64)
+        with np.errstate(invalid="ignore"):  # inf - inf is a NaN dot
+            for i in range(dim):  # sequential over dims = the fold
+                dots += planes[:, i, None] * x[i]
+        sig = np.zeros(len(vecs), dtype=np.int64)
+        sig[rows] = weights @ ((dots > 0.0) | np.isnan(dots))
+        valid = np.zeros(len(vecs), dtype=bool)
+        valid[rows] = True
+        return pa.array(sig, type=pa.int64(), mask=~valid)
 
-        for pdf in batches:
-            vecs = pdf[column]
-            # wrong-length/NULL vectors produce NULL signatures on the
-            # fold path and never survive the band equi-join — drop
-            # them here for the same candidate set
-            ok = vecs.map(
-                lambda v: v is not None and len(v) == planes_t.shape[0]
-            ).to_numpy()
-            if not ok.any():
-                continue
-            X = np.array(vecs[ok].tolist(), dtype=np.float64)
-            sigs = ((X @ planes_t) > 0.0) @ powers
-            yield pd.DataFrame(
-                {id_out: pdf[id_column][ok].to_numpy(), "__sig": sigs}
-            )
-
-    schema = f"`{id_out}` {dict(df.dtypes)[id_column]}, __sig BIGINT"
-    return df.select(id_column, column).mapInPandas(run, schema)
+    # deterministic, but the flag keeps the optimizer from copying the
+    # UDF into a consumer's pushed-down filter (knn.lsh drops NULL
+    # signatures) — clustering.pq_encoder's reason
+    return signature.asNondeterministic()
 
 
 @register(
@@ -154,4 +130,5 @@ def embedding_lsh(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     from conveyor_spark.datapipe.dedup import widen
 
     df = widen(ctx, df, config)
-    return df.withColumn(output_column, signature_expr(column, bits, dim))
+    return df.withColumn(
+        output_column, signature_udf(bits, dim)(F.col(f"`{column}`")))

@@ -493,10 +493,10 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
                "duplicate-heavy data; costs recall inside near-dup "
                "clusters)"),
         P("signature_method", default="fold", allowed=("fold", "gemm"),
-          desc="fold = JVM expression (oracle-bit-parity); gemm = "
-               "per-batch BLAS, ~100x less CPU/row — the 100 TB choice"),
+          desc="Retired: both values run the one Arrow UDF signature "
+               "and give identical results"),
         P("widen", "any", default="auto",
-          desc="signature_method=gemm: spread narrow scans before BLAS"),
+          desc="Spread narrow scans before the signature pass"),
         P("verify", default="exact", allowed=("exact", "pq"),
           desc="exact: cosine every candidate (vectors ride the "
                "candidate shuffle); pq: SDC-score candidates from PQ "
@@ -553,6 +553,10 @@ def knn_lsh(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> 
     survivors. Codes come from clustering.pq_encoder (one scalar
     Arrow UDF per side); ``encode_method`` is retired: "fold" and
     "gemm" both run it. Fully oracle-replayable (q161).
+
+    Signatures come from emb_lsh.signature_udf, embedding.lsh's own
+    engine; ``signature_method`` is retired: "fold" and "gemm" both
+    run it.
     """
     corpus = inputs[0]
     id_column = config.get("id_column")
@@ -612,22 +616,25 @@ def knn_lsh(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> 
     width = bits // bands
 
     from conveyor_spark.datapipe.dedup import widen
-    from conveyor_spark.datapipe.emb_lsh import signature_frame
+    from conveyor_spark.datapipe.emb_lsh import signature_udf
 
-    sig_method = config.get("signature_method", "fold")
+    if config.get("signature_method", "fold") not in ("fold", "gemm"):
+        raise ConfigError("knn.lsh: signature_method must be fold|gemm")
+    signature = signature_udf(bits, int(dim))
 
     def banded(df: DataFrame, ids: str, bcol: str) -> DataFrame:
         """SKINNY band rows: (id, band-bucket) only. The 64-float
         vectors do NOT ride the band explode / candidate join / pair
         dedup — at scale that would shuffle ~0.5 KB per candidate; ids
         alone are ~16 bytes. Vectors attach to the deduped pairs via
-        two id-keyed equi-joins below. Signatures are internal here,
-        so signature_method='gemm' (per-batch BLAS, ~100x less CPU
-        per row) is safe — see signature_frame's parity contract."""
-        sig = signature_frame(
-            widen(ctx, df, config) if sig_method == "gemm" else df,
-            id_column, ids, column, bits, int(dim), method=sig_method,
-        )
+        two id-keyed equi-joins below. The signature is the one Arrow
+        UDF (emb_lsh.signature_udf) over a widened scan; a NULL
+        signature (NULL, wrong-length or NULL-element vector) has no
+        bucket."""
+        sig = widen(ctx, df, config).select(
+            F.col(id_column).alias(ids),
+            signature(F.col(column)).alias("__sig"),
+        ).filter(F.col("__sig").isNotNull())
         bandvals = F.array(*[
             F.struct(
                 F.lit(j).alias("band"),
@@ -659,11 +666,11 @@ def knn_lsh(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> 
         )
     if self_knn and verify != "pq":
         # the query side IS the corpus band frame relabeled — without
-        # persist the whole signature pass (gemm Arrow batches or the
-        # fold expression) and the hot-bucket window run TWICE, once
-        # per side of the candidate self-join. Skinny (id, band)
-        # rows (r13). EXACT-verify only (r14): on the verify='pq'
-        # path this persist stacked with the screen's into a 32-core
+        # persist the whole signature pass (the Arrow UDF) and the
+        # hot-bucket window run TWICE, once per side of the candidate
+        # self-join. Skinny (id, band) rows (r13). EXACT-verify only
+        # (r14): on the verify='pq' path this persist stacked with
+        # the screen's into a 32-core
         # materialization-barrier regression on the gate host
         # (q161 2.37 -> 5.63 s, 8-core flat — VERDICT r13 #1), so
         # that path reverts to its r12 shape; q68/q152 (exact) kept

@@ -2141,7 +2141,7 @@ def q152_knn_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctx = _ctx(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return _op("knn.lsh", ctx, [e], id_column="vec_id", k=3, dim=64,
-               bits=48, bands=4, max_bucket=1024, signature_method="gemm")
+               bits=48, bands=4, max_bucket=1024)
 
 
 @query(
@@ -2235,14 +2235,12 @@ def q68_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     it bounds the candidate join — the 64x probe spilled 7.9 GB
     unguarded, the documented failure mode of duplicate-heavy corpora
     (resolve clusters with dedup.minhash first, or cap buckets).
-    signature_method='gemm' computes the internal signatures as one
-    BLAS multiply per Arrow batch (~100x less CPU/row than the HOF
-    fold — the 100 TB default; sign-identical on any real margin,
-    parity-tested)."""
+    The internal signatures are embedding.lsh's one Arrow UDF engine,
+    bit-identical to the planes the oracle replays."""
     ctx = _ctx(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return _op("knn.lsh", ctx, [e], id_column="vec_id", k=3, dim=64,
-               bits=24, bands=4, max_bucket=1024, signature_method="gemm")
+               bits=24, bands=4, max_bucket=1024)
 
 
 @query(
@@ -6664,7 +6662,7 @@ def q161_knn_lsh_pq_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctx = _ctx(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return _op("knn.lsh", ctx, [e], id_column="vec_id", k=3, dim=64,
-               bits=48, bands=4, max_bucket=1024, signature_method="gemm",
+               bits=48, bands=4, max_bucket=1024,
                verify="pq", m=4, codewords=16, iterations=1, rerank=6)
 
 

@@ -289,6 +289,8 @@ _LSH_PQ = dict(id_column="vec_id", k=2, dim=4, bits=4, bands=2,
      dict(id_column="vec_id")),
     ("embedding.assign_cells", "encode_method", "gemm", {}),
     ("knn.lsh", "encode_method", "gemm", _LSH_PQ),
+    ("knn.lsh", "signature_method", "gemm",
+     dict(id_column="vec_id", k=3, dim=4, bits=8, bands=2)),
 ])
 def test_retired_engine_params_are_aliases(ctx, spark, op, param, retired, cfg):
     """A retired engine param still validates its value (an unknown
@@ -573,6 +575,24 @@ def test_knn_lsh_max_bucket_guard(ctx, spark):
     assert capped.count() < full.count()
     capped_q = {r["query_id"] for r in capped.collect()}
     assert any(q >= 100 for q in capped_q)
+
+
+def test_knn_lsh_null_signature_rows_are_never_candidates(ctx, spark):
+    """A vector with a NULL signature (NULL, wrong length, NULL
+    element) has no band bucket: two vectors of the same wrong length
+    never meet through NULL band values, whatever their cosine."""
+    from tests.conftest import run_op
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.9, 0.1, 0.0]), (3, [1.0, 0.0]),
+         (4, [0.9, 0.1]), (5, [1.0, None, 0.0]), (6, [0.9, None, 0.0]),
+         (7, None), (8, None)],
+        "id INT, embedding ARRAY<FLOAT>",
+    )
+    out = run_op(ctx, "knn.lsh", [corpus], id_column="id", k=3, dim=3,
+                 bits=4, bands=2)
+    assert {(r["query_id"], r["neighbor_id"]) for r in out.collect()} == {
+        (1, 2), (2, 1)}
 
 
 def test_sample_stratified_deterministic_fractions(ctx, spark):

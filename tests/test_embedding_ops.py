@@ -68,20 +68,6 @@ def test_quantize_output_is_tinyint(ctx, vecs):
     assert dt["q"] == "array<tinyint>" and dt["s"] == "double"
 
 
-def test_knn_lsh_gemm_signature_parity(ctx, spark):
-    """signature_method='gemm' must produce the SAME result frame as
-    'fold' — BLAS changes summation order, but the sign margins of
-    any real corpus dwarf double rounding (test data: >= 8.8e-6 vs
-    ~1e-13)."""
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    kw = dict(id_column="vec_id", k=3, dim=64, bits=24, bands=4)
-    a = run_op(ctx, "knn.lsh", [e], signature_method="fold", **kw)
-    b = run_op(ctx, "knn.lsh", [e], signature_method="gemm", **kw)
-    rows_a = sorted(map(tuple, a.collect()))
-    rows_b = sorted(map(tuple, b.collect()))
-    assert rows_a == rows_b and len(rows_a) > 0
-
-
 def test_knn_lsh_pq_verify_unbounded_rerank_equals_exact(ctx, spark):
     """verify='pq' with a rerank cap above the candidate count keeps
     EVERY candidate through the screen — the exact re-rank must then
@@ -190,29 +176,47 @@ def test_knn_lsh_pq_verify_validates(ctx, spark):
         run_op(ctx, "knn.lsh", [e], verify="pq", m=16, codewords=256, **kw)
 
 
-def test_signature_frame_gemm_matches_fold_on_adversarial_vectors(ctx, spark):
-    """Hypothesis-style adversarial shapes: NULL vectors, wrong
-    lengths, zeros — gemm drops exactly the rows whose fold signature
-    is NULL, and agrees bit-for-bit on the rest."""
-    from conveyor_spark.datapipe.emb_lsh import signature_frame
+_INF, _NAN = float("inf"), float("nan")
+
+
+@pytest.mark.parametrize("elem", ["FLOAT", "DOUBLE"])
+def test_lsh_signature_pinned_edge_cases(ctx, spark, elem):
+    """embedding.lsh signatures pinned on the rows a reordered or
+    NaN-blind engine gets wrong. Spark's fold defines them: a NULL
+    element, a wrong length or a NULL vector gives NULL; a NaN dot
+    (NaN element, inf - inf) sets its bit, as Spark orders NaN above
+    every number."""
+    from conveyor_spark.datapipe.emb_lsh import sign_matrix
 
     rows = [
-        (1, [float(i) for i in range(64)]),
-        (2, [(-1.0) ** i * 0.001 for i in range(64)]),
-        (3, None),
-        (4, [1.0, 2.0]),            # wrong length
-        (5, [0.0] * 64),            # all-zero: dots exactly 0 -> bits 0
+        ([1.0, None, 2.0], None),
+        ([1.0, _NAN, 2.0], 15),
+        ([_INF, -_INF, 1.0], 11),
+        ([_INF, 1.0, 1.0], 3),
+        ([0.0, 0.0, 0.0], 0),
+        ([-0.0, 0.0, -0.0], 0),
+        ([], None),
+        ([1.0, 2.0], None),
+        ([1.0, 2.0, 3.0, 4.0], None),
+        (None, None),
+        ([3e38, 3e38, -3e38], 3),
     ]
-    df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<DOUBLE>")
-    fold = {
-        r["vid"]: r["__sig"]
-        for r in signature_frame(df, "vec_id", "vid", "embedding", 16, 64,
-                                 "fold").collect()
-        if r["__sig"] is not None
-    }
-    gemm = {
-        r["vid"]: r["__sig"]
-        for r in signature_frame(df, "vec_id", "vid", "embedding", 16, 64,
-                                 "gemm").collect()
-    }
-    assert set(fold) == {1, 2, 5} and gemm == fold
+
+    def sigs(rows, dim, bits=4):
+        df = spark.createDataFrame(
+            [(i, v) for i, (v, _) in enumerate(rows)],
+            f"vec_id INT, embedding ARRAY<{elem}>")
+        out = run_op(ctx, "embedding.lsh", [df], bits=bits, dim=dim)
+        return [r["lsh_sig"] for r in out.orderBy("vec_id").collect()]
+
+    assert sigs(rows, 3) == [sig for _, sig in rows]
+    # plane 1 of sign_matrix(4, 4) is all +1: summed left to right,
+    # 2^53 + 1 + 1 - 2^53 is 0.0 (each +1 rounds away), a pairwise sum
+    # gives 1.0 — the signature is 1, not 3
+    assert sigs([([2.0**53, 1.0, 1.0, -2.0**53], 1)], 4) == [1]
+    # the same cancellation at dim=64, where np.sum splits a row over
+    # 8 partial sums: plane 0 sees 2^53, 62 ones, -2^53 -> 0.0, bit 0
+    # clear (8 partial sums give 55.0)
+    plane = sign_matrix(1, 64)[0]
+    c = [2.0**53] + [1.0] * 62 + [-2.0**53]
+    assert sigs([([s * x for s, x in zip(plane, c)], 0)], 64, bits=1) == [0]

@@ -249,53 +249,59 @@ class TestSlidingWindowProperties:
 
 
 class TestSqlStringExprParity:
-    """The hyperplane-signature, simhash, and minhash expressions are
-    built as SQL strings for driver-speed (one parse call instead of
-    thousands of py4j round-trips). These tests pin the parsed
-    expressions to independent Python reference implementations so a
-    string-builder regression cannot silently change fingerprints."""
+    """The simhash and minhash expressions are built as SQL strings for
+    driver-speed (one parse call instead of thousands of py4j
+    round-trips); the hyperplane signature is one Arrow UDF. These
+    tests pin each to an independent Python reference implementation
+    so a builder or kernel regression cannot silently change
+    fingerprints."""
 
     @given(
         vecs=st.lists(
-            st.lists(
-                st.floats(-10, 10, allow_nan=False, width=32),
-                min_size=8, max_size=8,
+            st.none() | st.lists(
+                st.floats(-10, 10, width=32)
+                | st.sampled_from([float("nan"), float("inf"),
+                                   float("-inf"), -0.0, None]),
+                min_size=7, max_size=9,
             ),
             min_size=1, max_size=8,
         ),
         bits=st.sampled_from([4, 9, 16]),
     )
-    @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-    def test_hyperplane_signature_matches_python(self, spark, vecs, bits):
-        from pyspark.sql import functions as F
+    @settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
+    def test_hyperplane_signature_matches_python(self, spark, ctx, vecs, bits):
+        import math
 
-        from conveyor_spark.datapipe.emb_lsh import sign_matrix, signature_expr
+        import numpy as np
+
+        from conveyor_spark.datapipe.emb_lsh import sign_matrix
+        from tests.conftest import run_op
 
         dim = 8
         planes = sign_matrix(bits, dim)
 
         def py_sig(v):
+            # Spark's rules: a NULL vector, a wrong length or a NULL
+            # element gives NULL; a NaN dot sets its bit (NaN orders
+            # above every number)
+            if v is None or len(v) != dim or None in v:
+                return None
             acc = 0
             for j in range(bits):
                 dot = 0.0
                 for x, s in zip(v, planes[j]):
                     # float32 storage then float64 math, like Spark
                     dot += float(np.float32(x)) * s
-                if dot > 0:
+                if dot > 0 or math.isnan(dot):
                     acc += 2**j
             return acc
 
-        import numpy as np
-
         df = spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-            "id INT, embedding ARRAY<FLOAT>",
-        )
+            list(enumerate(vecs)), "id INT, embedding ARRAY<FLOAT>")
         got = {
             r["id"]: r["sig"]
-            for r in df.select(
-                "id", signature_expr("embedding", bits, dim).alias("sig")
-            ).collect()
+            for r in run_op(ctx, "embedding.lsh", [df], output_column="sig",
+                            bits=bits, dim=dim).collect()
         }
         for i, v in enumerate(vecs):
             assert got[i] == py_sig(v)

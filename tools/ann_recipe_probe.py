@@ -49,7 +49,7 @@ sys.path.insert(0, os.path.join(REPO, "tools"))
 
 # the q152x 1024x ANN configuration (SCALE_PROBE_r12_x1024_pq)
 ANN = dict(id_column="vec_id", k=3, dim=64, bits=60, bands=4,
-           max_bucket=128, signature_method="gemm")
+           max_bucket=128)
 PQ = dict(verify="pq", m=4, codewords=16, iterations=1, rerank=6)
 
 

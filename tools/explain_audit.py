@@ -22,6 +22,15 @@ def optimized_of(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _python_is_signature(p: str, n: int) -> bool:
+    """Exactly ``n`` ArrowEvalPython lines, all the hyperplane
+    signature UDF, and no other Python operator in the plan."""
+    evals = [ln for ln in p.splitlines() if "ArrowEvalPython" in ln]
+    return (len(evals) == n
+            and all("[signature(" in ln for ln in evals)
+            and "MapInPandas" not in p and "BatchEvalPython" not in p)
+
+
 CHECKS = [
     # (query, description, predicate(plan_str, optimized_str))
     (
@@ -166,13 +175,19 @@ CHECKS = [
     ),
     (
         "q68_knn_lsh",
-        "LSH kNN join: band-bucket equi-join, nothing broadcast-nested-loop or cartesian",
-        lambda p, o: "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p,
+        "LSH kNN join: band-bucket equi-join, nothing broadcast-nested-loop "
+        "or cartesian; the only Python is the signature Arrow UDF, run "
+        "once into the persisted band frame (printed under both of its "
+        "scans: two ArrowEvalPython lines)",
+        lambda p, o: "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
+        and _python_is_signature(p, 2),
     ),
     (
         "q152_knn_lsh_scaled",
-        "occupancy-scaled LSH kNN keeps the same equi-join shape (no BNLJ/cartesian)",
-        lambda p, o: "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p,
+        "occupancy-scaled LSH kNN keeps the same equi-join shape (no "
+        "BNLJ/cartesian) and the same single persisted signature pass",
+        lambda p, o: "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
+        and _python_is_signature(p, 2),
     ),
     (
         "q161_knn_lsh_pq_verify",
@@ -376,9 +391,11 @@ CHECKS = [
     ),
     (
         "q107_dedup_hamming",
-        "hamming pairing: all-JVM (no Python), band equi-join only "
-        "(no cartesian/BNLJ), one codegen'd bit_count verify",
-        lambda p, o: "MapInPandas" not in p and "BatchEvalPython" not in p
+        "hamming pairing: the only Python is the embedding.lsh "
+        "signature Arrow UDF (one ArrowEvalPython per side of the band "
+        "self-join); the pairing is all-JVM: band equi-join only (no "
+        "cartesian/BNLJ), one codegen'd bit_count verify",
+        lambda p, o: _python_is_signature(p, 2)
         and "CartesianProduct" not in p
         and "BroadcastNestedLoopJoin" not in p and "bit_count" in p,
     ),

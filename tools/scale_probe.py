@@ -282,7 +282,7 @@ def _v_lsh_occupancy256(spark, sf_dir):
     ctx = _ctx(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return _op("knn.lsh", ctx, [e], id_column="vec_id", k=3, dim=64,
-               bits=56, bands=4, max_bucket=128, signature_method="gemm")
+               bits=56, bands=4, max_bucket=128)
 
 
 def _v_bitext_finer_block(spark, sf_dir):
@@ -326,7 +326,7 @@ def _v_lsh_occupancy1024(spark, sf_dir):
     ctx = _ctx(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return _op("knn.lsh", ctx, [e], id_column="vec_id", k=3, dim=64,
-               bits=60, bands=4, max_bucket=128, signature_method="gemm")
+               bits=60, bands=4, max_bucket=128)
 
 
 def _v_lsh_pq1024(spark, sf_dir):
@@ -346,7 +346,7 @@ def _v_lsh_pq1024(spark, sf_dir):
     ctx = _ctx(spark)
     e = load_table(spark, sf_dir, "embeddings")
     return _op("knn.lsh", ctx, [e], id_column="vec_id", k=3, dim=64,
-               bits=60, bands=4, max_bucket=128, signature_method="gemm",
+               bits=60, bands=4, max_bucket=128,
                verify="pq", m=4, codewords=16, iterations=1, rerank=6)
 
 
