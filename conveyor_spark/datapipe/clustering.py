@@ -1,17 +1,23 @@
-"""Distributed k-means over embedding columns (Lloyd's algorithm).
+"""Distributed k-means and product quantization over embedding
+columns (Lloyd's algorithm).
 
 The clustering stage of an embedding pipeline: trains the coarse
 quantizer whose assignments feed ``knn.ivf`` (its ``bucket_column``),
 drives ``dedup.embedding``-style partitioning, and answers "what's in
-this corpus" topic analysis.
+this corpus" topic analysis; the PQ ops compress vectors for ADC
+search (``knn.pq``, ``knn.ivfpq``).
+
+One trainer, ``_train_pq``: k-means is product quantization with one
+dim-wide subspace (m=1), so every op here trains through the same
+Lloyd loop, once per build for any one training (ctx.memo).
 
 Spark-first design (the MLlib KMeans shape, re-expressed on the
-DataFrame API): centroids are a driver-side list of k x dim doubles —
+DataFrame API): codebooks are a driver-side list of k x dim doubles —
 k is small by definition — embedded as literals into a pure-codegen
-assignment expression, so each Lloyd iteration is ONE distributed
-pass: per-row argmin (zero shuffle) + one groupBy(cluster, dim)
-aggregate (the only shuffle, k x dim result rows collected back).
-Nothing quadratic, no Python in the row path.
+assignment expression, so each Lloyd update is ONE distributed
+pass: per-row argmin (zero shuffle) + one groupBy(subspace, cluster,
+dim) aggregate (the only shuffle, k x dim result rows collected
+back). Nothing quadratic, no Python in the row path.
 
 Determinism (the oracle contract): a centroid is a MEAN of doubles —
 a partition-order SUM would move the result between runs. Instead
@@ -127,7 +133,13 @@ def embedding_kmeans(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
     centroid array<double>, size). Empty clusters keep their previous
     centroid (the standard Lloyd fallback).
 
-    Scale: per iteration one codegen'd argmin pass + one (cluster,
+    Training is ``_train_pq`` with m=1. Assign mode at ``iterations``
+    T is the argmin under the centroids after T-1 updates — exactly
+    what centroids mode exports at T-1, so embedding.assign_cells
+    against that table reproduces this assignment, and the two calls
+    in one build train once.
+
+    Scale: per update one codegen'd argmin pass + one (cluster,
     dim)-keyed aggregate whose k x dim output collects to the driver
     — at 1e9 vectors x dim 64 x k 1024 that is 65k result rows, not
     data. Driver-side centroid state is how Spark MLlib's own KMeans
@@ -164,55 +176,15 @@ def embedding_kmeans(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
         raise ConfigError(
             f"embedding.kmeans: k={k} but only {len(init)} usable vectors"
         )
-    centroids: list[list[float]] = [[float(x) for x in r[0]] for r in init]
-    sizes: list[int] = [0] * k
-
-    assigned = None
-    for it in range(iterations):
-        # Single-parse SQL + two-step projection (r13: _train_pq's
-        # assign pattern, verbatim rationale): the Column-builder form
-        # made k py4j lambda round-trips (measured 1.2 s of pure
-        # driver time at k=16/dim=64) and inlined the k*dim literal
-        # array into BOTH array_position and array_min — re-analyzed
-        # per training job. Arithmetic unchanged: _sub_dist_sql at
-        # start=0 is the same slice+zip_with+aggregate fold the
-        # assign_cells parity test pins (slice(v,1,dim) == v), ties
-        # to the lowest cluster; the q120/q163/q164/q165 oracles
-        # replay it.
-        dist_arr = "array(" + ", ".join(
-            _sub_dist_sql("__v", 0, c) for c in centroids) + ")"
-        assigned = clean.selectExpr(
-            "__kid", "__v", f"{dist_arr} AS __dist"
-        ).selectExpr(
-            "__kid", "__v",
-            "CAST(array_position(__dist, array_min(__dist)) - 1 AS INT)"
-            " AS __c",
-        )
-        if it == iterations - 1 and output != "centroids":
-            # assign-mode output is THIS assignment; the last update
-            # would feed only discarded centroids — skip a full pass
-            break
-        stats = (
-            assigned.select("__c", F.posexplode("__v").alias("__d", "__x"))
-            .groupBy("__c", "__d")
-            .agg(
-                F.sum(
-                    F.floor(F.col("__x").cast("double") * F.lit(_Q))
-                ).alias("__s"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .collect()
-        )
-        new_c = [list(c) for c in centroids]  # empty cluster: keep old
-        sizes = [0] * k
-        for r in stats:
-            new_c[r["__c"]][r["__d"]] = r["__s"] / (_Q * r["__n"])
-            sizes[r["__c"]] = r["__n"]
-        centroids = new_c
+    # assign at T is the argmin under the centroids after T-1 updates
+    # (a last update would feed only discarded centroids)
+    updates = iterations if output == "centroids" else iterations - 1
+    codebooks, sizes, assigned = _train_pq(ctx, clean, dim, 1, k, updates)
+    centroids = codebooks[0]
 
     if output == "centroids":
         out = ctx.spark.createDataFrame(
-            [(j, centroids[j], sizes[j]) for j in range(k)],
+            [(j, centroids[j], sizes[0][j]) for j in range(k)],
             f"{out_col} INT, centroid ARRAY<DOUBLE>, size LONG",
         )
         # register the driver-side values as this frame's collect, so
@@ -220,7 +192,7 @@ def embedding_kmeans(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
         ctx.memo(("rows", out, (out_col, "centroid")), lambda: [
             {out_col: j, "centroid": centroids[j]} for j in range(k)])
         return out
-    result = assigned.select("__kid", F.col("__c").alias(out_col))
+    result = assigned.select("__kid", F.col("__c0").alias(out_col))
     return df.join(
         result, df[id_column] == result["__kid"], "left"
     ).drop("__kid")
@@ -247,84 +219,95 @@ def _sub_dist_sql(vec_sql: str, start: int, codeword: list[float]) -> str:
     )
 
 
-def _train_pq(ctx, clean: DataFrame, dim: int, m: int, k: int, iterations: int,
-              op: str = "embedding.pq"):
-    """Shared PQ trainer: per-subspace Lloyd's with the module's
-    determinism recipe, ALL subspaces advanced in one distributed
-    pass per iteration. ``clean`` is _clean's training frame. Returns
-    (codebooks[m][k][sd], final assigned DataFrame with
-    __c0.._c{m-1} columns from the post-update encode pass — knn.pq's
-    inline codes, and the reference pq_encoder is tested against)."""
+def _nearest_codes(df_in: DataFrame, codebooks: list, sd: int) -> DataFrame:
+    """(__kid, __v, __c0..__c{m-1}): each row's nearest codeword per
+    subspace. Two-step: distances land in their own projection, argmin
+    reads the ATTRIBUTE. One-step argmin inlines the m*k*sd literal
+    fold twice (array_position + array_min each embed the dists
+    array) — ~150 KB of expression text per assign that Catalyst
+    re-analyzes per job and interpreted mode evaluates twice per row.
+    CollapseProject will NOT merge the two selects (the dists attr is
+    referenced twice and is non-cheap), so the literals stay
+    single-copy. The argmin ties to the lowest index; pq_encoder
+    reproduces it bit for bit, and the q120/q121/q126/q161/q163
+    oracles pin both."""
+    m = len(codebooks)
+    dists = df_in.selectExpr(
+        "__kid", "__v",
+        *["array(" + ", ".join(
+            _sub_dist_sql("__v", s * sd, cw) for cw in codebooks[s]
+          ) + f") AS __d{s}"
+          for s in range(m)],
+    )
+    return dists.selectExpr(
+        "__kid", "__v",
+        *[f"CAST(array_position(__d{s}, array_min(__d{s})) - 1 "
+          f"AS INT) AS __c{s}"
+          for s in range(m)],
+    )
+
+
+def _train_pq(ctx: OpContext, clean: DataFrame, dim: int, m: int, k: int,
+              updates: int, op: str = "embedding.pq"):
+    """The one Lloyd trainer (embedding.kmeans is its m=1 case): the
+    module's determinism recipe, ALL m subspaces advanced in one
+    distributed pass per update over _clean's frame, once per (clean,
+    m, k, updates) per build via ctx.memo. Returns (codebooks[m][k][sd],
+    sizes[m][k] — member counts of the last stats pass, zeros with no
+    updates — and _nearest_codes(clean) under the final codebooks)."""
     sd = dim // m
-    init = _first_k(ctx, clean, k)
-    if len(init) < k:
-        raise ConfigError(
-            f"{op}: {k} codewords per subspace but only "
-            f"{len(init)} usable vectors"
-        )
-    codebooks = [
-        [[float(x) for x in r[0][s * sd:(s + 1) * sd]] for r in init]
-        for s in range(m)
-    ]
 
-    def assign(df_in: DataFrame) -> DataFrame:
-        # two-step: distances land in their own projection, argmin
-        # reads the ATTRIBUTE. One-step argmin inlines the m*k*sd
-        # literal fold twice (array_position + array_min each embed
-        # the dists array) — ~150 KB of expression text per assign
-        # that Catalyst re-analyzes per job and interpreted mode
-        # evaluates twice per row. CollapseProject will NOT merge the
-        # two selects (the dists attr is referenced twice and is
-        # non-cheap), so the literals stay single-copy. The argmin
-        # ties to the lowest index; pq_encoder reproduces it bit for
-        # bit, and the q120/q121/q126/q161 oracles pin both.
-        dists = df_in.selectExpr(
-            "__kid", "__v",
-            *["array(" + ", ".join(
-                _sub_dist_sql("__v", s * sd, cw) for cw in codebooks[s]
-              ) + f") AS __d{s}"
-              for s in range(m)],
-        )
-        return dists.selectExpr(
-            "__kid", "__v",
-            *[f"CAST(array_position(__d{s}, array_min(__d{s})) - 1 "
-              f"AS INT) AS __c{s}"
-              for s in range(m)],
-        )
+    def train() -> tuple[list, list]:
+        init = _first_k(ctx, clean, k)
+        if len(init) < k:
+            raise ConfigError(
+                f"{op}: {k} codewords per subspace but only "
+                f"{len(init)} usable vectors"
+            )
+        codebooks = [
+            [[float(x) for x in r[0][s * sd:(s + 1) * sd]] for r in init]
+            for s in range(m)
+        ]
+        sizes = [[0] * k for _ in range(m)]
+        for _ in range(updates):
+            assigned = _nearest_codes(clean, codebooks, sd)
+            # one stats pass for ALL subspaces: dim index -> subspace
+            cl = F.element_at(
+                F.array(*[F.col(f"__c{s}") for s in range(m)]),
+                (F.floor(F.col("__d") / F.lit(sd)) + 1).cast("int"),
+            )
+            stats = (
+                assigned.select(
+                    *[f"__c{s}" for s in range(m)],
+                    F.posexplode("__v").alias("__d", "__x"),
+                )
+                .select(
+                    F.floor(F.col("__d") / F.lit(sd)).cast("int").alias("__s"),
+                    cl.alias("__cl"),
+                    F.col("__d").alias("__d"),
+                    F.col("__x"),
+                )
+                .groupBy("__s", "__cl", "__d")
+                .agg(
+                    F.sum(
+                        F.floor(F.col("__x").cast("double") * F.lit(_Q))
+                    ).alias("__sum"),
+                    F.count(F.lit(1)).alias("__n"),
+                )
+                .collect()
+            )
+            # an empty codeword keeps its previous value (the standard
+            # Lloyd fallback) and size 0
+            codebooks = [[list(c) for c in codebooks[s]] for s in range(m)]
+            sizes = [[0] * k for _ in range(m)]
+            for r in stats:
+                s, j = r["__s"], r["__cl"]
+                codebooks[s][j][r["__d"] - s * sd] = r["__sum"] / (_Q * r["__n"])
+                sizes[s][j] = r["__n"]
+        return codebooks, sizes
 
-    for _ in range(iterations):
-        assigned = assign(clean)
-        # one stats pass for ALL subspaces: dim index -> subspace
-        cl = F.element_at(
-            F.array(*[F.col(f"__c{s}") for s in range(m)]),
-            (F.floor(F.col("__d") / F.lit(sd)) + 1).cast("int"),
-        )
-        stats = (
-            assigned.select(
-                *[f"__c{s}" for s in range(m)],
-                F.posexplode("__v").alias("__d", "__x"),
-            )
-            .select(
-                F.floor(F.col("__d") / F.lit(sd)).cast("int").alias("__s"),
-                cl.alias("__cl"),
-                F.col("__d").alias("__d"),
-                F.col("__x"),
-            )
-            .groupBy("__s", "__cl", "__d")
-            .agg(
-                F.sum(
-                    F.floor(F.col("__x").cast("double") * F.lit(_Q))
-                ).alias("__sum"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .collect()
-        )
-        new_cb = [[list(c) for c in codebooks[s]] for s in range(m)]
-        for r in stats:
-            s, j = r["__s"], r["__cl"]
-            new_cb[s][j][r["__d"] - s * sd] = r["__sum"] / (_Q * r["__n"])
-        codebooks = new_cb
-    return codebooks, assign(clean)
+    codebooks, sizes = ctx.memo(("lloyd", clean, m, k, updates), train)
+    return codebooks, sizes, _nearest_codes(clean, codebooks, sd)
 
 
 def check_encode_method(config: dict, op: str) -> None:
@@ -587,7 +570,7 @@ def embedding_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
         raise ConfigError(
             f"embedding.pq: dim {dim} not divisible by m={m}"
         )
-    codebooks, _ = _train_pq(ctx, clean, dim, m, k, iterations)
+    codebooks, _, _ = _train_pq(ctx, clean, dim, m, k, iterations)
 
     if output == "codebooks":
         rows = [
@@ -758,8 +741,8 @@ def knn_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> D
         if dim % m != 0:
             raise ConfigError(f"knn.pq: dim {dim} not divisible by m={m}")
         sd = dim // m
-        codebooks, encoded = _train_pq(ctx, clean, dim, m, kw, iterations,
-                                       op="knn.pq")
+        codebooks, _, encoded = _train_pq(ctx, clean, dim, m, kw,
+                                          iterations, op="knn.pq")
         # corpus side: skinny (id, subspace, code) triples
         codes = encoded.select(
             "__kid",

@@ -4,11 +4,12 @@ Scale design:
 - exact: hash-groupBy on a fingerprint — one shuffle of (hash, id),
   never of full documents.
 - minhash_lsh: signatures are computed per-row with pure array
-  expressions (shingle -> k seeded md5 hashes -> array_min), no
-  explode and no Python; LSH banding explodes only (doc_id, band)
-  pairs — k*|docs| tiny rows — and joins within buckets. This is the
-  textbook distributed MinHash-LSH; candidate verification joins
-  signatures back (not texts).
+  expressions (shingle -> one 28-bit md5 base hash -> k universal
+  integer mixes (a_i*h + b_i) mod P -> array_min), no explode and no
+  Python; LSH banding explodes only (doc_id, band) pairs — k*|docs|
+  tiny rows — and joins within buckets. This is the textbook
+  distributed MinHash-LSH; candidate verification joins signatures
+  back (not texts).
 - simhash: per-row bit aggregation over token hashes via array
   expressions; near-dup = equal simhash (or banded bit-blocks).
 - ngram_jaccard: exact pairwise Jaccard via token-posting-list
@@ -25,7 +26,7 @@ from pyspark.sql import functions as F
 
 from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
-from conveyor_spark.datapipe.hashing import md5_int, seeded
+from conveyor_spark.datapipe.hashing import md5_int
 
 # Universal-hash parameters for MinHash: ONE 28-bit md5 base hash per
 # shingle, then k cheap integer mixes h_i = (a_i*h + b_i) mod P.
@@ -162,38 +163,9 @@ def word_shingles_expr(col: str, n: int) -> Column:
     )
 
 
-def _seeded_hash_fn(seed: int):
-    """1-arg lambda factory. NB: binding the seed as a lambda default
-    (``lambda s, i=i``) silently changes PySpark's higher-order-function
-    arity — the 2nd parameter becomes the ARRAY INDEX — so seeds must
-    be captured by closure."""
-    def fn(s: Column) -> Column:
-        return seeded(s, seed)  # hashing.py: THE portable seeded hash
-
-    return fn
-
-
 def base_hash28(s: Column) -> Column:
     """28-bit md5-prefix hash (fits universal-hash products in int64)."""
     return F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("bigint")
-
-
-def _universal_mix_fn(i: int):
-    a, b = minhash_params(i)
-
-    def fn(h: Column) -> Column:
-        return (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    return fn
-
-
-def minhash_signature(shingles: Column, num_hashes: int) -> list[Column]:
-    """k min-hash values via seeded md5 (k md5 evaluations/shingle).
-    Prefer the universal-hash path in dedup.minhash — kept for
-    compatibility and tests."""
-    return [
-        F.array_min(F.transform(shingles, _seeded_hash_fn(i))) for i in range(num_hashes)
-    ]
 
 
 @register(
@@ -939,9 +911,7 @@ def dedup_hamming(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
         for j, (s, w) in enumerate(spans)
     ])
     # the fingerprint IS 8 bytes — unlike knn.lsh's vectors it rides
-    # the band rows, so the verify needs no extra id-keyed joins (and
-    # the fingerprint subtree, possibly an expensive simhash fold, is
-    # evaluated once per side instead of twice more)
+    # the band rows, so the verify needs no extra id-keyed joins
     banded = side.select("__id", "__fp", F.explode(bandvals).alias("__b"))
     if (max_bucket := config.get("max_bucket")) is not None:
         from pyspark.sql import Window
@@ -952,6 +922,10 @@ def dedup_hamming(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
             .filter(F.col("__bn") <= int(max_bucket))
             .drop("__bn")
         )
+    # Persisted: both self-join sides otherwise re-run the fingerprint
+    # subtree (possibly a simhash fold or a signature UDF) per row —
+    # dedup.minhash's bucket-frame rationale
+    banded = ctx.persist(banded)
     a = banded.select(F.col("__id").alias("__ida"),
                       F.col("__fp").alias("__fpa"),
                       F.col("__b").alias("__ba"))

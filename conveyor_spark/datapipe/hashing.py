@@ -22,12 +22,3 @@ def md5_int(col: Column) -> Column:
 def md5_int_sql(expr: str) -> str:
     """DuckDB-equivalent of :func:`md5_int` for oracle SQL."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def seeded(col: Column, seed: int) -> Column:
-    """Seeded variant: hash(concat(x, '#', seed))."""
-    return md5_int(F.concat(col, F.lit(f"#{seed}")))
-
-
-def seeded_sql(expr: str, seed: int) -> str:
-    return md5_int_sql(f"{expr} || '#{seed}'")

@@ -44,12 +44,6 @@ def norm_expr(a: Column) -> Column:
     )
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    """One-shot cosine (norms recomputed per call) — convenience for
-    single-pass uses; pair joins should pre-project norms instead."""
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def pair_cosine(qv: Column, cv: Column, qn: Column, cn: Column) -> Column:
     """cosine from pre-projected norms: dot/(qn*cn) — same arithmetic
     shape as dot/(sqrt(qq)*sqrt(cc)), so external oracles match."""
@@ -401,8 +395,8 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
         check_encode_method(config, "knn.lsh")
         sd = dim // m
         clean, _ = _clean(ctx, corpus, id_column, column, dim, "knn.lsh")
-        codebooks, _ = _train_pq(ctx, clean, dim, m, kw, iterations,
-                                 op="knn.lsh")
+        codebooks, _, _ = _train_pq(ctx, clean, dim, m, kw, iterations,
+                                    op="knn.lsh")
         # the one encode engine, a scalar Arrow UDF over the vectors:
         # bit-exact with the training fold (q161's oracle proves it);
         # the JVM fold is an interpreted HOF at ~ms/row

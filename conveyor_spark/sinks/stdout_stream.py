@@ -65,7 +65,7 @@ def stdout_stream_write(ctx: OpContext, inputs: list[DataFrame], config: dict[st
     out = config.get("_out", sys.stdout)  # test hook
     if df.isStreaming:
         from conveyor_spark.streaming.ops import (
-            LAST_PROGRESS, checkpoint_tmpdir, consume_state_partitions,
+            RECENT_PROGRESS, checkpoint_tmpdir, consume_state_partitions,
             drain_conf, resolve_state_partitions,
         )
 
@@ -100,15 +100,15 @@ def stdout_stream_write(ctx: OpContext, inputs: list[DataFrame], config: dict[st
             query.awaitTermination()
         finally:
             ckpt.cleanup()
-        # same observability hook run_available_now keeps: the
-        # final progress carries stateOperators (rows/memory/
+        # same observability hook run_available_now keeps: each
+        # batch's progress carries stateOperators (rows/memory/
         # numShufflePartitions) for probes and tests; the
         # stage-qualified key keeps MULTI-sink pipelines readable
         # (the bare key records the last drain only)
-        prog = query.lastProgress or {}
-        LAST_PROGRESS["stdout_stream.write"] = prog
+        prog = list(query.recentProgress or [])
+        RECENT_PROGRESS["stdout_stream.write"] = prog
         if ctx.stage_id:
-            LAST_PROGRESS[f"stdout_stream.write:{ctx.stage_id}"] = prog
+            RECENT_PROGRESS[f"stdout_stream.write:{ctx.stage_id}"] = prog
         return None
     for row in df.toLocalIterator():
         out.write(_fmt_row(row.asDict(recursive=True), fmt, pretty) + "\n")

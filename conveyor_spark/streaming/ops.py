@@ -405,14 +405,13 @@ def _checkpoint_has_commits(spark: SparkSession, checkpoint: str) -> bool:
         )
 
 
-# Observability hook: after each drain completes, the query's final
-# StreamingQueryProgress (state-operator rows/memory, batch timing) is
-# recorded here keyed by query_name. Read by tools/streaming_probe.py
-# to assert state-store bounds at scale; no behavioral effect.
-LAST_PROGRESS: dict[str, dict] = {}
-# The PER-BATCH progress list of the same drain (recentProgress) —
-# the state-growth curve tools/stream_soak.py plots to prove state
-# PLATEAUS under watermark eviction rather than growing with batches.
+# Observability hook: after each drain completes, its PER-BATCH
+# StreamingQueryProgress list (recentProgress: state-operator
+# rows/memory, batch timing) is recorded here keyed by query name;
+# the final progress is its [-1]. tools/streaming_probe.py asserts
+# state-store bounds at scale from the last entry, tools/stream_soak.py
+# plots the whole curve to prove state PLATEAUS under watermark
+# eviction rather than growing with batches. No behavioral effect.
 RECENT_PROGRESS: dict[str, list] = {}
 
 
@@ -494,7 +493,6 @@ def run_available_now(
         had_commits = _checkpoint_has_commits(spark, checkpoint)
         q = start(checkpoint)
         q.awaitTermination()
-        LAST_PROGRESS[query_name] = q.lastProgress or {}
         RECENT_PROGRESS[query_name] = list(q.recentProgress or [])
         # mirror the memory sink's semantics over collected batches:
         # complete mode = the last batch IS the result; update/append
@@ -515,7 +513,6 @@ def run_available_now(
     with checkpoint_tmpdir("conveyor-ckpt-") as ckpt:
         q = start(ckpt)
         q.awaitTermination()
-        LAST_PROGRESS[query_name] = q.lastProgress or {}
         RECENT_PROGRESS[query_name] = list(q.recentProgress or [])
     return sdf.sparkSession.table(query_name)
 

@@ -2,9 +2,10 @@
 
 The IVFPQ compositions share work between the ops of ONE build
 through ctx.memo: the persisted training frame (`_clean`), its first-k
-init collect (`_first_k`) and the centroids/codebooks collects
-(`_collect_once`, which the producer ops pre-register). Each has an
-invariant a future edit could silently break:
+init collect (`_first_k`), the Lloyd training itself (`_train_pq`) and
+the centroids/codebooks collects (`_collect_once`, which the producer
+ops pre-register). Each has an invariant a future edit could silently
+break:
 
 - producer-registered rows agree VALUE-FOR-VALUE with a real collect
   of the same frame (the parser consumes whichever is present);
@@ -19,6 +20,7 @@ invariant a future edit could silently break:
 from __future__ import annotations
 
 import tomllib
+import uuid
 from pathlib import Path
 
 from pyspark.sql import Row
@@ -128,6 +130,50 @@ def test_load_table_codebooks_collected_again_in_a_new_build(spark, sf_dir):
     assert not set(ctx1.persisted) & set(ctx2.persisted)
     ctx1.release_persisted()
     ctx2.release_persisted()
+
+
+def _jobs_of(spark, group: str, thunk):
+    """(thunk(), number of Spark jobs it launched), counted through a
+    job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_kmeans_training_shared_within_a_build(spark, sf_dir):
+    """kmeans assign at T=2 and centroids at T=1 ask _train_pq for the
+    same training (one update): in one build the second call launches
+    no Spark job at all. A fresh OpContext trains again, and another
+    k misses the memo."""
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cfg = dict(id_column="vec_id", column="embedding", dim=64)
+    tag = f"memo-{uuid.uuid4().hex}"
+
+    def centroids(ctx, k):
+        return run_op(ctx, "embedding.kmeans", [e], k=k, iterations=1,
+                      output="centroids", **cfg)
+
+    ctx = OpContext(spark=spark)
+    run_op(ctx, "embedding.kmeans", [e], k=4, iterations=2, **cfg)
+    shared, jobs = _jobs_of(spark, f"{tag}-hit", lambda: centroids(ctx, 4))
+    assert jobs == 0
+
+    fresh = OpContext(spark=spark)
+    own, jobs = _jobs_of(spark, f"{tag}-fresh", lambda: centroids(fresh, 4))
+    assert jobs > 0
+    assert sorted(map(tuple, shared.collect())) == \
+        sorted(map(tuple, own.collect()))  # same centroids and sizes
+
+    clean, _ = _clean(ctx, e, "vec_id", "embedding", 64, "test")
+    _first_k(ctx, clean, 3)  # the init collect is not what is counted
+    other, jobs = _jobs_of(spark, f"{tag}-k3", lambda: centroids(ctx, 3))
+    assert jobs > 0 and other.count() == 3
+    ctx.release_persisted()
+    fresh.release_persisted()
 
 
 def test_no_conveyor_attributes_on_outputs(spark, sf_dir):

@@ -82,7 +82,7 @@ def test_kmeans_matches_python_reference(ctx, vdf, vecs):
     import numpy as np
 
     v32 = {i: [float(np.float32(x)) for x in v] for i, v in vecs.items()}
-    for k, iters in ((2, 3), (3, 2)):
+    for k, iters in ((2, 3), (3, 2), (2, 1)):
         exp_assign, exp_cent, exp_sizes = py_kmeans(v32, k, iters)
         out = run_op(ctx, "embedding.kmeans", [vdf], id_column="vec_id",
                      k=k, iterations=iters)
@@ -434,7 +434,7 @@ def fold_codes(ctx, df, m: int, k: int, iterations: int) -> dict:
     from conveyor_spark.datapipe.clustering import _clean, _train_pq
 
     clean, dim = _clean(ctx, df, "vec_id", "embedding", None, "embedding.pq")
-    _, encoded = _train_pq(ctx, clean, dim, m, k, iterations)
+    _, _, encoded = _train_pq(ctx, clean, dim, m, k, iterations)
     return {r["__kid"]: tuple(r["c"]) for r in encoded.select(
         "__kid", F.array(*[f"__c{s}" for s in range(m)]).alias("c")
     ).collect()}

@@ -113,7 +113,7 @@ def test_gemm_encode_codes_bit_matches_fold(ctx, spark):
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     clean, dim = _clean(ctx, e, "vec_id", "embedding", 64, "embedding.pq")
-    codebooks, encoded = _train_pq(ctx, clean, 64, 4, 16, 1)
+    codebooks, _, encoded = _train_pq(ctx, clean, 64, 4, 16, 1)
     fold = {
         r["__kid"]: tuple(r["c"])
         for r in encoded.select(

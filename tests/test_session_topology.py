@@ -13,7 +13,9 @@ from __future__ import annotations
 
 import os
 
-from conveyor_spark.session import _topology_conf
+import pytest
+
+from conveyor_spark.session import _topology_conf, local_cpus
 
 
 def test_multi_jvm_masters_get_executor_pythonpath(monkeypatch):
@@ -47,3 +49,17 @@ def test_executor_memory_env(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_EXECUTOR_MEM", "3g")
     conf = _topology_conf("local-cluster[2,16,4096]")
     assert conf["spark.executor.memory"] == "3g"
+
+
+def test_local_cpus_default_is_the_usable_core_count(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    assert local_cpus() == 7
+
+
+@pytest.mark.parametrize("bad", ["", "0", "-2", "four", "2.5", "32x"])
+def test_local_cpus_rejects_a_non_positive_integer(monkeypatch, bad):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        local_cpus()

@@ -627,7 +627,7 @@ def test_state_partitions_applied_at_stdout_stream_drain(spark, tmp_path,
     import json as _j
 
     from conveyor_spark.registry import OpContext
-    from conveyor_spark.streaming.ops import LAST_PROGRESS
+    from conveyor_spark.streaming.ops import RECENT_PROGRESS
     from tests.conftest import run_op
 
     monkeypatch.delenv("SPARK_GRAFT_STATE_PARTITIONS", raising=False)
@@ -645,7 +645,7 @@ def test_state_partitions_applied_at_stdout_stream_drain(spark, tmp_path,
     before = spark.conf.get("spark.sql.shuffle.partitions")
     run_op(fresh, "stdout_stream.write", [deduped], format="jsonl")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    prog = LAST_PROGRESS.get("stdout_stream.write") or {}
+    prog = (RECENT_PROGRESS.get("stdout_stream.write") or [{}])[-1]
     ops_ = prog.get("stateOperators") or []
     assert ops_, f"no stateOperators in final progress: {prog.keys()}"
     assert int(ops_[0]["numShufflePartitions"]) == 3
@@ -730,7 +730,7 @@ def test_state_partitions_request_consumed_once(spark, tmp_path,
     import json as _j
 
     from conveyor_spark.registry import OpContext
-    from conveyor_spark.streaming.ops import LAST_PROGRESS
+    from conveyor_spark.streaming.ops import RECENT_PROGRESS
     from tests.conftest import run_op
 
     monkeypatch.delenv("SPARK_GRAFT_STATE_PARTITIONS", raising=False)
@@ -755,7 +755,7 @@ def test_state_partitions_request_consumed_once(spark, tmp_path,
     second = run_op(ctx2, "stream.dedup", [sdf()], columns=["k"],
                     time_column="ts")  # no request this time
     run_op(ctx2, "stdout_stream.write", [second], format="jsonl")
-    prog = LAST_PROGRESS.get("stdout_stream.write") or {}
+    prog = (RECENT_PROGRESS.get("stdout_stream.write") or [{}])[-1]
     ops_ = prog.get("stateOperators") or []
     assert ops_ and int(ops_[0]["numShufflePartitions"]) != 3
 
@@ -771,7 +771,7 @@ def test_state_partitions_two_streams_resolve_independently(
 
     from conveyor_spark.compiler import run_pipeline
     from conveyor_spark.config.spec import load_spec
-    from conveyor_spark.streaming.ops import LAST_PROGRESS
+    from conveyor_spark.streaming.ops import RECENT_PROGRESS
 
     monkeypatch.delenv("SPARK_GRAFT_STATE_PARTITIONS", raising=False)
     d_a, d_b = tmp_path / "in_a", tmp_path / "in_b"
@@ -833,7 +833,8 @@ output_mode = "complete"
     assert not result.errors, result.errors
 
     def sp_of(stage):
-        prog = LAST_PROGRESS.get(f"stdout_stream.write:{stage}") or {}
+        prog = (RECENT_PROGRESS.get(f"stdout_stream.write:{stage}")
+                or [{}])[-1]
         ops_ = prog.get("stateOperators") or []
         assert ops_, f"no progress for {stage}"
         return int(ops_[0]["numShufflePartitions"])

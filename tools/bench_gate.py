@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Host-normalized per-query bench gate with FITTED error bars.
 
-bench_compare.py flags slowdowns past a fixed 2.0x after calibration
-normalization; this tool replaces the fixed threshold with per-query
-error bars fitted from the committed bench history — automating the
+Flags per-query slowdowns after calibration normalization, against
+per-query error bars fitted from the committed bench history (not a
+fixed threshold) — automating the
 analysis VERDICT r12 had to do by hand to clear the misleading
 126.9 s vs 101.8 s raw driver numbers (a 1.33x host-factor artifact).
 
@@ -52,7 +52,7 @@ TOL_PAD = 1.15         # envelope padding over the observed max dev
 def load_bench(path: str) -> dict | None:
     """Normalize one artifact to {queries: {q: sec}, calibration}.
     Accepts bench.py's own JSON or the driver wrapper (parsed /
-    tail-scraped, bench_compare.py's recovery path)."""
+    tail-scraped)."""
     try:
         with open(path) as f:
             d = json.load(f)

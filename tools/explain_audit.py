@@ -392,8 +392,9 @@ CHECKS = [
     (
         "q107_dedup_hamming",
         "hamming pairing: the only Python is the embedding.lsh "
-        "signature Arrow UDF (one ArrowEvalPython per side of the band "
-        "self-join); the pairing is all-JVM: band equi-join only (no "
+        "signature Arrow UDF, run once into the persisted band frame "
+        "(printed under both of its scans: two ArrowEvalPython lines); "
+        "the pairing is all-JVM: band equi-join only (no "
         "cartesian/BNLJ), one codegen'd bit_count verify",
         lambda p, o: _python_is_signature(p, 2)
         and "CartesianProduct" not in p

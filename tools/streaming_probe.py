@@ -45,7 +45,7 @@ STREAMING_SET = ["q63_stream_session_window", "q66_stream_join",
                  "q154_stream_dedup"]
 
 # query name -> the run_available_now drain name it uses (the key
-# LAST_PROGRESS records under)
+# RECENT_PROGRESS records under)
 DRAIN_NAMES = {
     "q63_stream_session_window": "q63_sessions",
     "q66_stream_join": "q66_stream_join",
@@ -148,7 +148,7 @@ def main() -> int:
     from check_oracle import frame_hash
     from conveyor_spark.queries import QUERIES
     from conveyor_spark.session import get_spark
-    from conveyor_spark.streaming.ops import LAST_PROGRESS
+    from conveyor_spark.streaming.ops import RECENT_PROGRESS
 
     spark = get_spark(app_name="conveyor-streaming-probe",
                       shuffle_partitions=32)
@@ -206,7 +206,7 @@ def main() -> int:
                 # clear the hook first: a failed run must not inherit
                 # the PREVIOUS provider's progress (stale metrics in
                 # the artifact would look like a real measurement)
-                LAST_PROGRESS.pop(DRAIN_NAMES[name], None)
+                RECENT_PROGRESS.pop(DRAIN_NAMES[name], None)
                 t0 = time.time()
                 try:
                     df = QUERIES[name](spark, probe_dir)
@@ -222,15 +222,15 @@ def main() -> int:
                 if err:
                     violations.append(f"{name}[{prov}]: ERROR {err}")
                     continue
-                prog = LAST_PROGRESS.get(DRAIN_NAMES[name])
-                if prog is None:
+                progs = RECENT_PROGRESS.get(DRAIN_NAMES[name])
+                if progs is None:
                     # drain-name drift would otherwise silently void
                     # the state assertions (state_operators==0
                     # short-circuits the zero-rows check)
                     violations.append(
                         f"{name}[{prov}]: no progress recorded under "
                         f"drain name {DRAIN_NAMES[name]!r}")
-                    prog = {}
+                prog = progs[-1] if progs else {}
                 sm = state_metrics(prog)
                 prec.update(sm)
                 h = frame_hash(cols, rows)
