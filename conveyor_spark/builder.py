@@ -10,7 +10,8 @@ Flow per stage:
 4. each REQUIRED parameter (re-prompt until valid), then each optional
    parameter (empty keeps the default)
 5. values are coerced by the declared Param.type and checked against
-   allowed values / ranges (ParameterValidation parity)
+   allowed values / ranges by the registry's own `param_errors`
+   (ParameterValidation parity)
 
 The assembled stage is appended through scaffold.add_stage's validated
 append (re-parse; restore on failure), so a built pipeline always
@@ -23,7 +24,7 @@ import json
 from typing import Any, Callable, TextIO
 
 from conveyor_spark.errors import ConfigError, FunctionNotFound
-from conveyor_spark.registry import Op, Param, get_function
+from conveyor_spark.registry import Op, Param, get_function, param_errors
 
 PromptFn = Callable[[str], str]
 
@@ -52,17 +53,6 @@ def _coerce(p: Param, raw: str) -> Any:
                 raise ValueError(f"not valid JSON for an object value: {raw!r}")
             return raw
     return raw
-
-
-def _check(p: Param, value: Any) -> str | None:
-    if p.allowed is not None and isinstance(value, str) and value not in p.allowed:
-        return f"must be one of: {', '.join(p.allowed)}"
-    if isinstance(value, (int, float)) and not isinstance(value, bool):
-        if p.min is not None and value < p.min:
-            return f"must be >= {p.min}"
-        if p.max is not None and value > p.max:
-            return f"must be <= {p.max}"
-    return None
 
 
 class StageBuilder:
@@ -96,8 +86,9 @@ class StageBuilder:
                 # None — that must not satisfy a REQUIRED parameter
                 self.say(f"    {p.name} is required — {p.desc}")
                 continue
-            if err := _check(p, value):
-                self.say(f"    invalid: {err}")
+            # the same value check a run makes before the op body
+            if errors := param_errors(p, value):
+                self.say(f"    invalid: {'; '.join(errors)}")
                 continue
             return value
 

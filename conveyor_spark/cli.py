@@ -291,13 +291,13 @@ def main(argv: list[str] | None = None) -> int:
         import importlib
 
         from conveyor_spark.errors import FunctionNotFound
-        from conveyor_spark.registry import get_function, validate_config
+        from conveyor_spark.registry import config_errors, get_function, unknown_params
 
         # load declared plugins so their ops resolve; a plugin that
         # fails to import here keeps its functions lenient (they may
         # only be importable in the run environment)
         lenient = False
-        n_warn = 0
+        n_warn = n_bad = 0
         for mod in spec.plugins:
             try:
                 importlib.import_module(mod)
@@ -341,10 +341,17 @@ def main(argv: list[str] | None = None) -> int:
                     )
                     return 2
                 continue
-            for w in validate_config(op, stage.config):
+            for w in unknown_params(op, stage.config):
                 print(f"warning: stage {stage.id!r} ({stage.function}): {w}",
                       file=sys.stderr)
                 n_warn += 1
+            # the same check `run` raises on before the op body runs
+            for e in config_errors(op, stage.config):
+                print(f"invalid pipeline: stage {stage.id!r} "
+                      f"({stage.function}): {e}", file=sys.stderr)
+                n_bad += 1
+        if n_bad:
+            return 2
         suffix = f", {n_warn} warnings" if n_warn else ""
         print(f"pipeline {spec.name!r} OK ({len(spec.stages)} stages{suffix})")
         return 0

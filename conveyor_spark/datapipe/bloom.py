@@ -242,14 +242,9 @@ def decontam_bloom(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
         raise ConfigError("decontam.bloom needs [corpus, reference] inputs")
     corpus, ref = inputs
     column = config.get("column")
-    id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("decontam.bloom requires 'column' and 'id_column'")
     bench_column = config.get("bench_column", column)
     n = int(config.get("ngram", 8))
     mode = config.get("mode", "flag")
-    if mode not in ("flag", "filter"):
-        raise ConfigError("decontam.bloom: mode must be flag|filter")
     out_col = config.get("output_column", "contaminated")
     fpp = float(config.get("fpp", 1e-6))
     if not (0.0 < fpp < 1.0):

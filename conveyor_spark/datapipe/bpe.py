@@ -200,8 +200,6 @@ def bpe_train(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     driver — bounded memory no matter the corpus size."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.bpe_train requires 'column'")
     n_merges = int(config.get("n_merges", 1000))
     max_words = int(config.get("max_words", 1_000_000))
     min_freq = int(config.get("min_freq", 1))
@@ -253,8 +251,6 @@ def bpe_encode(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     Scale: pure map — no shuffle; the merge table rides the closure."""
     df, merges_df = inputs[0], inputs[1]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.bpe_encode requires 'column'")
     for need in ("rank", "left", "right"):
         if need not in merges_df.columns:
             raise ConfigError(

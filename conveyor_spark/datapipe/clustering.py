@@ -148,22 +148,17 @@ def embedding_kmeans(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
     are not."""
     df = inputs[0]
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("embedding.kmeans requires 'id_column'")
     column = config.get("column", "embedding")
     for c in (id_column, column):
         if c not in df.columns:
             raise ConfigError(f"embedding.kmeans: no column {c!r}")
-    k = config.get("k")
-    if not k or int(k) < 1:
+    k = int(config["k"])
+    if k < 1:
         raise ConfigError("embedding.kmeans requires 'k' >= 1")
-    k = int(k)
     iterations = int(config.get("iterations", 5))
     if iterations < 1:
         raise ConfigError("embedding.kmeans: iterations must be >= 1")
     output = config.get("output", "assign")
-    if output not in ("assign", "centroids"):
-        raise ConfigError("embedding.kmeans: output must be assign|centroids")
     out_col = config.get("output_column", "cluster")
 
     # one persisted training frame per (input, projection, dim) per
@@ -308,17 +303,6 @@ def _train_pq(ctx: OpContext, clean: DataFrame, dim: int, m: int, k: int,
 
     codebooks, sizes = ctx.memo(("lloyd", clean, m, k, updates), train)
     return codebooks, sizes, _nearest_codes(clean, codebooks, sd)
-
-
-def check_encode_method(config: dict, op: str) -> None:
-    """Validate the retired ``encode_method`` param: "fold" and
-    "gemm" both run ``pq_encoder``, but a typo ('GEMM', 'arrow') is
-    still an error — registry `allowed` only WARNS."""
-    em = config.get("encode_method", "fold")
-    if em not in ("fold", "gemm"):
-        raise ConfigError(
-            f"{op}: encode_method={em!r} is not one of 'fold'|'gemm'"
-        )
 
 
 def pq_encoder(codebooks: list, m: int, sd: int):
@@ -541,8 +525,6 @@ def embedding_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     many knn.pq searches against it."""
     df = inputs[0]
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("embedding.pq requires 'id_column'")
     column = config.get("column", "embedding")
     for c in (id_column, column):
         if c not in df.columns:
@@ -553,10 +535,7 @@ def embedding_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     if m < 1 or k < 1 or iterations < 1:
         raise ConfigError("embedding.pq: m, k, iterations must be >= 1")
     output = config.get("output", "codes")
-    if output not in ("codes", "codebooks"):
-        raise ConfigError("embedding.pq: output must be codes|codebooks")
     out_col = config.get("output_column", "pq_code")
-    check_encode_method(config, "embedding.pq")
     if output == "codebooks" and "encode_method" in config:
         raise ConfigError(
             "embedding.pq: encode_method configures the ENCODE pass and "
@@ -631,14 +610,11 @@ def embedding_pq_encode(ctx: OpContext, inputs: list[DataFrame], config: dict[st
     this engine."""
     df, codebook_df = inputs
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("embedding.pq_encode requires 'id_column'")
     column = config.get("column", "embedding")
     for c in (id_column, column):
         if c not in df.columns:
             raise ConfigError(f"embedding.pq_encode: no column {c!r}")
     out_col = config.get("output_column", "pq_code")
-    check_encode_method(config, "embedding.pq_encode")
     codebooks, m, _, sd, _ = _parse_codebooks(
         ctx, codebook_df, "embedding.pq_encode", config
     )
@@ -699,8 +675,6 @@ def knn_pq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> D
     corpus, queries = inputs[0], inputs[1]
     codebook_df = inputs[2] if len(inputs) > 2 else None
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("knn.pq requires 'id_column'")
     column = config.get("column", "embedding")
     qid_col = config.get("query_id_column", id_column)
     code_column = config.get("code_column")
@@ -935,17 +909,10 @@ def knn_ivfpq(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     (/root/reference/README.md capabilities list)."""
     corpus, queries, centroid_df, codebook_df = inputs
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("knn.ivfpq requires 'id_column'")
     column = config.get("column", "embedding")
     qid_col = config.get("query_id_column", id_column)
     cell_column = config.get("cell_column")
     code_column = config.get("code_column")
-    if not cell_column or not code_column:
-        raise ConfigError(
-            "knn.ivfpq requires 'cell_column' (embedding.kmeans "
-            "assignment) and 'code_column' (embedding.pq_encode output)"
-        )
     for dfx, cols, side in (
         (corpus, (id_column, cell_column, code_column), "corpus"),
         (queries, (qid_col, column), "queries"),
@@ -1116,7 +1083,6 @@ def embedding_assign_cells(ctx: OpContext, inputs: list[DataFrame], config: dict
     if column not in df.columns:
         raise ConfigError(f"embedding.assign_cells: no column {column!r}")
     out_col = config.get("output_column", "cell")
-    check_encode_method(config, "embedding.assign_cells")
     # dim comes from the centroid table — the quantizer defines the
     # space; a corpus row of any other length is simply invalid
     centroids, dim = _parse_centroids(

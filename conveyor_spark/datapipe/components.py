@@ -196,8 +196,6 @@ def dedup_resolve(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     from minhash/winnow/embedding dedup."""
     pairs = inputs[0]
     policy = config.get("policy", "min_id")
-    if policy not in ("min_id", "max_score", "min_score"):
-        raise ConfigError("dedup.resolve: policy must be min_id|max_score|min_score")
     docs = inputs[1] if len(inputs) > 1 else None
     id_column = config.get("id_column")
     score_column = config.get("score_column")

@@ -79,12 +79,8 @@ def text_normalize(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
     """
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.normalize requires 'column'")
     out = config.get("output_column", column)
-    form = str(config.get("form", "none")).lower()
-    if form not in ("none", "nfc", "nfd", "nfkc", "nfkd"):
-        raise ConfigError("text.normalize: form must be none|nfc|nfd|nfkc|nfkd")
+    form = config.get("form", "none")
 
     if form != "none":
         import unicodedata
@@ -164,8 +160,6 @@ def pii_redact(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     """
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("pii.redact requires 'column'")
     out = config.get("output_column", column)
     types = config.get("types", _PII_ORDER)
     unknown = [t for t in types if t not in PII_PATTERNS]
@@ -228,8 +222,6 @@ def text_repetition(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     """
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.repetition requires 'column'")
     n = int(config.get("ngram", 2))
     if n < 1:
         raise ConfigError("text.repetition: ngram must be >= 1")
@@ -311,13 +303,9 @@ def decontam_ngram(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
     corpus, bench = inputs
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("decontam.ngram requires 'column' and 'id_column'")
     bench_column = config.get("bench_column", column)
     n = int(config.get("ngram", 8))
     mode = config.get("mode", "flag")
-    if mode not in ("flag", "filter"):
-        raise ConfigError("decontam.ngram: mode must be flag|filter")
 
     bench_grams = (
         bench.select(F.explode(word_shingles_expr(bench_column, n)).alias("__gram"))
@@ -385,8 +373,6 @@ def text_extract(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     df = inputs[0]
     column = config.get("column")
     fields = config.get("fields")
-    if not column or not fields:
-        raise ConfigError("text.extract requires 'column' and 'fields'")
     keep_empty = bool(config.get("keep_empty", False))
     # declared array form [{name, pattern, ...}]; the dict form
     # {name: {pattern, ...}} is accepted for backward compatibility
@@ -444,8 +430,6 @@ def text_html_strip(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     """
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.html_strip requires 'column'")
     out = config.get("output_column", column)
     c = F.col(column).cast("string")
     for pat, repl in HTML_STRIP_STAGES:
@@ -507,8 +491,6 @@ def text_boilerplate(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
     df = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("text.boilerplate requires 'column' and 'id_column'")
     group_by = config.get("group_by") or []
     group_by = [group_by] if isinstance(group_by, str) else list(group_by)
     min_df = float(config.get("min_df", 0.3))
@@ -516,8 +498,6 @@ def text_boilerplate(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
         raise ConfigError("text.boilerplate: min_df must be in (0, 1]")
     min_docs = int(config.get("min_docs", 2))
     mode = config.get("mode", "strip")
-    if mode not in ("strip", "flag"):
-        raise ConfigError("text.boilerplate: mode must be strip|flag")
 
     lines_arr = F.split(F.col(column).cast("string"), r"\n")
 
@@ -623,8 +603,6 @@ def text_freq_score(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     ref = inputs[1] if len(inputs) > 1 else docs
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("text.freq_score requires 'column' and 'id_column'")
     out = config.get("output_column", "freq_score")
 
     ref_tokens = ref.select(F.explode(tokens_expr(column, distinct=False)).alias("__tok"))
@@ -686,12 +664,9 @@ def text_chunk(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     df = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("text.chunk requires 'column' and 'id_column'")
-    size = config.get("size")
-    if size is None or int(size) < 1:
+    size = int(config["size"])
+    if size < 1:
         raise ConfigError("text.chunk requires 'size' >= 1 (tokens)")
-    size = int(size)
     overlap = int(config.get("overlap", 0))
     if not 0 <= overlap < size:
         raise ConfigError("text.chunk: overlap must be in [0, size)")
@@ -773,8 +748,6 @@ def url_normalize(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     """
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("url.normalize requires 'column'")
     out = config.get("output_column", column)
     strip_tracking = bool(config.get("strip_tracking", True))
     sort_params = bool(config.get("sort_params", True))

@@ -186,8 +186,6 @@ def dedup_exact(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     df = inputs[0]
     columns = config.get("columns")
     id_column = config.get("id_column")
-    if not columns or not id_column:
-        raise ConfigError("dedup.exact requires 'columns' and 'id_column'")
     columns = [columns] if isinstance(columns, str) else list(columns)
     fp = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in columns]))
     if len(inputs) > 1:
@@ -264,8 +262,6 @@ def dedup_minhash(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     df = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("dedup.minhash requires 'column' and 'id_column'")
     existing = inputs[1] if len(inputs) > 1 else None
     if existing is not None:
         df = df.withColumn("__new", F.lit(True)).unionByName(
@@ -390,8 +386,6 @@ def dedup_simhash(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     """
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("dedup.simhash requires 'column'")
     bits = int(config.get("bits", 32))
     output_column = config.get("output_column", "simhash")
     toks = _shingles(config | {"shingle": config.get("shingle", "token")}, column)
@@ -490,8 +484,6 @@ def dedup_ngram_jaccard(ctx: OpContext, inputs: list[DataFrame], config: dict[st
     df = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("dedup.ngram_jaccard requires 'column' and 'id_column'")
     threshold = float(config.get("threshold", 0.8))
     shingles = _shingles(config, column)
     base = widen(ctx, df, config).select(
@@ -701,10 +693,6 @@ def dedup_embedding(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     df = inputs[0]
     column = config.get("column", "embedding")
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("dedup.embedding requires 'id_column'")
-    if config.get("method", "gemm") not in ("gemm", "join"):
-        raise ConfigError("dedup.embedding: method must be gemm|join")
     threshold = float(config.get("threshold", 0.95))
     bucket = config.get("bucket_column")
     if not bucket and not config.get("allow_full"):
@@ -877,8 +865,6 @@ def dedup_hamming(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     """
     df = inputs[0]
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("dedup.hamming requires 'id_column'")
     fcol = config.get("fingerprint_column", "simhash")
     if fcol not in df.columns:
         raise ConfigError(f"dedup.hamming: no column {fcol!r} in input")

@@ -73,8 +73,6 @@ def feature_hashing(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     relational explode/groupBy formulation)."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("feature.hashing requires 'column'")
     if column not in df.columns:
         raise ConfigError(f"feature.hashing: no column {column!r}")
     dim = int(config.get("dim", 1024))
@@ -82,9 +80,6 @@ def feature_hashing(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
         raise ConfigError("feature.hashing: dim must be >= 1")
     signed = bool(config.get("signed", True))
     output = config.get("output", "sparse")
-    if output not in ("sparse", "dense"):
-        raise ConfigError(
-            f"feature.hashing: output must be sparse|dense, got {output!r}")
     if output == "dense" and dim > _DENSE_DIM_CAP:
         raise ConfigError(
             f"feature.hashing: dense output capped at dim {_DENSE_DIM_CAP} "

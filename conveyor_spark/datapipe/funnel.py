@@ -67,8 +67,6 @@ def sessionize_assign(ctx: OpContext, inputs: list[DataFrame], config: dict[str,
     df = inputs[0]
     by = config.get("by")
     gap = config.get("gap_seconds")
-    if not by or gap is None:
-        raise ConfigError("sessionize.assign requires 'by' and 'gap_seconds'")
     gap_us = int(float(gap) * 1_000_000)
     if gap_us <= 0:
         raise ConfigError("sessionize.assign: gap_seconds must be > 0")
@@ -134,8 +132,6 @@ def retention_cohort(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
     df = inputs[0]
     by = config.get("by")
     interval = config.get("interval_seconds")
-    if not by or not interval:
-        raise ConfigError("retention.cohort requires 'by' and 'interval_seconds'")
     ts_col = config.get("ts_column", "ts")
     interval_us = int(float(interval) * 1_000_000)
     if interval_us <= 0:
@@ -213,8 +209,8 @@ def event_funnel(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     df = inputs[0]
     steps = config.get("steps")
     by = config.get("by")
-    if not steps or len(steps) < 2 or not by:
-        raise ConfigError("event.funnel requires 'steps' (>=2) and 'by'")
+    if len(steps) < 2:
+        raise ConfigError("event.funnel requires 'steps' (>=2)")
     type_col = config.get("type_column", "event_type")
     ts_col = config.get("ts_column", "ts")
     within = config.get("within_seconds")

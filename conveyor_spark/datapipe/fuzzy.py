@@ -80,8 +80,6 @@ def join_fuzzy(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     left, right = inputs[0], inputs[1]
     on = config.get("on")
     id_column = config.get("id_column")
-    if not on or not id_column:
-        raise ConfigError("join.fuzzy requires 'on' and 'id_column'")
     right_on = config.get("right_on", on)
     right_id = config.get("right_id_column", id_column)
     k = int(config.get("max_distance", 2))

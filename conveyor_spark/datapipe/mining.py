@@ -81,8 +81,6 @@ def mine_bitext(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     explicitly."""
     src, tgt = inputs
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("mine.bitext requires 'id_column'")
     column = config.get("column", "embedding")
     bucket = config.get("bucket_column")
     for dfx, side in ((src, "source"), (tgt, "target")):

@@ -73,8 +73,6 @@ def rank_mmr(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) ->
     id_column = config.get("id_column")
     rel_column = config.get("relevance_column")
     column = config.get("column", "embedding")
-    if not id_column or not rel_column:
-        raise ConfigError("rank.mmr requires 'id_column' and 'relevance_column'")
     for c in (id_column, rel_column, column):
         if c not in df.columns:
             raise ConfigError(f"rank.mmr: no column {c!r}")

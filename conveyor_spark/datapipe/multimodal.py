@@ -68,8 +68,6 @@ def _fake_image_meta(data: bytes) -> dict[str, Any]:
 def media_decode(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("media.decode requires 'column'")
     codec = config.get("codec", "fake")
     output_column = config.get("output_column", "media_meta")
     from conveyor_spark.datapipe.dedup import widen
@@ -135,8 +133,6 @@ def frame_sample(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     df = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("media.frame_sample requires 'column' and 'id_column'")
     n_frames = int(config.get("n_frames", 4))
     codec = config.get("codec", "fake")
     from conveyor_spark.datapipe.dedup import widen
@@ -246,8 +242,6 @@ def media_metadata(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
 
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("media.metadata requires 'column'")
     prefix = config.get("output_column", "media")
     hexp = F.substring(F.hex(F.col(column)), 1, 24)
     fmt = F.lit("unknown")
@@ -312,8 +306,6 @@ def pixel_stats(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     """
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("media.pixel_stats requires 'column'")
     output_column = config.get("output_column", "pixel_stats")
     on_error = config.get("on_error", "null")
     from conveyor_spark.datapipe.dedup import widen
@@ -404,8 +396,6 @@ def pcm_stats(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     """
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("audio.pcm_stats requires 'column'")
     output_column = config.get("output_column", "pcm_stats")
     on_error = config.get("on_error", "null")
     from conveyor_spark.datapipe.dedup import widen
@@ -491,8 +481,6 @@ def media_resize(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     before any downstream shuffle."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("media.resize requires 'column'")
     for key in ("width", "height"):
         if not config.get(key):
             raise ConfigError(f"media.resize requires '{key}'")
@@ -611,8 +599,6 @@ def media_phash(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     the downstream pairing shuffles fingerprints, never pixels."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("media.phash requires 'column'")
     output_column = config.get("output_column", "phash")
     on_error = config.get("on_error", "null")
     from conveyor_spark.datapipe.dedup import widen
@@ -685,9 +671,6 @@ def video_frame_stats(ctx: OpContext, inputs: list[DataFrame], config: dict[str,
     df = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError(
-            "video.frame_stats requires 'column' and 'id_column'")
     n_frames = int(config.get("n_frames", 4))
     on_error = config.get("on_error", "null")
     _STAT_COLS = ("frame_idx", "n_frames_total", "fps", "width",

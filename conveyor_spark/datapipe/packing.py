@@ -76,11 +76,8 @@ def pack_sequences(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
     """
     df = inputs[0]
     wcol = config.get("weight_column")
-    budget = config.get("budget")
+    budget = int(config["budget"])
     id_column = config.get("id_column")
-    if not wcol or not budget or not id_column:
-        raise ConfigError("pack.sequences requires 'weight_column', 'budget' and 'id_column'")
-    budget = int(budget)
     if budget < 1:
         raise ConfigError(f"pack.sequences: budget must be >= 1, got {budget}")
     shards = int(config.get("shards", 64))
@@ -89,8 +86,6 @@ def pack_sequences(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
     out_col = config.get("output_column", "pack_id")
     seed = config.get("seed", "pack")
     oversize = config.get("oversize", "own_pack")
-    if oversize not in ("own_pack", "error", "drop"):
-        raise ConfigError("pack.sequences: oversize must be own_pack|error|drop")
 
     w = F.coalesce(F.col(wcol).cast("bigint"), F.lit(0))
     if oversize == "drop":

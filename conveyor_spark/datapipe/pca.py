@@ -117,8 +117,6 @@ def embedding_pca(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     engine."""
     df = inputs[0]
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("embedding.pca requires 'id_column'")
     column = config.get("column", "embedding")
     for c in (id_column, column):
         if c not in df.columns:
@@ -130,10 +128,6 @@ def embedding_pca(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
             "embedding.pca: components and iterations must be >= 1"
         )
     output = config.get("output", "project")
-    if output not in ("project", "components"):
-        raise ConfigError("embedding.pca: output must be project|components")
-    if config.get("moments", "gemm") not in ("gemm", "entries"):
-        raise ConfigError("embedding.pca: moments must be gemm|entries")
     prefix = config.get("prefix", "pc")
 
     vec = F.col(column)

@@ -40,7 +40,7 @@ from conveyor_spark.registry import OpContext, P, register
         P("expectations", "array", required=True,
           desc="Checks: {kind: row_count|not_null|unique|accepted_values|"
                "between|matches, column?, ...}"),
-        P("mode", default="error", allowed=("error", "report"),
+        P("mode", default="error", allowed=("error", "report"), aliases=("metrics",),
           desc="Fail the run vs emit a pass/fail report frame"),
     ],
     example={"expectations": [{"kind": "not_null", "column": "id"},
@@ -68,13 +68,9 @@ def validate_expectations(ctx: OpContext, inputs: list[DataFrame], config: dict[
     """
     df = inputs[0]
     expectations = config.get("expectations")
-    if not expectations:
-        raise ConfigError("validate.expectations requires 'expectations'")
     mode = config.get("mode", "error")
     if mode == "report":
         mode = "metrics"  # the declared allowed spelling
-    if mode not in ("error", "metrics"):
-        raise ConfigError("validate.expectations: mode must be error|report (metrics)")
 
     # 'between' is the documented alias of 'in_range'
     expectations = [
@@ -199,8 +195,6 @@ def drift_psi(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     column = config.get("column")
     lo = config.get("min")
     hi = config.get("max")
-    if not column:
-        raise ConfigError("drift.psi requires 'column'")
     if (lo is None) != (hi is None):
         raise ConfigError("drift.psi: pass both 'min' and 'max' or neither")
     bins = int(config.get("bins", 10))

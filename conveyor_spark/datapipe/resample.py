@@ -47,7 +47,7 @@ _AGGS = {
           desc="[{column, operation, alias?}] per-bucket aggregates"),
         P("ts_column", default="ts", desc="Event-time column"),
         P("by", "array", desc="Per-key grids"),
-        P("fill", default="none", allowed=("none", "zero", "ffill"),
+        P("fill", default="none", allowed=("none", "zero", "ffill"), aliases=("prev",),
           desc="Empty-bucket handling (zero-fill or forward-fill)"),
     ],
     example={"interval_seconds": 3600,
@@ -75,8 +75,6 @@ def time_resample(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     df = inputs[0]
     ts_col = config.get("ts_column", "ts")
     interval = config.get("interval_seconds")
-    if not interval:
-        raise ConfigError("time.resample requires 'interval_seconds'")
     interval_us = int(float(interval) * 1_000_000)
     if interval_us <= 0:
         raise ConfigError("time.resample: interval_seconds must be > 0")
@@ -86,8 +84,6 @@ def time_resample(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     fill = config.get("fill", "none")
     if fill == "ffill":
         fill = "prev"  # the declared allowed spelling
-    if fill not in ("none", "zero", "prev"):
-        raise ConfigError("time.resample: fill must be none|zero|ffill (prev)")
     aggs = config.get("aggs") or {"n": {"column": ts_col, "fn": "count"}}
     # declared array form [{column, operation, alias?, fill?}]; the
     # dict form {name: {column, fn, fill?}} stays accepted

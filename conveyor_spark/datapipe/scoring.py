@@ -262,8 +262,6 @@ def text_perplexity(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     ref = inputs[1] if len(inputs) > 1 else docs
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("text.perplexity requires 'column' and 'id_column'")
     n = int(config.get("order", 2))
     if not 1 <= n <= 4:
         raise ConfigError("text.perplexity: 'order' must be 1..4")
@@ -272,8 +270,6 @@ def text_perplexity(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
         raise ConfigError("text.perplexity: smoothing 'k' must be > 0")
     out = config.get("output_column", "nll")
     backoff = config.get("backoff", "none")
-    if backoff not in ("none", "stupid"):
-        raise ConfigError("text.perplexity: backoff must be none|stupid")
     if backoff == "stupid":
         alpha = float(config.get("alpha", 0.4))
         if not 0.0 < alpha <= 1.0:
@@ -381,11 +377,7 @@ def classify_linear(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     docs, weights = inputs
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("classify.linear requires 'column' and 'id_column'")
     mode = config.get("mode", "mean")
-    if mode not in ("mean", "sum", "binary"):
-        raise ConfigError("classify.linear: mode must be mean|sum|binary")
     bias = float(config.get("bias", 0.0))
     out = config.get("output_column", "logit")
     label = config.get("label_column", "predicted")
@@ -489,8 +481,6 @@ def rank_bm25(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     docs, queries = inputs
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("rank.bm25 requires 'column' and 'id_column'")
     qid = config.get("query_id_column", "query_id")
     qcol = config.get("query_column", "query")
     for c, side in ((qid, "query_id_column"), (qcol, "query_column")):
@@ -619,8 +609,6 @@ def rank_tfidf(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     docs = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("rank.tfidf requires 'column' and 'id_column'")
     for c in (column, id_column):
         if c not in docs.columns:
             raise ConfigError(f"rank.tfidf: no column {c!r}")
@@ -726,14 +714,10 @@ def classify_multiclass(ctx: OpContext, inputs: list[DataFrame], config: dict[st
     docs, weights = inputs
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("classify.multiclass requires 'column' and 'id_column'")
     for c in (column, id_column):
         if c not in docs.columns:
             raise ConfigError(f"classify.multiclass: no column {c!r}")
     mode = config.get("mode", "mean")
-    if mode not in ("mean", "sum", "binary"):
-        raise ConfigError("classify.multiclass: mode must be mean|sum|binary")
     biases = config.get("biases") or {}
     if not isinstance(biases, dict):
         raise ConfigError("classify.multiclass: biases must be a {class: bias} map")
@@ -868,8 +852,6 @@ def rank_rrf(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) ->
     groupBy fold, one per-query window — rankings are top-k-sized by
     construction, so this is a small-data op even at corpus scale."""
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("rank.rrf requires 'id_column'")
     rank_column = config.get("rank_column", "rank")
     qid = config.get("query_id_column")
     k = int(config.get("k", 60))

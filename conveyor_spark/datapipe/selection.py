@@ -41,18 +41,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from conveyor_spark.errors import ConfigError
-from conveyor_spark.registry import OpContext, P, register
+from conveyor_spark.registry import OpContext, P, as_list, register
 from conveyor_spark.datapipe.hashing import md5_int
-
-
-def _as_list(v: Any) -> list[str]:
-    if v is None:
-        return []
-    if isinstance(v, str):
-        return [v]
-    return list(v)
-
-
 from conveyor_spark.ordering import split_dir as _split_dir
 
 
@@ -99,12 +89,9 @@ def topk_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     sort input on the hottest key).
     """
     df = inputs[0]
-    by = _as_list(config.get("by"))
+    by = as_list(config.get("by"))
     order_by = config.get("order_by")
-    k = config.get("k")
-    if not by or not order_by or not k:
-        raise ConfigError("topk.apply requires 'by', 'order_by' and 'k'")
-    k = int(k)
+    k = int(config["k"])
     if k < 1:
         raise ConfigError(f"topk.apply: k must be >= 1, got {k}")
     order = _order_cols(order_by)
@@ -167,11 +154,8 @@ def sample_weighted(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     """
     df = inputs[0]
     wcol = config.get("weight_column")
-    k = config.get("k")
+    k = int(config["k"])
     id_column = config.get("id_column")
-    if not wcol or not k or not id_column:
-        raise ConfigError("sample.weighted requires 'weight_column', 'k' and 'id_column'")
-    k = int(k)
     seed = config.get("seed", "wsample")
     # u in (0,1]: 60-bit md5 of "id|seed", +1 to avoid ln(0)
     u = (
@@ -225,11 +209,9 @@ def sample_balanced(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     rows survive on any partitioning or cluster size.
     """
     df = inputs[0]
-    by = _as_list(config.get("by"))
+    by = as_list(config.get("by"))
     cap = config.get("cap")
     id_column = config.get("id_column")
-    if not by or not cap or not id_column:
-        raise ConfigError("sample.balanced requires 'by', 'cap' and 'id_column'")
     seed = config.get("seed", "balance")
     out_cols = df.columns
     pri = md5_int(F.concat(F.col(id_column).cast("string"), F.lit(f"|{seed}")))
@@ -274,9 +256,7 @@ def skew_analyze(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     rows; nothing large ever leaves the executors.
     """
     df = inputs[0]
-    by = _as_list(config.get("by"))
-    if not by:
-        raise ConfigError("skew.analyze requires 'by'")
+    by = as_list(config.get("by"))
     top = int(config.get("top", 20))
     counts = df.groupBy(*by).agg(F.count(F.lit(1)).alias("cnt"))
     totals = counts.agg(

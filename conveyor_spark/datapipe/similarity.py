@@ -112,8 +112,6 @@ def knn_brute(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     corpus = inputs[0]
     id_column = config.get("id_column")
     column = config.get("column", "embedding")
-    if not id_column:
-        raise ConfigError("knn.brute requires 'id_column'")
     k = int(config.get("k", 10))
     qids = config.get("query_ids")
     max_queries = int(config.get("max_queries", 100_000))
@@ -176,10 +174,6 @@ def knn_ivf(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> 
     id_column = config.get("id_column")
     column = config.get("column", "embedding")
     bucket = config.get("bucket_column")
-    if not id_column or not bucket:
-        raise ConfigError("knn.ivf requires 'id_column' and 'bucket_column'")
-    if config.get("method", "gemm") not in ("gemm", "join"):
-        raise ConfigError("knn.ivf: method must be gemm|join")
     from conveyor_spark.datapipe.clustering import _no_arrow_return
 
     id_type = corpus.schema[id_column].dataType
@@ -342,7 +336,7 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
     and the vector-carrying exact stage shrinks from |candidates| to
     |queries| * rerank rows. Returns the surviving skinny pairs."""
     from conveyor_spark.datapipe.clustering import (
-        _clean, _parse_codebooks, _train_pq, check_encode_method,
+        _clean, _parse_codebooks, _train_pq,
         pq_encoder, vec_ok,
     )
 
@@ -392,7 +386,6 @@ def _pq_screen(ctx, pairs: DataFrame, corpus: DataFrame,
     else:
         if dim % m != 0:
             raise ConfigError(f"knn.lsh: dim {dim} not divisible by m={m}")
-        check_encode_method(config, "knn.lsh")
         sd = dim // m
         clean, _ = _clean(ctx, corpus, id_column, column, dim, "knn.lsh")
         codebooks, _, _ = _train_pq(ctx, clean, dim, m, kw, iterations,
@@ -554,8 +547,6 @@ def knn_lsh(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> 
     """
     corpus = inputs[0]
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("knn.lsh requires 'id_column'")
     column = config.get("column", "embedding")
     k = int(config.get("k", 10))
     verify = config.get("verify", "exact")
@@ -601,8 +592,6 @@ def knn_lsh(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> 
                 "with code_column"
             )
     dim = config.get("dim")
-    if dim is None:
-        raise ConfigError("knn.lsh requires 'dim' (embedding length)")
     bits = int(config.get("bits", 16))
     bands = int(config.get("bands", 4))
     if bits % bands != 0:
@@ -612,8 +601,6 @@ def knn_lsh(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> 
     from conveyor_spark.datapipe.dedup import widen
     from conveyor_spark.datapipe.emb_lsh import signature_udf
 
-    if config.get("signature_method", "fold") not in ("fold", "gemm"):
-        raise ConfigError("knn.lsh: signature_method must be fold|gemm")
     signature = signature_udf(bits, int(dim))
 
     def banded(df: DataFrame, ids: str, bcol: str) -> DataFrame:

@@ -42,8 +42,6 @@ from conveyor_spark.datapipe.hashing import md5_int
 def split_assign(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     df = inputs[0]
     id_column = config.get("id_column")
-    if not id_column:
-        raise ConfigError("split.assign requires 'id_column'")
     fractions: dict[str, float] = config.get(
         "fractions", {"train": 0.8, "val": 0.1, "test": 0.1}
     )
@@ -100,7 +98,7 @@ def split_assign(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
 )
 def sample_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     fraction = config.get("fraction")
-    if fraction is None or not 0 < float(fraction) <= 1:
+    if not 0 < float(fraction) <= 1:
         raise ConfigError("sample.apply requires 'fraction' in (0, 1]")
     return inputs[0].sample(
         withReplacement=bool(config.get("with_replacement", False)),
@@ -146,11 +144,9 @@ def sample_stratified(ctx: OpContext, inputs: list[DataFrame], config: dict[str,
     df = inputs[0]
     by = config.get("by")
     id_column = config.get("id_column")
-    if not by or not id_column:
-        raise ConfigError("sample.stratified requires 'by' and 'id_column'")
     by = [by] if isinstance(by, str) else list(by)
     fractions = config.get("fractions")
-    if not isinstance(fractions, dict) or not fractions:
+    if not isinstance(fractions, dict):
         raise ConfigError("sample.stratified requires 'fractions' {stratum: fraction}")
     default_fraction = float(config.get("default_fraction", 1.0))
     for k, v in {**fractions, "default_fraction": default_fraction}.items():
@@ -203,8 +199,6 @@ def sample_mixture(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
     scan reuse applies under one action)."""
     weights = config.get("weights")
     id_column = config.get("id_column")
-    if not weights or not id_column:
-        raise ConfigError("sample.mixture requires 'weights' and 'id_column'")
     if len(weights) != len(inputs):
         raise ConfigError(
             f"sample.mixture: {len(weights)} weights for {len(inputs)} inputs")
@@ -310,8 +304,6 @@ def sample_temperature(ctx: OpContext, inputs: list[DataFrame], config: dict[str
     df = inputs[0]
     by = config.get("by")
     id_column = config.get("id_column")
-    if not by or not id_column:
-        raise ConfigError("sample.temperature requires 'by' and 'id_column'")
     for c in (by, id_column):
         if c not in df.columns:
             raise ConfigError(f"sample.temperature: no column {c!r}")

@@ -59,15 +59,11 @@ def anomaly_zscore(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
     """
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("anomaly.zscore requires 'column'")
     by = config.get("by") or []
     if isinstance(by, str):
         by = [by]
     threshold = float(config.get("threshold", 3.0))
     mode = config.get("mode", "flag")
-    if mode not in ("flag", "filter"):
-        raise ConfigError("anomaly.zscore: mode must be flag|filter")
     z_col = config.get("output_column", "zscore")
     flag_col = config.get("flag_column", "is_outlier")
 
@@ -159,7 +155,7 @@ def stats_correlation(ctx: OpContext, inputs: list[DataFrame], config: dict[str,
     groupBy shuffle."""
     df = inputs[0]
     columns = config.get("columns")
-    if not columns or len(columns) < 2:
+    if len(columns) < 2:
         raise ConfigError("stats.correlation requires >= 2 'columns'")
     missing = [c for c in columns if c not in df.columns]
     if missing:
@@ -268,8 +264,6 @@ def stats_ks_test(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     distributed top-1 (TakeOrdered), not a window."""
     ref, cur = inputs
     column = config.get("column")
-    if not column:
-        raise ConfigError("stats.ks_test requires 'column'")
     col_b = config.get("column_b") or column
     if column not in ref.columns:
         raise ConfigError(f"stats.ks_test: reference has no column {column!r}")
@@ -429,8 +423,6 @@ def stats_jensen_shannon(ctx: OpContext, inputs: list[DataFrame], config: dict[s
     sum to ONE row. No windows, no collect of the vocabulary."""
     a, b = inputs
     column = config.get("column")
-    if not column:
-        raise ConfigError("stats.jensen_shannon requires 'column'")
     for d, side in ((a, "first"), (b, "second")):
         if column not in d.columns:
             raise ConfigError(
@@ -542,9 +534,6 @@ def stats_mutual_information(ctx: OpContext, inputs: list[DataFrame], config: di
     df = inputs[0]
     column = config.get("column")
     class_column = config.get("class_column")
-    if not column or not class_column:
-        raise ConfigError(
-            "stats.mutual_information requires 'column' and 'class_column'")
     for c in (column, class_column):
         if c not in df.columns:
             raise ConfigError(f"stats.mutual_information: no column {c!r}")

@@ -64,13 +64,7 @@ def text_split(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     df = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("text.split requires 'column' and 'id_column'")
     gran = config.get("granularity", "sentence")
-    if gran not in _RULES:
-        raise ConfigError(
-            f"text.split: granularity must be one of {sorted(_RULES)}"
-        )
     min_chars = int(config.get("min_chars", 1))
     if min_chars < 1:
         raise ConfigError("text.split: min_chars must be >= 1")
@@ -130,8 +124,6 @@ def corpus_manifest(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     expression is codegen (md5/conv/xor)."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("corpus.manifest requires 'column'")
     by = config.get("by") or []
     if isinstance(by, str):
         by = [by]
@@ -207,8 +199,6 @@ def text_cdc_chunk(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
     df = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("text.cdc_chunk requires 'column' and 'id_column'")
     for c in (column, id_column):
         if c not in df.columns:
             raise ConfigError(f"text.cdc_chunk: no column {c!r}")

@@ -90,8 +90,6 @@ def dedup_substring(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
     df = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("dedup.substring requires 'column' and 'id_column'")
     k = int(config.get("min_length", 20))
     max_df = float(config.get("max_df", 0.05))
     lowercase = bool(config.get("lowercase", True))
@@ -235,8 +233,6 @@ def text_cut_spans(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
     docs, spans = inputs[0], inputs[1]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("text.cut_spans requires 'column' and 'id_column'")
     sid = config.get("span_id_column", "id_b")
     start_c = config.get("start_column", "start_b")
     len_c = config.get("length_column", "length")

@@ -51,8 +51,6 @@ def language_id(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     compared in sorted order, strictly-greater wins."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.language_id requires 'column'")
     output_column = config.get("output_column", "pred_lang")
     langs = sorted(config.get("languages", STOPWORDS))
     # Materialize tokens once, then per-language hit counts once; the
@@ -95,8 +93,6 @@ def text_quality(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     Gopher/C4-style length+symbol+stopword filters."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.quality requires 'column'")
     c = F.col(column)
     n_chars = F.length(c)
     n_tokens = token_count_expr(column)
@@ -139,8 +135,6 @@ def token_count(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     (pieces after splitting on word boundaries/punct, ~chars/4 floor)."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.token_count requires 'column'")
     c = F.col(column)
     ws = token_count_expr(column)
     # BPE-ish: words contribute ceil(len/4), punctuation/digits 1 each
@@ -167,8 +161,6 @@ def fingerprint(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     collapsed — robust to formatting-only edits; pair with dedup.exact."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.fingerprint requires 'column'")
     output_column = config.get("output_column", "fingerprint")
     norm = F.trim(
         F.regexp_replace(F.regexp_replace(F.lower(F.col(column)), r"[^a-z0-9\s]", ""), r"\s+", " ")
@@ -248,13 +240,9 @@ def text_entropy(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     sort is per-document O(n log n) on the row's own symbols."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.entropy requires 'column'")
     if column not in df.columns:
         raise ConfigError(f"text.entropy: no column {column!r}")
     unit = config.get("unit", "char")
-    if unit not in ("char", "token"):
-        raise ConfigError("text.entropy: unit must be char|token")
     out = config.get("output_column", "entropy")
     if out in df.columns:
         raise ConfigError(
@@ -314,13 +302,9 @@ def text_gini(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     run-length machinery + one integer fold) — zero shuffle."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.gini requires 'column'")
     if column not in df.columns:
         raise ConfigError(f"text.gini: no column {column!r}")
     unit = config.get("unit", "token")
-    if unit not in ("char", "token"):
-        raise ConfigError("text.gini: unit must be char|token")
     out = config.get("output_column", "gini")
     if out in df.columns:
         raise ConfigError(

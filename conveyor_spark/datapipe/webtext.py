@@ -113,13 +113,9 @@ def quality_gopher(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
     stopwords present."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("quality.gopher requires 'column'")
     if column not in df.columns:
         raise ConfigError(f"quality.gopher: no column {column!r}")
     mode = config.get("mode", "annotate")
-    if mode not in ("annotate", "filter"):
-        raise ConfigError(f"quality.gopher: mode must be annotate|filter, got {mode!r}")
     min_words = int(config.get("min_words", 50))
     max_words = int(config.get("max_words", 100000))
     min_awl = float(config.get("min_avg_word_len", 3.0))
@@ -227,14 +223,9 @@ def c4_filter(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     NULL text: flags NULL / page_ok false; clean keeps the NULL."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.c4_filter requires 'column'")
     if column not in df.columns:
         raise ConfigError(f"text.c4_filter: no column {column!r}")
     mode = config.get("mode", "clean")
-    if mode not in ("annotate", "clean", "filter"):
-        raise ConfigError(
-            f"text.c4_filter: mode must be annotate|clean|filter, got {mode!r}")
     min_line_words = int(config.get("min_line_words", 5))
     min_sentences = int(config.get("min_sentences", 3))
     clash = sorted(set(_C4_OUT) & set(df.columns))
@@ -316,8 +307,6 @@ def text_readability(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
     expressions, zero shuffle."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.readability requires 'column'")
     if column not in df.columns:
         raise ConfigError(f"text.readability: no column {column!r}")
     clash = sorted(set(_READ_OUT) & set(df.columns))
@@ -395,16 +384,10 @@ def text_dedup_lines(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
     list_position identically)."""
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("text.dedup_lines requires 'column'")
     if column not in df.columns:
         raise ConfigError(f"text.dedup_lines: no column {column!r}")
     key_kind = config.get("key", "trim")
-    if key_kind not in ("exact", "trim", "trim_lower"):
-        raise ConfigError("text.dedup_lines: key must be exact|trim|trim_lower")
     mode = config.get("mode", "clean")
-    if mode not in ("clean", "annotate"):
-        raise ConfigError("text.dedup_lines: mode must be clean|annotate")
     out = config.get("output_column") or column
     if mode == "annotate" and config.get("output_column"):
         raise ConfigError(

@@ -82,8 +82,6 @@ def text_winnow(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     df = inputs[0]
     column = config.get("column")
     id_column = config.get("id_column")
-    if not column or not id_column:
-        raise ConfigError("text.winnow requires 'column' and 'id_column'")
     for c in (column, id_column):
         if c not in df.columns:
             raise ConfigError(f"text.winnow: no column {c!r}")

@@ -36,6 +36,8 @@ def _param_lines(p, show_default: bool) -> list[str]:
         lines.append(f"    {p.desc}")
     if p.allowed:
         lines.append(f"    Allowed values: {', '.join(p.allowed)}")
+    if p.aliases:
+        lines.append(f"    Also accepted: {', '.join(p.aliases)}")
     if p.min is not None or p.max is not None:
         lo = "-inf" if p.min is None else _fmt_default(p.min)
         hi = "inf" if p.max is None else _fmt_default(p.max)
@@ -95,6 +97,7 @@ def describe_json(name: str) -> dict[str, Any]:
                 "default": p.default,
                 "description": p.desc,
                 **({"allowed_values": list(p.allowed)} if p.allowed else {}),
+                **({"aliases": list(p.aliases)} if p.aliases else {}),
                 **({"min": p.min} if p.min is not None else {}),
                 **({"max": p.max} if p.max is not None else {}),
             }
@@ -108,7 +111,7 @@ def describe_json(name: str) -> dict[str, Any]:
 def _md_param_row(p) -> str:
     constraint = ""
     if p.allowed:
-        constraint = " \\| ".join(p.allowed)
+        constraint = " \\| ".join(p.allowed + p.aliases)
     elif p.min is not None or p.max is not None:
         constraint = f"{p.min if p.min is not None else ''}..{p.max if p.max is not None else ''}"
     return (

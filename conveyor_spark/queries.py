@@ -6049,18 +6049,25 @@ def q151_bitext_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     finer bucket_column bounds per-block pair work with LSH keeping
     similar vectors co-blocked for recall. The oracle replays the
     Rademacher planes, the composite block, cosine, the top-3
-    neighborhood means, the margin, and both argmax directions."""
+    neighborhood means, the margin, and both argmax directions.
+    Each side is filtered BEFORE it is signed: the signature UDF is
+    nondeterministic, so a filter above it is never pushed below it,
+    and filtering after signing would sign the whole table per side
+    (the signature and the block are per-row, so the output is the
+    same)."""
     ctx = _ctx(spark)
     e = load_table(spark, sf_dir, "embeddings")
-    sig = _op("embedding.lsh", ctx, [e], column="embedding",
-              bits=8, dim=64)
-    blk = _op("map.apply", ctx, [sig],
-              expression="concat(CAST(label AS STRING), '|', "
-                         "CAST(lsh_sig % 16 AS STRING))",
-              output_column="block")
-    src = _op("filter.apply", ctx, [blk], expr="vec_id % 2 = 0")
-    tgt = _op("filter.apply", ctx, [blk], expr="vec_id % 2 = 1")
-    return _op("mine.bitext", ctx, [src, tgt], id_column="vec_id",
+
+    def side(parity: int) -> DataFrame:
+        half = _op("filter.apply", ctx, [e], expr=f"vec_id % 2 = {parity}")
+        sig = _op("embedding.lsh", ctx, [half], column="embedding",
+                  bits=8, dim=64)
+        return _op("map.apply", ctx, [sig],
+                   expression="concat(CAST(label AS STRING), '|', "
+                              "CAST(lsh_sig % 16 AS STRING))",
+                   output_column="block")
+
+    return _op("mine.bitext", ctx, [side(0), side(1)], id_column="vec_id",
                column="embedding", bucket_column="block", k=3,
                threshold=1.0, mutual=True)
 

@@ -15,16 +15,27 @@ stage):
   structurally but never consumes it, src/core/stage.rs:38-42);
 - sinks return None (reference: produces_output() = false,
   src/modules/sinks/csv.rs:76-78).
+
+Each op declares its config parameters once, as ``Param`` metadata
+(reference: ConfigParameter + ParameterValidation). That one
+declaration documents the parameter (`info`, `describe`,
+OPERATORS.md) and checks it: ``register`` wraps the op so a call
+whose config breaks a declared ``required`` / ``allowed`` / ``min`` /
+``max`` raises one ``ConfigError`` naming the op and the param before
+the op body runs. Op bodies therefore check only what the metadata
+cannot say (an open interval, a cross-param rule, a column that must
+exist in the input).
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from conveyor_spark.errors import FunctionNotFound
+from conveyor_spark.errors import ConfigError, FunctionNotFound
 
 
 @dataclass
@@ -89,7 +100,8 @@ class Param:
     ConfigParameter + ParameterValidation, docs/metadata-system.md).
 
     Powers the self-documenting CLI (`info`, `describe`), the guided
-    builder, OPERATORS.md generation, and spec validation warnings."""
+    builder, OPERATORS.md generation, and the config check that
+    ``register`` runs before every op call (``config_errors``)."""
 
     name: str
     type: str = "string"  # string|integer|float|boolean|array|object|any
@@ -102,6 +114,9 @@ class Param:
     # True = value is a per-row/per-run Handlebars template, so an
     # unresolved {{name}} inside it is expected, not a typo
     templated: bool = False
+    # other spellings the op maps onto an ``allowed`` value (Spark's
+    # join-type names, a value's internal name); accepted by the check
+    aliases: tuple[str, ...] = ()
 
 
 def P(
@@ -114,12 +129,13 @@ def P(
     min: float | None = None,
     max: float | None = None,
     templated: bool = False,
+    aliases: tuple[str, ...] = (),
 ) -> Param:
     """Terse Param constructor for @register(params=[...]) blocks."""
     return Param(
         name=name, type=type, required=required, default=default, desc=desc,
         allowed=tuple(allowed) if allowed is not None else None, min=min, max=max,
-        templated=templated,
+        templated=templated, aliases=tuple(aliases),
     )
 
 
@@ -172,9 +188,16 @@ def register(
         produces_output = kind != "sink"
 
     def deco(fn: OpFn) -> OpFn:
-        REGISTRY[name] = Op(
+        @functools.wraps(fn)
+        def checked(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]):
+            problems = config_errors(op, config)
+            if problems:
+                raise ConfigError(f"{name}: " + "; ".join(problems))
+            return fn(ctx, inputs, config)
+
+        op = Op(
             name=name,
-            fn=fn,
+            fn=checked,
             kind=kind,
             min_inputs=min_inputs,
             max_inputs=max_inputs,  # type: ignore[arg-type]
@@ -185,44 +208,80 @@ def register(
             example=tuple(example.items()) if example else None,
             tags=tuple(tags),
         )
-        return fn
+        REGISTRY[name] = op
+        return checked
 
     return deco
 
 
-def validate_config(op: Op, config: dict[str, Any]) -> list[str]:
-    """Metadata-driven config check: unknown keys, missing required
-    params, out-of-range / disallowed values. Returns warnings (the
-    compiler stays permissive — ops do their own hard validation);
-    the `validate` CLI verb and the guided builder surface these."""
-    warnings: list[str] = []
-    if op.params is None:
-        return warnings
-    known = {p.name for p in op.params}
-    # stage-level keys the compiler consumes for any op
-    universal = {"cache"}
-    for key in config:
-        if key.startswith("_"):  # test/injection hooks
-            continue
-        if key not in known and key not in universal:
-            warnings.append(f"unknown parameter {key!r} (known: {sorted(known)})")
-    for p in op.params:
-        if p.required and config.get(p.name) is None:
-            warnings.append(f"missing required parameter {p.name!r} ({p.type})")
-            continue
+def _missing(v: Any) -> bool:
+    """The ops' ``not x`` idiom minus the falsy numbers: None and an
+    empty string / list / dict are missing, ``0`` and ``False`` are
+    values."""
+    return v is None or (isinstance(v, (str, list, tuple, dict)) and not v)
+
+
+def param_errors(p: Param, v: Any) -> list[str]:
+    """``p``'s value checks on a present value ``v``: a value outside
+    ``allowed`` (and ``aliases``), whatever its type; a number (bools
+    included, as the ops' ``int(...)`` reads them) outside ``min`` /
+    ``max``."""
+    errors = []
+    if p.allowed is not None and v not in p.allowed and v not in p.aliases:
+        errors.append(
+            f"parameter {p.name!r}: {v!r} not in allowed values {list(p.allowed)}"
+        )
+    if isinstance(v, (int, float)):
+        if p.min is not None and v < p.min:
+            errors.append(f"parameter {p.name!r}: {v} < min {p.min}")
+        if p.max is not None and v > p.max:
+            errors.append(f"parameter {p.name!r}: {v} > max {p.max}")
+    return errors
+
+
+def config_errors(op: Op, config: dict[str, Any]) -> list[str]:
+    """The config's breaks of ``op``'s declared params: a missing
+    required param, or a present value that ``param_errors`` rejects.
+    ``register``'s wrapper raises on any of them, and the `validate`
+    verb exits 2 on them; an op without metadata (``params=None``) is
+    never checked."""
+    errors: list[str] = []
+    for p in op.params or ():
         v = config.get(p.name)
-        if v is None:
-            continue
-        if p.allowed is not None and isinstance(v, str) and v not in p.allowed:
-            warnings.append(
-                f"parameter {p.name!r}: {v!r} not in allowed values {list(p.allowed)}"
-            )
-        if isinstance(v, (int, float)) and not isinstance(v, bool):
-            if p.min is not None and v < p.min:
-                warnings.append(f"parameter {p.name!r}: {v} < min {p.min}")
-            if p.max is not None and v > p.max:
-                warnings.append(f"parameter {p.name!r}: {v} > max {p.max}")
-    return warnings
+        if not _missing(v):
+            errors += param_errors(p, v)
+        elif p.required:
+            errors.append(f"missing required parameter {p.name!r} ({p.type})")
+    return errors
+
+
+def unknown_params(op: Op, config: dict[str, Any]) -> list[str]:
+    """Config keys ``op`` does not declare — a warning, never an
+    error (a newer spec may carry keys an older op ignores). Keys
+    starting with ``_`` are test/injection hooks; ``cache`` is
+    consumed by the compiler for any op."""
+    if op.params is None:
+        return []
+    known = {p.name for p in op.params}
+    return [
+        f"unknown parameter {key!r} (known: {sorted(known)})"
+        for key in config
+        if not key.startswith("_") and key not in known and key != "cache"
+    ]
+
+
+def validate_config(op: Op, config: dict[str, Any]) -> list[str]:
+    """Every metadata finding on ``config``: the unknown-key warnings
+    of ``unknown_params`` followed by the hard problems of
+    ``config_errors`` (the ones a run raises on)."""
+    return unknown_params(op, config) + config_errors(op, config)
+
+
+def as_list(v: Any) -> list:
+    """A column-list param as a list: None -> [], "c" -> ["c"]."""
+    if v is None:
+        return []
+    return [v] if isinstance(v, str) else list(v)
 
 
 def get_function(name: str) -> Op:

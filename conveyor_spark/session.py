@@ -95,13 +95,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # --- python exchange ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # SPARK_GRAFT_ARROW_BATCH: invariance probes shrink this to
-        # force many batch boundaries through every mapInPandas op —
+        # invariance probes shrink this through SPARK_GRAFT_EXTRA_CONF
+        # to force many batch boundaries through every mapInPandas op —
         # results must not depend on where Arrow splits the stream
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- determinism / oracle stability ---
         .config("spark.sql.session.timeZone", "UTC")
         # Parquet scans: vectorized reader + pushdown are on by

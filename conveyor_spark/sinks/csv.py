@@ -60,15 +60,14 @@ def _write_single_file(
         P("has_headers", "boolean", desc="Reference-spec alias for headers"),
         P("delimiter", default=",", desc="Field delimiter"),
         P("mode", default="overwrite",
-          allowed=("overwrite", "append", "ignore", "error"), desc="Save mode"),
+          allowed=("overwrite", "append", "ignore", "error"), aliases=("errorifexists",),
+          desc="Save mode"),
     ],
     example={"path": "out/result.csv", "single_file": True},
     tags=["file", "csv"],
 )
 def csv_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> None:
     path = config.get("path")
-    if not path:
-        raise ConfigError("csv.write requires 'path'")
     df = inputs[0]
     # `has_headers` is the reference's documented key
     headers = bool(config.get("headers", config.get("has_headers", True)))

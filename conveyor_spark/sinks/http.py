@@ -17,7 +17,6 @@ from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, Row
 
-from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
 
@@ -32,8 +31,6 @@ def _default_sender(url: str, method: str, headers: dict[str, str], body: bytes)
 def _make_http_sink(method: str):
     def sink(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> None:
         url = config.get("url")
-        if not url:
-            raise ConfigError(f"http.{method.lower()} requires 'url'")
         df = inputs[0]
         fmt = config.get("format", "json")
         headers = dict(config.get("headers", {}))

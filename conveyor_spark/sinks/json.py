@@ -15,7 +15,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 from conveyor_spark.sinks.csv import _write_single_file
 
@@ -37,13 +36,9 @@ from conveyor_spark.sinks.csv import _write_single_file
 )
 def json_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> None:
     path = config.get("path")
-    if not path:
-        raise ConfigError("json.write requires 'path'")
     df = inputs[0]
     fmt = config.get("format", "records")
     pretty = bool(config.get("pretty", False))
-    if fmt not in ("records", "jsonl", "dataframe"):
-        raise ConfigError(f"json.write: unknown format {fmt!r}")
 
     if fmt == "jsonl" and not pretty:
         if config.get("single_file", True):

@@ -48,7 +48,8 @@ def _fmt_row(d: dict[str, Any], fmt: str, pretty: bool) -> str:
     "stdout_stream.write", kind="sink", streaming_capable=True,
     doc="Per-record streaming print",
     params=[
-        P("format", default="jsonl", allowed=("jsonl", "json"), desc="Record rendering"),
+        P("format", default="jsonl", allowed=("jsonl", "json"), aliases=("text", "csv"),
+          desc="Record rendering"),
         P("pretty", "boolean", default=False, desc="Indent JSON"),
         P("output_mode", default="append", allowed=("append", "update", "complete"),
           desc="Streaming output mode"),

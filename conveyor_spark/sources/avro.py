@@ -65,8 +65,6 @@ def _avro_format(spark) -> str:
 )
 def avro_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     path = config.get("path")
-    if not path:
-        raise ConfigError("avro.read requires 'path'")
     reader = ctx.spark.read.format(_avro_format(ctx.spark))
     if config.get("schema"):
         reader = reader.option("avroSchema", config["schema"])
@@ -89,8 +87,6 @@ def avro_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
 )
 def avro_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> None:
     path = config.get("path")
-    if not path:
-        raise ConfigError("avro.write requires 'path'")
     (
         inputs[0].write.format(_avro_format(ctx.spark))
         .option("compression", str(config.get("compression", "snappy")))

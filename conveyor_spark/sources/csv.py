@@ -17,7 +17,6 @@ from typing import Any, Optional
 
 from pyspark.sql import DataFrame
 
-from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
 
@@ -35,8 +34,6 @@ from conveyor_spark.registry import OpContext, P, register
 )
 def csv_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     path = config.get("path")
-    if not path:
-        raise ConfigError("csv.read requires 'path'")
     # `has_headers` is the reference's documented key
     headers = bool(config.get("headers", config.get("has_headers", True)))
     delimiter = str(config.get("delimiter", ","))

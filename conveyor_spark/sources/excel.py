@@ -41,8 +41,6 @@ def _require_engine() -> None:
 )
 def excel_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     path = config.get("path")
-    if not path:
-        raise ConfigError("excel.read requires 'path'")
     _require_engine()
     import pandas as pd
 
@@ -71,8 +69,6 @@ def excel_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
 )
 def excel_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> None:
     path = config.get("path")
-    if not path:
-        raise ConfigError("excel.write requires 'path'")
     _require_engine()
     df = inputs[0]
     # driver-side materialization — excel is not a distributed format;

@@ -24,13 +24,6 @@ from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
 
-def _path(config: dict[str, Any], op: str) -> str:
-    path = config.get("path")
-    if not path:
-        raise ConfigError(f"{op} requires 'path'")
-    return path
-
-
 @register(
     "orc.read", kind="source", doc="Read ORC file(s)/directory",
     params=[
@@ -44,7 +37,7 @@ def orc_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) ->
     reader = ctx.spark.read
     if config.get("merge_schema"):
         reader = reader.option("mergeSchema", "true")
-    return reader.orc(_path(config, "orc.read"))
+    return reader.orc(config["path"])
 
 
 @register(
@@ -64,7 +57,7 @@ def orc_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     """Same shard knobs as parquet.write: ``max_records_per_file``,
     ``compression`` (snappy default; zlib/zstd/lzo/none), and
     ``partition_by`` for hive-style layout."""
-    path = _path(config, "orc.write")
+    path = config["path"]
     df = inputs[0]
     writer = df.write.mode(config.get("mode", "overwrite"))
     if parts := config.get("partition_by"):
@@ -102,7 +95,7 @@ def text_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     ``line_sep`` overrides the record delimiter."""
     from pyspark.sql import functions as F
 
-    path = _path(config, "text.read")
+    path = config["path"]
     # format("text").load(), NOT reader.text(): PySpark's .text()
     # re-sets its own wholetext/lineSep defaults over prior .option()s
     reader = ctx.spark.read.format("text")
@@ -136,7 +129,7 @@ def binary_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     ``recursive`` -> recursiveFileLookup, ``drop_content=true`` to
     scan metadata only (the source still lists but skips content IO
     for pruned columns). Feed media.metadata / media.decode next."""
-    path = _path(config, "binary.read")
+    path = config["path"]
     reader = ctx.spark.read.format("binaryFile")
     if glob := config.get("glob"):
         reader = reader.option("pathGlobFilter", glob)

@@ -16,7 +16,6 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, Row
 
-from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
 
@@ -43,8 +42,6 @@ def _default_fetcher(url: str, method: str, headers: dict[str, str], timeout: fl
 )
 def http_get(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     url = config.get("url")
-    if not url:
-        raise ConfigError("http.get requires 'url'")
     method = str(config.get("method", "GET")).upper()
     fmt = config.get("format", "json")
     headers = dict(config.get("headers", {}))

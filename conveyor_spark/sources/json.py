@@ -33,11 +33,7 @@ from conveyor_spark.registry import OpContext, P, register
 )
 def json_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     path = config.get("path")
-    if not path:
-        raise ConfigError("json.read requires 'path'")
     fmt = config.get("format", "records")
-    if fmt not in ("records", "jsonl", "dataframe"):
-        raise ConfigError(f"json.read: unknown format {fmt!r}")
     reader = ctx.spark.read
     if schema := config.get("schema"):
         reader = reader.schema(schema)

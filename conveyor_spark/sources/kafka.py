@@ -40,14 +40,6 @@ def _require(spark) -> None:
         )
 
 
-def _check(config: dict[str, Any]) -> tuple[str, str]:
-    brokers = config.get("brokers")
-    topic = config.get("topic")
-    if not brokers or not topic:
-        raise ConfigError("kafka ops require 'brokers' and 'topic'")
-    return brokers, topic
-
-
 @register(
     "kafka.read", kind="source", streaming_capable=True,
     doc="Consume a Kafka topic (batch or stream)",
@@ -67,7 +59,7 @@ def _check(config: dict[str, Any]) -> tuple[str, str]:
     tags=["kafka", "streaming"],
 )
 def kafka_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
-    brokers, topic = _check(config)
+    brokers, topic = config["brokers"], config["topic"]
     _require(ctx.spark)
     streaming = bool(config.get("streaming", False))
     reader = (ctx.spark.readStream if streaming else ctx.spark.read).format("kafka")
@@ -116,7 +108,7 @@ def kafka_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     tags=["kafka", "streaming"],
 )
 def kafka_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> None:
-    brokers, topic = _check(config)
+    brokers, topic = config["brokers"], config["topic"]
     _require(ctx.spark)
     df = inputs[0]
     cols = df.columns

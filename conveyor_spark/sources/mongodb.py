@@ -296,8 +296,6 @@ def mongodb_to_object_id(ctx: OpContext, inputs: list[DataFrame], config: dict[s
     from pyspark.sql import functions as F
 
     column = config.get("column")
-    if not column:
-        raise ConfigError("mongodb.toObjectId requires 'column'")
     out = config.get("output_column", column)
     c = F.col(column)
     is_hex24 = c.rlike("^[0-9a-fA-F]{24}$")

@@ -27,8 +27,6 @@ from conveyor_spark.registry import OpContext, P, register
 )
 def parquet_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     path = config.get("path")
-    if not path:
-        raise ConfigError("parquet.read requires 'path'")
     reader = ctx.spark.read
     if config.get("merge_schema"):
         reader = reader.option("mergeSchema", "true")
@@ -57,8 +55,6 @@ def parquet_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     ``compression`` picks the codec (snappy default, zstd for
     long-term storage ratios)."""
     path = config.get("path")
-    if not path:
-        raise ConfigError("parquet.write requires 'path'")
     df = inputs[0]
     writer = df.write.mode(config.get("mode", "overwrite"))
     if parts := config.get("partition_by"):

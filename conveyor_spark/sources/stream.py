@@ -100,8 +100,6 @@ class FileVersionSpooler:
 )
 def file_watch(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     path = config.get("path")
-    if not path:
-        raise ConfigError("file.watch requires 'path' (directory or glob)")
     if config.get("reemit_on_modify"):
         if not os.path.isfile(path):
             raise ConfigError(
@@ -150,7 +148,8 @@ def file_watch(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
         P("mode", default="socket", allowed=("socket", "rate"), desc="Stream source"),
         P("host", default="localhost", desc="Socket host"),
         P("port", "integer", desc="Socket port (required for mode=socket)"),
-        P("format", default="text", allowed=("text", "json"), desc="Line parsing"),
+        P("format", default="text", allowed=("text", "json"), aliases=("jsonl",),
+          desc="Line parsing"),
         P("schema", desc="DDL schema for format=json"),
         P("rows_per_second", "integer", default=10, min=1, desc="Rate-source speed"),
     ],

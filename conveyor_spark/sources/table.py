@@ -16,7 +16,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
 
@@ -37,8 +36,6 @@ from conveyor_spark.registry import OpContext, P, register
 )
 def table_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> None:
     name = config.get("name")
-    if not name:
-        raise ConfigError("table.write requires 'name'")
     df = inputs[0]
     writer = df.write.mode(config.get("mode", "overwrite")).format(
         config.get("format", "parquet")
@@ -65,6 +62,4 @@ def table_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
 )
 def table_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     name = config.get("name")
-    if not name:
-        raise ConfigError("table.read requires 'name'")
     return ctx.spark.table(name)

@@ -17,7 +17,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
 
@@ -36,8 +35,6 @@ from conveyor_spark.registry import OpContext, P, register
 def xml_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     path = config.get("path")
     row_tag = config.get("row_tag")
-    if not path or not row_tag:
-        raise ConfigError("xml.read requires 'path' and 'row_tag'")
     reader = (
         ctx.spark.read.format("xml")
         .option("rowTag", row_tag)
@@ -63,8 +60,6 @@ def xml_read(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) ->
 )
 def xml_write(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> None:
     path = config.get("path")
-    if not path:
-        raise ConfigError("xml.write requires 'path'")
     (
         inputs[0].write.format("xml")
         .option("rowTag", str(config.get("row_tag", "row")))

@@ -184,8 +184,8 @@ def stream_count_window(ctx: OpContext, inputs: list[DataFrame], config: dict[st
         )
     size = config.get("size")
     keys = config.get("key_columns") or config.get("group_by")
-    if size is None or not keys:
-        raise ConfigError("stream.count_window requires 'size' and 'key_columns'")
+    if not keys:
+        raise ConfigError("stream.count_window requires 'key_columns'")
     keys = [keys] if isinstance(keys, str) else list(keys)
     slide = config.get("slide")
     if slide is not None and int(slide) != int(size):

@@ -55,8 +55,8 @@ def stream_funnel(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     sdf = inputs[0]
     steps = config.get("steps")
     by = config.get("by")
-    if not steps or len(steps) < 2 or not by:
-        raise ConfigError("stream.funnel requires 'steps' (>=2) and 'by'")
+    if len(steps) < 2:
+        raise ConfigError("stream.funnel requires 'steps' (>=2)")
     steps = [str(s) for s in steps]
     type_col = config.get("type_column", "event_type")
     ts_col = config.get("ts_column", "ts")

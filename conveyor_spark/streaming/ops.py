@@ -560,16 +560,10 @@ def stream_join(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     request_state_partitions(ctx, config, "stream.join")
     left, right = inputs
     keys = config.get("on")
-    if not keys:
-        raise ConfigError("stream.join requires 'on' (equi key column(s))")
     keys = [keys] if isinstance(keys, str) else list(keys)
     tcol = config.get("time_column")
-    if not tcol:
-        raise ConfigError("stream.join requires 'time_column'")
     rtcol = config.get("right_time_column", tcol)
     max_delta = config.get("max_delta")
-    if max_delta is None:
-        raise ConfigError("stream.join requires 'max_delta' (seconds)")
     from conveyor_spark.durations import parse_duration_seconds
 
     max_delta = parse_duration_seconds(max_delta, "stream.join max_delta")
@@ -588,8 +582,6 @@ def stream_join(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
 
         watermark = f"{int(math.ceil(max(abs(max_delta), abs(min_delta))))} seconds"
     how = config.get("how", "inner")
-    if how not in ("inner", "left", "right"):
-        raise ConfigError("stream.join: how must be inner|left|right")
     prefix = config.get("right_prefix", "r_")
 
     l = left.withWatermark(tcol, watermark).alias("l")

@@ -173,8 +173,8 @@ def stream_session_window(ctx: OpContext, inputs: list[DataFrame], config: dict[
     keys = config.get("key_columns") or config.get("group_by")
     ts_column = config.get("ts_column", "ts")
     gap = config.get("gap")
-    if gap is None or not keys:
-        raise ConfigError("stream.session_window requires 'gap' (seconds) and 'key_columns'")
+    if not keys:
+        raise ConfigError("stream.session_window requires 'key_columns'")
     keys = [keys] if isinstance(keys, str) else list(keys)
     max_rows = config.get("max_rows")
     max_duration = config.get("max_duration")

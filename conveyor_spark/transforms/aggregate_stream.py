@@ -24,8 +24,6 @@ from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 from conveyor_spark.streaming.ops import STATE_PARTITIONS_PARAM
 
-_OPS = {"count", "sum", "avg", "mean", "min", "max"}
-
 
 @register(
     "aggregate.stream", kind="transform", streaming_capable=True,
@@ -48,9 +46,7 @@ def aggregate_stream(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
     request_state_partitions(ctx, config, "aggregate.stream",
                              df=inputs[0])
     df = inputs[0]
-    operation = str(config.get("operation", "")).lower()
-    if operation not in _OPS:
-        raise ConfigError(f"aggregate.stream: operation must be one of {sorted(_OPS)}")
+    operation = config["operation"]
     # `column` is the reference's documented key
     value_column = config.get("value_column") or config.get("column")
     if operation != "count" and not value_column:

@@ -142,8 +142,6 @@ def ai_generate(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     provider = config.get("provider")
     prompt_template = config.get("prompt")
     output_column = config.get("output_column")
-    if not provider or not prompt_template or not output_column:
-        raise ConfigError("ai.generate requires 'provider', 'prompt', 'output_column'")
     call = config.get("_provider") or _PROVIDERS.get(provider)
     if call is None:
         raise ConfigError(f"ai.generate: unknown provider {provider!r} (have {sorted(_PROVIDERS)})")

@@ -14,12 +14,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from conveyor_spark.errors import ConfigError
-from conveyor_spark.registry import OpContext, P, register
-
-
-def _as_list(v: Any) -> list[str]:
-    return [v] if isinstance(v, str) else list(v)
+from conveyor_spark.registry import OpContext, P, as_list, register
 
 
 @register(
@@ -37,13 +32,11 @@ def _as_list(v: Any) -> list[str]:
 def approx_count_distinct(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("approx.count_distinct requires 'column'")
     rsd = float(config.get("rsd", 0.05))
     out = config.get("output_column", f"{column}_approx_distinct")
     agg = F.approx_count_distinct(F.col(column), rsd).alias(out)
     if by := config.get("by"):
-        return df.groupBy(*_as_list(by)).agg(agg)
+        return df.groupBy(*as_list(by)).agg(agg)
     return df.agg(agg)
 
 
@@ -63,8 +56,6 @@ def approx_count_distinct(ctx: OpContext, inputs: list[DataFrame], config: dict[
 def approx_quantiles(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     df = inputs[0]
     column = config.get("column")
-    if not column:
-        raise ConfigError("approx.quantiles requires 'column'")
     probs = [float(p) for p in config.get("probabilities", [0.25, 0.5, 0.75])]
     accuracy = int(config.get("accuracy", 10000))
     out = config.get("output_column", f"{column}_quantiles")
@@ -72,7 +63,7 @@ def approx_quantiles(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
         F.col(column), F.array(*[F.lit(p) for p in probs]), F.lit(accuracy)
     ).alias(out)
     if by := config.get("by"):
-        return df.groupBy(*_as_list(by)).agg(agg)
+        return df.groupBy(*as_list(by)).agg(agg)
     return df.agg(agg)
 
 
@@ -89,7 +80,5 @@ def approx_quantiles(ctx: OpContext, inputs: list[DataFrame], config: dict[str, 
 def approx_frequent_items(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     df = inputs[0]
     columns = config.get("columns")
-    if not columns:
-        raise ConfigError("approx.frequent_items requires 'columns'")
     support = float(config.get("support", 0.01))
-    return df.freqItems(_as_list(columns), support)
+    return df.freqItems(as_list(columns), support)

@@ -30,11 +30,7 @@ _ALGOS = {"aes-128-gcm": 16, "aes-256-gcm": 32, "chacha20-poly1305": 32}
 def _check(config: dict[str, Any]) -> tuple[str, str, str]:
     column = config.get("column")
     key = config.get("key")
-    if not column or not key:
-        raise ConfigError("encrypt/decrypt requires 'column' and 'key'")
-    algorithm = str(config.get("algorithm", "aes-256-gcm")).lower()
-    if algorithm not in _ALGOS:
-        raise ConfigError(f"unknown algorithm {algorithm!r} (supported: {sorted(_ALGOS)})")
+    algorithm = config.get("algorithm", "aes-256-gcm")
     if len(key.encode()) != _ALGOS[algorithm]:
         raise ConfigError(
             f"{algorithm} requires a {_ALGOS[algorithm]}-byte key, got {len(key.encode())}"

@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from conveyor_spark.errors import ConfigError
-from conveyor_spark.registry import OpContext, P, register
-
-
-def _as_list(v: Any) -> list[str]:
-    return [v] if isinstance(v, str) else list(v)
+from conveyor_spark.registry import OpContext, P, as_list, register
 
 
 @register(
@@ -49,7 +45,7 @@ def distinct_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
     df = inputs[0]
     # `subset` is the reference's documented key (docs/builtin-functions.md)
     cols = config.get("columns") or config.get("subset")
-    subset = _as_list(cols) if cols else df.columns
+    subset = as_list(cols) if cols else df.columns
     keep = config.get("keep", "any")
     if keep == "any":
         return df.dropDuplicates(subset)
@@ -61,7 +57,7 @@ def distinct_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, An
                 "data has no physical row order (reference relies on Polars "
                 "single-node ordering, distinct.rs:74-121)"
             )
-        order_cols = [F.col(c) for c in _as_list(order_by)]
+        order_cols = [F.col(c) for c in as_list(order_by)]
         if keep == "last":
             order_cols = [c.desc() for c in order_cols]
         w = Window.partitionBy(*subset).orderBy(*order_cols)

@@ -20,11 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from conveyor_spark.errors import ConfigError
-from conveyor_spark.registry import OpContext, P, register
-
-
-def _as_list(v: Any) -> list[str]:
-    return [v] if isinstance(v, str) else list(v)
+from conveyor_spark.registry import OpContext, P, as_list, register
 
 
 def build_agg(
@@ -120,8 +116,6 @@ def groupby_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     df = inputs[0]
     by = config.get("by")
     aggs = config.get("aggregations")
-    if not by or not aggs:
-        raise ConfigError("groupby.apply requires 'by' and 'aggregations'")
     grouping = config.get("grouping", "groups")
     exprs = []
     for a in aggs:
@@ -130,7 +124,7 @@ def groupby_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
         # reference docs use; 'output_column' is the engine-wide key
         out = a.get("output_column") or a.get("alias") or f"{col}_{op}"
         exprs.append(build_agg(col, op, a.get("order_by"), a.get("p")).alias(out))
-    cols = _as_list(by)
+    cols = as_list(by)
     if grouping == "groups":
         grouped = df.groupBy(*cols)
     elif grouping == "rollup":

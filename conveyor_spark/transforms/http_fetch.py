@@ -75,8 +75,6 @@ def _default_fetcher(
 def http_fetch(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     df = inputs[0]
     url = config.get("url")
-    if not url:
-        raise ConfigError("http.fetch requires 'url'")
     method = str(config.get("method", "GET")).upper()
     if method not in ("GET", "POST", "PUT", "PATCH", "DELETE"):
         raise ConfigError(f"http.fetch: unsupported method {method!r}")

@@ -43,8 +43,6 @@ def json_extract(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     column = config.get("column")
     path = config.get("path")
     output_column = config.get("output_column")
-    if not column or not path or not output_column:
-        raise ConfigError("json.extract requires 'column', 'path', 'output_column'")
     return df.withColumn(
         output_column, F.get_json_object(F.col(column), dot_path_to_jsonpath(path))
     )
@@ -80,8 +78,6 @@ def json_parse(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     df = inputs[0]
     column = config.get("column")
     schema = config.get("schema")
-    if not column or not schema:
-        raise ConfigError("json.parse requires 'column' and 'schema'")
     opts = {"mode": "FAILFAST"} if config.get("fail_on_error") else {}
     parsed = F.from_json(F.col(column).cast("string"), schema, opts)
     if config.get("flatten", False):

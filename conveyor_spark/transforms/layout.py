@@ -56,8 +56,6 @@ def repartition_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str,
 )
 def coalesce_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     n = config.get("num_partitions")
-    if n is None:
-        raise ConfigError("coalesce.apply requires 'num_partitions'")
     if int(n) < 1:
         raise ConfigError(f"coalesce.apply: num_partitions must be >= 1, got {n}")
     return inputs[0].coalesce(int(n))

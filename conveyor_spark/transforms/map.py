@@ -20,7 +20,6 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
 # `identifier OP (number|identifier)` with a single arithmetic operator —
@@ -44,8 +43,6 @@ def map_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
     df = inputs[0]
     expression = config.get("expression")
     output_column = config.get("output_column")
-    if not expression or not output_column:
-        raise ConfigError("map.apply requires 'expression' and 'output_column'")
     m = _SIMPLE_ARITH.match(expression)
     if m:
         left, op, right = m.groups()

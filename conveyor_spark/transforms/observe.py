@@ -47,8 +47,6 @@ def observe_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     """
     df = inputs[0]
     name = config.get("name")
-    if not name:
-        raise ConfigError("observe.apply requires 'name'")
     if name in ctx.observations:
         raise ConfigError(f"observe.apply: duplicate observation name {name!r}")
     if df.isStreaming:

@@ -46,8 +46,6 @@ def profile_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     if missing:
         raise ConfigError(f"profile.apply: unknown columns {missing}")
     distinct = config.get("distinct", "exact")
-    if distinct not in ("exact", "approx", "none"):
-        raise ConfigError("profile.apply: distinct must be exact|approx|none")
 
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in columns:

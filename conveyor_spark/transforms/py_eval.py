@@ -273,8 +273,6 @@ def _sandboxed_map(df, script, out_columns, out_schema, config, extra=None):
 def py_eval(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     df = inputs[0]
     script = config.get("script")
-    if not script:
-        raise ConfigError("py.eval requires 'script' (must define transform(row))")
     schema_ddl = config.get("output_schema")
     if schema_ddl:
         out_schema = T._parse_datatype_string(schema_ddl)
@@ -407,8 +405,6 @@ def py_group_eval(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     df = inputs[0]
     script = config.get("script")
     group_by = config.get("group_by")
-    if not script or not group_by:
-        raise ConfigError("py.group_eval requires 'script' and 'group_by'")
     keys = [group_by] if isinstance(group_by, str) else list(group_by)
     schema_ddl = config.get("output_schema")
     # same default as py.eval: scripts that keep the input shape

@@ -12,7 +12,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 from conveyor_spark.transforms.group_by import build_agg
 
@@ -33,8 +32,6 @@ def reduce_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     df = inputs[0]
     column = config.get("column")
     operation = config.get("operation")
-    if not column or not operation:
-        raise ConfigError("reduce.apply requires 'column' and 'operation'")
     # reference default: result column keeps the input column's name
     # (docs/builtin-functions.md reduce.apply); "result" kept as the
     # documented fallback when the column key itself is absent

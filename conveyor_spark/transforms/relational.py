@@ -24,11 +24,6 @@ from pyspark.sql import functions as F
 from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
-_JOIN_TYPES = {
-    "inner", "left", "right", "outer", "full", "left_outer", "right_outer",
-    "full_outer", "cross", "semi", "left_semi", "anti", "left_anti",
-}
-
 
 @register(
     "join.apply", kind="transform", min_inputs=2, max_inputs=2, doc="Join two inputs",
@@ -37,6 +32,7 @@ _JOIN_TYPES = {
         P("condition", desc="Arbitrary join predicate (SQL)"),
         P("how", default="inner",
           allowed=("inner", "left", "right", "full", "left_semi", "left_anti", "cross"),
+          aliases=("outer", "full_outer", "left_outer", "right_outer", "semi", "anti"),
           desc="Join type"),
         P("broadcast", "boolean",
           desc="Force broadcast of the smaller (right) side"),
@@ -51,8 +47,6 @@ def join_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
         raise ConfigError("join.apply requires exactly 2 inputs")
     left, right = inputs
     how = config.get("how", "inner")
-    if how not in _JOIN_TYPES:
-        raise ConfigError(f"join.apply: unknown join type {how!r}")
     if config.get("broadcast"):
         right = F.broadcast(right)
     on = config.get("on")
@@ -163,8 +157,6 @@ def pivot_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     df = inputs[0]
     by = config.get("by")
     pivot_col = config.get("pivot")
-    if not by or not pivot_col:
-        raise ConfigError("pivot.apply requires 'by' and 'pivot'")
     by = [by] if isinstance(by, str) else list(by)
     values = config.get("values")  # pinning values avoids a distinct-scan job
     agg_cfg = config.get("agg", {"column": pivot_col, "operation": "count"})
@@ -193,8 +185,6 @@ def unpivot_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     df = inputs[0]
     ids = config.get("ids")
     values = config.get("values")
-    if not ids or not values:
-        raise ConfigError("unpivot.apply requires 'ids' and 'values'")
     ids = [ids] if isinstance(ids, str) else list(ids)
     values = [values] if isinstance(values, str) else list(values)
     return df.unpivot(

@@ -12,12 +12,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from conveyor_spark.errors import ConfigError
-from conveyor_spark.registry import OpContext, P, register
-
-
-def _as_list(v: Any) -> list[str]:
-    return [v] if isinstance(v, str) else list(v)
+from conveyor_spark.registry import OpContext, P, as_list, register
 
 
 @register(
@@ -28,6 +23,4 @@ def _as_list(v: Any) -> list[str]:
 )
 def select_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     cols = config.get("columns")
-    if not cols:
-        raise ConfigError("select.apply requires 'columns'")
-    return inputs[0].select(*_as_list(cols))
+    return inputs[0].select(*as_list(cols))

@@ -27,10 +27,8 @@ from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
 
-def _keys(config: dict[str, Any], op: str) -> list[str]:
-    keys = config.get("key")
-    if not keys:
-        raise ConfigError(f"{op} requires 'key'")
+def _keys(config: dict[str, Any]) -> list[str]:
+    keys = config["key"]
     return [keys] if isinstance(keys, str) else list(keys)
 
 
@@ -66,14 +64,10 @@ def table_upsert(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]
     from pyspark.sql import Window
 
     snapshot, changes = inputs
-    keys = _keys(config, "table.upsert")
+    keys = _keys(config)
     delete_col = config.get("delete_column")
     on_dup = config.get("on_duplicate", "error")
     order_col = config.get("order_column")
-    if on_dup not in ("error", "last_wins"):
-        raise ConfigError(
-            f"table.upsert: on_duplicate must be 'error' or 'last_wins', got {on_dup!r}"
-        )
     if on_dup == "last_wins":
         if not order_col:
             raise ConfigError("table.upsert: on_duplicate='last_wins' requires 'order_column'")
@@ -157,10 +151,8 @@ def scd2_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     updates); closed history never joins at all — it filters through.
     """
     history, updates = inputs
-    keys = _keys(config, "scd2.apply")
+    keys = _keys(config)
     ts_col = config.get("ts_column")
-    if not ts_col:
-        raise ConfigError("scd2.apply requires 'ts_column'")
     vf = config.get("valid_from", "valid_from")
     vt = config.get("valid_to", "valid_to")
     cf = config.get("current_flag", "is_current")
@@ -292,7 +284,7 @@ def diff_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     per-column compares are codegen'd expressions.
     """
     before, after = inputs
-    keys = _keys(config, "diff.apply")
+    keys = _keys(config)
     if set(before.columns) != set(after.columns):
         raise ConfigError(
             "diff.apply: snapshots must share a schema "

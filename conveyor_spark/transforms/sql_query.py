@@ -40,7 +40,7 @@ from conveyor_spark.registry import OpContext, P, register
 )
 def sql_query(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     sql = config.get("sql")
-    if not sql or not str(sql).strip():
+    if not str(sql).strip():
         raise ConfigError("sql.query requires 'sql'")
     views = config.get("views")
     if views is not None:

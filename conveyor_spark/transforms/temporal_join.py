@@ -28,11 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from conveyor_spark.errors import ConfigError
-from conveyor_spark.registry import OpContext, P, register
-
-
-def _as_list(v: Any) -> list[str]:
-    return [v] if isinstance(v, str) else list(v)
+from conveyor_spark.registry import OpContext, P, as_list, register
 
 
 @register(
@@ -83,21 +79,15 @@ def join_asof(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -
         raise ConfigError("join.asof needs [probe, build] inputs")
     probe, build = inputs
     on = config.get("on")
-    if not on:
-        raise ConfigError("join.asof requires 'on' (probe time column)")
     right_on = config.get("right_on", on)
-    by = _as_list(config.get("by") or [])
+    by = as_list(config.get("by") or [])
     if not by and not config.get("allow_unpartitioned", False):
         raise ConfigError(
             "join.asof without 'by' funnels all rows through one task; "
             "pass by=<key> or allow_unpartitioned=true"
         )
     direction = config.get("direction", "backward")
-    if direction not in ("backward", "forward"):
-        raise ConfigError("join.asof: direction must be backward|forward")
     how = config.get("how", "left")
-    if how not in ("left", "inner"):
-        raise ConfigError("join.asof: how must be left|inner")
     prefix = config.get("right_prefix", "r_")
     tolerance = config.get("tolerance")
 
@@ -208,13 +198,9 @@ def join_range(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) 
     on, lower, upper = config.get("on"), config.get("lower"), config.get("upper")
     if not on or not lower or not upper:
         raise ConfigError("join.range requires 'on', 'lower', 'upper'")
-    by = _as_list(config.get("by") or [])
+    by = as_list(config.get("by") or [])
     bounds = config.get("bounds", "[)")
-    if bounds not in ("[)", "[]", "()", "(]"):
-        raise ConfigError('join.range: bounds must be one of "[)", "[]", "()", "(]"')
     how = config.get("how", "inner")
-    if how not in ("inner", "left"):
-        raise ConfigError("join.range: how must be inner|left")
     prefix = config.get("right_prefix", "r_")
     bucket = config.get("bucket")
 

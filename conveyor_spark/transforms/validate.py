@@ -76,8 +76,6 @@ def validate_schema(ctx: OpContext, inputs: list[DataFrame], config: dict[str, A
         # `unique` is the reference's documented key
         config = {**config, "unique_fields": config["unique"]}
     mode = config.get("mode", "error")
-    if mode not in ("error", "filter", "tag"):
-        raise ConfigError("validate.schema: mode must be error|filter|tag")
     if mode != "error" and config.get("unique_fields"):
         raise ConfigError(
             "validate.schema: unique_fields requires mode=error (row-level "

@@ -169,10 +169,6 @@ def window_rollup(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any
     tcol = config.get("time_column")
     grans = config.get("granularities")
     aggs = config.get("aggregations")
-    if not tcol or not grans or not aggs:
-        raise ConfigError(
-            "window.rollup requires 'time_column', 'granularities', 'aggregations'"
-        )
     allowed = {"minute", "hour", "day", "week", "month", "quarter", "year"}
     grans = [str(g).lower() for g in grans]
     bad = [g for g in grans if g not in allowed]

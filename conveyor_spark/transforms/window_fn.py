@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from conveyor_spark.errors import ConfigError
-from conveyor_spark.registry import OpContext, P, register
+from conveyor_spark.registry import OpContext, P, as_list, register
 
 _RANKERS = {
     "row_number": lambda _: F.row_number(),
@@ -28,10 +28,6 @@ _RANKERS = {
 }
 
 
-def _as_list(v: Any) -> list[str]:
-    return [v] if isinstance(v, str) else list(v)
-
-
 def build_window(config: dict[str, Any]) -> WindowSpec:
     partition_by = config.get("partition_by")
     order_by = config.get("order_by")
@@ -40,12 +36,12 @@ def build_window(config: dict[str, Any]) -> WindowSpec:
             "window.function without partition_by serializes all data through one "
             "task; set allow_unpartitioned=true to force"
         )
-    w = Window.partitionBy(*_as_list(partition_by)) if partition_by else Window.partitionBy()
+    w = Window.partitionBy(*as_list(partition_by)) if partition_by else Window.partitionBy()
     if order_by:
         cols = []
         descending = config.get("descending", False)
-        desc_list = _as_list(descending) if isinstance(descending, list) else None
-        for i, c in enumerate(_as_list(order_by)):
+        desc_list = as_list(descending) if isinstance(descending, list) else None
+        for i, c in enumerate(as_list(order_by)):
             d = desc_list[i] if desc_list else descending
             cols.append(F.col(c).desc() if d else F.col(c).asc())
         w = w.orderBy(*cols)
@@ -110,12 +106,9 @@ def build_window(config: dict[str, Any]) -> WindowSpec:
 )
 def window_function(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     df = inputs[0]
-    function = config.get("function")
+    fn = config.get("function")
     output_column = config.get("output_column")
-    if not function or not output_column:
-        raise ConfigError("window.function requires 'function' and 'output_column'")
     w = build_window(config)
-    fn = function.lower()
     if fn in _RANKERS:
         col = _RANKERS[fn](None)
     elif fn == "ntile":

@@ -76,7 +76,7 @@ def sort_zorder(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any])
     """
     df = inputs[0]
     columns = config.get("columns")
-    if not columns or not (2 <= len(columns) <= 4):
+    if not 2 <= len(columns) <= 4:
         raise ConfigError("sort.zorder requires 2-4 'columns'")
     bits = int(config.get("bits", 12))
     if bits < 1 or bits * len(columns) > 63:

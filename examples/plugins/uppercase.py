@@ -11,7 +11,6 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from conveyor_spark.errors import ConfigError
 from conveyor_spark.registry import OpContext, P, register
 
 
@@ -25,8 +24,6 @@ from conveyor_spark.registry import OpContext, P, register
     tags=["example", "plugin"],
 )
 def uppercase_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
-    column = config.get("column")
-    if not column:
-        raise ConfigError("uppercase.apply requires 'column'")
+    column = config["column"]  # required: the registry checks it
     out = config.get("output_column", column)
     return inputs[0].withColumn(out, F.upper(F.col(column)))

@@ -90,9 +90,7 @@ def _ipc_to_batches(payload: bytes) -> list:
 )
 def wordstats_apply(ctx: OpContext, inputs: list[DataFrame], config: dict[str, Any]) -> DataFrame:
     df = inputs[0]
-    column = config.get("column")
-    if not column:
-        raise ConfigError("wordstats.apply requires 'column'")
+    column = config["column"]  # required: the registry checks it
     if column not in df.columns:
         raise ConfigError(f"wordstats.apply: no column {column!r}")
     out_col = config.get("output_column", "word_count")

@@ -23,12 +23,12 @@ def sf_dir() -> str:
 
 
 def run_op(__ctx, __op, __inputs, **config):
-    from conveyor_spark.registry import get_function, validate_config
+    from conveyor_spark.registry import get_function, unknown_params
 
     op = get_function(__op)
     # Keep the declared parameter metadata honest: any config key the
     # suite exercises must be declared (test hooks start with "_").
-    unknown = [w for w in validate_config(op, config) if w.startswith("unknown parameter")]
+    unknown = unknown_params(op, config)
     assert not unknown, f"{__op}: metadata out of date: {unknown}"
     return op.fn(__ctx, __inputs, config)
 

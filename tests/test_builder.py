@@ -62,7 +62,7 @@ def test_build_reprompts_on_invalid(pipeline_toml):
         ["no.such.op", "json.read", "extra", "/tmp/x.json", "xml", "jsonl", ""],
     )
     assert "unknown function 'no.such.op'" in out
-    assert "must be one of" in out
+    assert "invalid: parameter 'format': 'xml' not in allowed values" in out
     assert stage["config"] == {"path": "/tmp/x.json", "format": "jsonl"}
 
 

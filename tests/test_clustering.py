@@ -250,7 +250,7 @@ def test_pq_config_errors(ctx, pqdf):
         run_op(ctx, "embedding.pq", [df], id_column="vec_id", column="x")
     # review findings: knn.pq must ConfigError (not ZeroDivisionError /
     # AnalysisException) on m=0 and on missing columns either side
-    with pytest.raises(ConfigError, match=">= 1"):
+    with pytest.raises(ConfigError, match="knn.pq: parameter 'm': 0 < min 1"):
         run_op(ctx, "knn.pq", [df, df], id_column="vec_id", m=0)
     with pytest.raises(ConfigError, match="corpus has no column"):
         run_op(ctx, "knn.pq", [df.drop("embedding"), df],
@@ -662,7 +662,7 @@ def test_knn_ivfpq_config_errors(ctx, pqdf, ivfpq, spark):
         "cluster INT, centroid ARRAY<DOUBLE>")
     with pytest.raises(ConfigError, match="centroid dims"):
         run_op(ctx, "knn.ivfpq", [enc, q, wrongdim, books], **base)
-    with pytest.raises(ConfigError, match=">= 1"):
+    with pytest.raises(ConfigError, match="knn.ivfpq: parameter 'nprobe': 0 < min 1"):
         run_op(ctx, "knn.ivfpq", [enc, q, cents, books], nprobe=0, **base)
 
 

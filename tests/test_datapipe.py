@@ -476,7 +476,7 @@ def test_stream_count_window_rejects_zero_size(ctx, spark, sf_dir):
                            options={"pathGlobFilter": "events.parquet"})
     from conveyor_spark.errors import ConfigError
 
-    with pytest.raises(ConfigError, match="size must be >= 1"):
+    with pytest.raises(ConfigError, match="stream.count_window: parameter 'size': 0 < min 1"):
         run_op(ctx, "stream.count_window", [sdf], size=0, key_columns="event_type")
 
 

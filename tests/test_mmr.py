@@ -97,7 +97,7 @@ def test_mmr_errors(ctx, pool):
     with pytest.raises(ConfigError, match="lam"):
         run_op(ctx, "rank.mmr", [pool], id_column="vec_id",
                relevance_column="rel", lam=1.5)
-    with pytest.raises(ConfigError, match="k must"):
+    with pytest.raises(ConfigError, match="rank.mmr: parameter 'k': 0 < min 1"):
         run_op(ctx, "rank.mmr", [pool], id_column="vec_id",
                relevance_column="rel", k=0)
 

@@ -34,7 +34,7 @@ def test_filter_operators(ctx, users):
 
 
 def test_filter_unknown_operator(ctx, users):
-    with pytest.raises(ConfigError, match="unknown operator"):
+    with pytest.raises(ConfigError, match="filter.apply: parameter 'operator': '~' not in allowed values"):
         run_op(ctx, "filter.apply", [users], column="id", operator="~", value=1)
 
 

@@ -191,6 +191,32 @@ path = "/tmp/x.csv"
     assert main(["validate", str(bad)]) == 2
 
 
+def test_cli_validate_and_run_reject_a_missing_required_param(spark, tmp_path, capsys):
+    """`validate` runs the same registry check `run` raises on: a
+    stage missing a required param fails both, before any data is
+    read."""
+    from conveyor_spark.cli import main
+
+    p = tmp_path / "p.toml"
+    p.write_text("""
+[pipeline]
+name = "missing-path"
+
+[[stages]]
+id = "src"
+function = "csv.read"
+[stages.config]
+headers = true
+""")
+    assert main(["validate", str(p)]) == 2
+    err = capsys.readouterr().err
+    assert ("invalid pipeline: stage 'src' (csv.read): "
+            "missing required parameter 'path' (string)") in err
+    assert main(["run", str(p)]) == 1
+    err = capsys.readouterr().err
+    assert "pipeline failed: csv.read: missing required parameter 'path'" in err
+
+
 def test_cli_reference_verb_aliases(tmp_path, capsys):
     """list [module_type], stage describe, info — reference CLI verbs."""
     from conveyor_spark.cli import main

@@ -43,7 +43,7 @@ def test_wordstats_config_errors(ctx, docs):
     import examples.plugins.word_stats_subprocess  # noqa: F401
     from conveyor_spark.errors import ConfigError
 
-    with pytest.raises(ConfigError, match="requires 'column'"):
+    with pytest.raises(ConfigError, match="wordstats.apply: missing required parameter 'column'"):
         run_op(ctx, "wordstats.apply", [docs])
     with pytest.raises(ConfigError, match="no column"):
         run_op(ctx, "wordstats.apply", [docs], column="nope")

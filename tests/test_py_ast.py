@@ -454,6 +454,6 @@ def test_py_eval_unknown_engine_rejected(ctx, spark):
     from conveyor_spark.errors import ConfigError
 
     df = spark.createDataFrame([(1,)], "id INT")
-    with pytest.raises(ConfigError, match="unknown engine"):
+    with pytest.raises(ConfigError, match="py.eval: parameter 'engine': 'astt' not in allowed values"):
         run_op(ctx, "py.eval", [df],
                script="def transform(row):\n    return row", engine="astt")

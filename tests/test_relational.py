@@ -27,7 +27,7 @@ def test_join_types(ctx, left, right):
     assert run_op(ctx, "join.apply", [left, right], how="cross").count() == 9
     cond = run_op(ctx, "join.apply", [left, right], condition="l = 'a' AND r = 'x'", how="inner")
     assert cond.count() == 1
-    with pytest.raises(ConfigError, match="unknown join type"):
+    with pytest.raises(ConfigError, match="join.apply: parameter 'how': 'sideways' not in allowed values"):
         run_op(ctx, "join.apply", [left, right], on="k", how="sideways")
 
 
@@ -146,7 +146,7 @@ def test_sql_query_over_inputs(ctx, spark):
 
     with _p.raises(ConfigError, match="view names"):
         run_op(ctx, "sql.query", [a, b], views=["only_one"], sql="SELECT 1")
-    with _p.raises(ConfigError, match="requires 'sql'"):
+    with _p.raises(ConfigError, match="sql.query: missing required parameter 'sql'"):
         run_op(ctx, "sql.query", [a])
 
 

@@ -63,10 +63,10 @@ def test_resample_errors(ctx, series):
         run_op(ctx, "time.resample", [series], ts_column="ts", by="k")
     with pytest.raises(ConfigError):
         run_op(ctx, "time.resample", [series], ts_column="ts",
-               interval_seconds=3600, fill="prev")  # prev without keys
+               interval_seconds=3600, aggs=AGGS, fill="prev")  # prev without keys
     with pytest.raises(ConfigError):
         run_op(ctx, "time.resample", [series], ts_column="ts",
-               interval_seconds=3600, by="k", fill="bogus")
+               interval_seconds=3600, by="k", aggs=AGGS, fill="bogus")
     with pytest.raises(ConfigError):
         run_op(ctx, "time.resample", [series], ts_column="ts",
                interval_seconds=3600, by="k",

@@ -109,7 +109,7 @@ def test_ai_generate_mock(ctx, spark):
 
 def test_ai_generate_unknown_provider(ctx, spark):
     df = spark.createDataFrame([(1,)], "id INT")
-    with pytest.raises(ConfigError, match="unknown provider"):
+    with pytest.raises(ConfigError, match="ai.generate: parameter 'provider': 'nope' not in allowed values"):
         run_op(ctx, "ai.generate", [df], provider="nope", prompt="x", output_column="y")
 
 

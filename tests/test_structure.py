@@ -56,7 +56,7 @@ def test_split_errors(ctx, docs):
     with pytest.raises(ConfigError, match="granularity"):
         run_op(ctx, "text.split", [docs], column="text",
                id_column="doc_id", granularity="word")
-    with pytest.raises(ConfigError, match="requires"):
+    with pytest.raises(ConfigError, match="text.split: missing required parameter 'id_column'"):
         run_op(ctx, "text.split", [docs], column="text")
     with pytest.raises(ConfigError, match="min_chars"):
         run_op(ctx, "text.split", [docs], column="text",

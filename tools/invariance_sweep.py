@@ -49,7 +49,8 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
 AXES = {
     "part7": {"SPARK_GRAFT_CPUS": "7",
               "SPARK_GRAFT_EXTRA_CONF": "spark.sql.shuffle.partitions=7"},
-    "arrow64": {"SPARK_GRAFT_ARROW_BATCH": "64"},
+    "arrow64": {"SPARK_GRAFT_EXTRA_CONF":
+                "spark.sql.execution.arrow.maxRecordsPerBatch=64"},
     "tz": {"TZ": "Asia/Tokyo"},
     "nocodegen": {"SPARK_GRAFT_EXTRA_CONF":
                   "spark.sql.codegen.wholeStage=false;"
